@@ -31,7 +31,6 @@ def main() -> int:
         "shingle_df",
         "informative_shingles",
         "minhash_lsh_candidates",
-        "containment_lsh_candidates",
         "simhash_docs",
         "verified_token_pairs",
         "cc_clusters",
@@ -49,7 +48,6 @@ def main() -> int:
         "langid_heuristic",
         "doc_fingerprint",
         "winnow_fingerprints",
-        "winnow_anchors",
         "cosine_topk",
         "ann_lsh_topk",
         "ann_ivf_topk",
@@ -91,16 +89,8 @@ def main() -> int:
         total += dt
         print(f"# {name}: {n} rows in {dt:.2f}s", file=sys.stderr)
 
-    # candidate-volume observability for the signature-only containment
-    # path: candidates vs the all-pairs ceiling and vs the exact
-    # (blocked) verified family. NOTE the measured ground truth at
-    # sf0.01: 99.9% of ALL doc pairs genuinely satisfy containment>0.2
-    # on this tiny-vocabulary synthetic corpus, so candidate volume here
-    # is BELOW true-positive volume — the ratio is corpus context, not a
-    # pruning defect (see BASELINE.md).
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     aux = {
-        "containment_candidates_rows": rows.get("containment_lsh_candidates", 0),
         "verified_token_pairs_rows": rows.get("verified_token_pairs", 0),
         "possible_pairs": n_docs * (n_docs - 1) // 2,
         "raw_compute_sec": raw_compute_sec,

@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--warehouse", required=True, help="stage-table warehouse dir")
     ap.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
     ap.add_argument("--shingle-k", type=int, default=17)
-    ap.add_argument("--auto-df-band", action="store_true")
     ap.add_argument("--df-band-mode", default="manual",
                     choices=["manual", "tail", "fit", "fit_or_tail"],
                     help="informative-DF band selection (spectrum-fit analog)")
@@ -55,13 +54,6 @@ def main(argv: list[str] | None = None) -> int:
                          "substring pass (1 = every position; default 4 "
                          "≈ minimap2's minimizer density — see "
                          "DedupConfig.anchor_sample_mod)")
-    ap.add_argument("--anchor-source", default="stride",
-                    choices=["stride", "winnow"],
-                    help="substring-pass anchor selection: stride/mod "
-                         "sampling (default, probabilistic seeding) or "
-                         "winnowing/MOSS minima (deterministic guarantee "
-                         "for shared substrings >= anchor_w + "
-                         "winnow_window - 1 at ~equal anchor density)")
     ap.add_argument("--candidate-source", default="banding",
                     choices=["banding", "prefix"],
                     help="candidate generation: MinHash banding (default) "
@@ -99,15 +91,16 @@ def main(argv: list[str] | None = None) -> int:
     from dedup_spark.pipeline import DedupPipeline
     from dedup_spark.session import get_spark
 
-    cfg = DedupConfig(
-        shingle_k=args.shingle_k,
-        auto_df_band=args.auto_df_band,
-        df_band_mode=args.df_band_mode,
-        anchor_sample_mod=args.anchor_sample_mod,
-        anchor_source=args.anchor_source,
-        candidate_source=args.candidate_source,
-        use_simhash_filter=not args.no_simhash_filter,
-    )
+    try:
+        cfg = DedupConfig(
+            shingle_k=args.shingle_k,
+            df_band_mode=args.df_band_mode,
+            anchor_sample_mod=args.anchor_sample_mod,
+            candidate_source=args.candidate_source,
+            use_simhash_filter=not args.no_simhash_filter,
+        )
+    except ValueError as e:
+        ap.error(str(e))
     spark = get_spark(master=args.master, app_name="dedup_spark_cli")
 
     if args.append or args.remove:

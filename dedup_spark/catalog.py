@@ -350,14 +350,6 @@ class StageCatalog:
             t_start=round(t0 - self._t0, 3), t_end=round(t1 - self._t0, 3),
         )
         self.metrics.append(m)
-        if os.environ.get("SPARK_GRAFT_STAGE_TRACE") == "1":
-            import sys
-
-            print(
-                f"##stage {m.stage} start={m.t_start:.1f} end={m.t_end:.1f} "
-                f"rows={m.rows_out} reused={m.reused}",
-                file=sys.stderr, flush=True,
-            )
 
     def _write_and_record(
         self, name: str, ckpt: DataFrame, t0: float, t1: float

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -33,7 +33,6 @@ class DedupConfig:
     # --- informative-shingle DF band (duplicated-kmer analog) ---
     df_lo: int = 2               # ref duplicate_kmer_lower_count, dedup.py:604
     df_hi: int = 4               # ref duplicate_kmer_upper_count, dedup.py:610
-    auto_df_band: bool = False   # back-compat alias: True ⇒ df_band_mode="tail"
     df_band_mode: str = "manual" # "manual" — use df_lo/df_hi (the
                                  #   --homozygous_*_bound override parity,
                                  #   dedup.py:552-560);
@@ -47,23 +46,6 @@ class DedupConfig:
     spectrum_min_df: int = 2     # histogram domain clamps for the fit
     spectrum_max_df: int = 256   # (ref min/max_kmer_depth, dedup.py:634,640;
                                  # clamp semantics kmer_spectrum.py:161-166)
-    df_annotation_mode: str = "window"
-                                 # how per-occurrence df is computed:
-                                 # "window" (default) — ONE repartition-
-                                 #   by-shingle + window count; no df
-                                 #   dim side (measured 26.6M rows at a
-                                 #   12k-conv corpus — unbroadcastable),
-                                 #   but a single ultra-head shingle
-                                 #   (df ~ corpus size) concentrates in
-                                 #   one task: windows get no AQE skew
-                                 #   splitting;
-                                 # "join" — groupBy df + join back: two
-                                 #   shuffles and a huge dim side, but
-                                 #   partial aggregation + AQE skew-join
-                                 #   splitting keep pathological Zipf
-                                 #   heads task-bounded. Pick "join" for
-                                 #   corpora with boilerplate shared by
-                                 #   a large fraction of ALL documents.
 
     # --- candidate generation ---
     candidate_source: str = "banding"
@@ -107,7 +89,6 @@ class DedupConfig:
     anchor_w: int = 25                # suffix-prefix width (chars) for anchor
                                       # keys — the seed length analog of
                                       # minimap2's minimizer window
-    anchor_stride: int = 1            # sample every Nth suffix (1 = exact)
     anchor_sample_mod: int = 1        # content-hash anchor sampling: keep a
                                       # suffix key iff pmod(key, mod) == 0
                                       # (1 = dense). The minimizer-seeding
@@ -123,46 +104,16 @@ class DedupConfig:
                                       # extra shuffle, no extra hashing.
     max_anchor_occ: int = 64          # corpus-wide occurrence cap per suffix
                                       # key (skew guard; capped keys reported)
-    anchor_source: str = "stride"     # how anchor positions are selected:
-                                      # "stride" — every anchor_stride-th
-                                      #   suffix, optionally content-hash
-                                      #   thinned by anchor_sample_mod
-                                      #   (probabilistic span seeding);
-                                      # "winnow" — winnowing / MOSS
-                                      #   selection (Schleimer, Wilkerson
-                                      #   & Aiken, SIGMOD'03): keep the
-                                      #   minimum-hash gram of every
-                                      #   winnow_window consecutive
-                                      #   windows → DETERMINISTIC
-                                      #   guarantee that any shared
-                                      #   substring of length >=
-                                      #   anchor_w + winnow_window − 1 is
-                                      #   seeded, at ~2/(winnow_window+1)
-                                      #   anchor density
-    winnow_window: int = 7            # winnowing window (grams per window);
-                                      # density ≈ 2/(w+1) ≈ 0.25 at 7 —
-                                      # comparable volume to the default
-                                      # anchor_sample_mod=4 CLI path with a
-                                      # deterministic guarantee instead of
-                                      # a probabilistic one
     min_span_len: int = 50            # chained-span report floor (chars)
-    suffix_parts: int | None = None   # explicit partition count for the
-                                      # suffix-key explode; None → derive
-                                      # from total_chars when the caller
-                                      # supplies it, else 2×parallelism
     anchor_chunk_grams: int = 262144  # gram positions per anchor chunk: a
                                       # document's ×doc_len gram explode
-                                      # (and, for anchor_source="winnow",
-                                      # its per-doc window pass) is split
-                                      # into byte-sliced chunks of this
-                                      # many positions BEFORE the shuffle,
-                                      # so a pathological multi-GB doc
-                                      # parallelizes across ⌈grams/C⌉
-                                      # tasks instead of serializing into
-                                      # one. Output is byte-identical at
-                                      # any setting (winnow chunks overlap
-                                      # by winnow_window−1 grams; stride
-                                      # chunks are aligned to the stride).
+                                      # is split into byte-sliced chunks
+                                      # of this many positions BEFORE the
+                                      # shuffle, so a pathological
+                                      # multi-GB doc parallelizes across
+                                      # ⌈grams/C⌉ tasks instead of
+                                      # serializing into one. Output is
+                                      # byte-identical at any setting.
                                       # 256 Ki grams ≈ 256 KiB slices —
                                       # transcripts fit one chunk, so the
                                       # default adds no overhead there
@@ -197,20 +148,15 @@ class DedupConfig:
             raise ValueError(f"bad shingle_unit {self.shingle_unit!r}")
         if self.df_band_mode not in ("manual", "tail", "fit", "fit_or_tail"):
             raise ValueError(f"bad df_band_mode {self.df_band_mode!r}")
-        if self.df_annotation_mode not in ("window", "join"):
-            raise ValueError(
-                f"bad df_annotation_mode {self.df_annotation_mode!r}"
-            )
         if self.candidate_source not in ("banding", "prefix"):
             raise ValueError(f"bad candidate_source {self.candidate_source!r}")
-        if self.anchor_source not in ("stride", "winnow"):
-            raise ValueError(f"bad anchor_source {self.anchor_source!r}")
-        if self.winnow_window < 1:
-            raise ValueError(f"winnow_window must be >= 1, got {self.winnow_window}")
-        if self.anchor_chunk_grams < max(self.winnow_window, self.anchor_stride):
+        if self.anchor_sample_mod < 1:
             raise ValueError(
-                f"anchor_chunk_grams ({self.anchor_chunk_grams}) must be >= "
-                f"max(winnow_window, anchor_stride)"
+                f"anchor_sample_mod must be >= 1, got {self.anchor_sample_mod}"
+            )
+        if self.anchor_chunk_grams < 1:
+            raise ValueError(
+                f"anchor_chunk_grams must be >= 1, got {self.anchor_chunk_grams}"
             )
 
     def fingerprint(self) -> str:

@@ -251,9 +251,8 @@ def _verified_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on any corpus, including size-asymmetric containment pairs (small
     doc ⊂ large doc, J ≪ 0.1) where every MinHash banding scheme is
     probabilistic. This is the exact counterpart of the reference's
-    size-partitioned ``MinHashLSHEnsemble`` index (dedup.py:333-345);
-    the approximate scale path stays available as
-    ``containment_lsh_candidates``. Exact verification then recomputes
+    size-partitioned ``MinHashLSHEnsemble`` index (dedup.py:333-345).
+    Exact verification then recomputes
     common/jaccard/containment on the true token arrays with the
     identical expressions and rounding as the oracle SQL."""
     from dedup_spark.operators import prefix_filter
@@ -650,67 +649,6 @@ SELECT DISTINCT doc_id,
        min(h) OVER (PARTITION BY doc_id ORDER BY pos
                     ROWS BETWEEN CURRENT ROW AND {_WIN_W - 1} FOLLOWING) AS fp
 FROM grams
-"""
-
-
-def _q_winnow_anchors(spark, sf_dir):
-    """Winnowing ANCHOR selection — positions + values of the per-window
-    minimum gram (the substring pass's anchor_source="winnow" selection
-    rule, operators/substring.winnow_keys, over the documents table).
-    Unlike winnow_fingerprints (distinct VALUES), this keeps the
-    POSITION of each selected minimum: min(struct(h, pos)) breaks hash
-    ties on the leftmost position in both engines, so the selected
-    (pos, value) set is deterministic and value-hash comparable. Uses
-    the md5-derived 32-bit gram hash both engines compute identically
-    (production winnow_keys uses xxhash64 — same selection logic)."""
-    from pyspark.sql import Window as W
-
-    docs = _read(spark, sf_dir, "documents")
-    grams = (
-        docs.filter(F.octet_length("text") >= _WIN_K)
-        .select("doc_id", F.encode("text", "UTF-8").alias("b"))
-        .select(
-            "doc_id",
-            "b",
-            F.explode(
-                F.sequence(F.lit(1), F.length("b") - _WIN_K + 1)
-            ).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.expr(
-                f"cast(conv(substring(md5(hex(substring(b, pos, {_WIN_K}))), 1, 8), 16, 10) AS bigint)"
-            ).alias("h"),
-        )
-    )
-    win = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WIN_W - 1)
-    m = F.min(F.struct("h", "pos")).over(win)
-    return (
-        grams.withColumn("m", m)
-        .select(
-            "doc_id",
-            F.col("m.pos").alias("anchor_pos"),
-            F.col("m.h").alias("fp"),
-        )
-        .dropDuplicates(["doc_id", "anchor_pos"])
-    )
-
-
-WINNOW_ANCHORS_SQL = f"""
-WITH grams AS (
-  SELECT doc_id, u.i AS pos,
-         ('0x' || substr(md5(substr(hex(encode(text)), 2 * cast(u.i AS int) - 1, {2 * _WIN_K})), 1, 8))::BIGINT AS h
-  FROM documents, unnest(range(1, strlen(text) - {_WIN_K} + 2)) AS u(i)
-  WHERE strlen(text) >= {_WIN_K}
-),
-mins AS (
-  SELECT doc_id,
-         min({{'h': h, 'pos': pos}}) OVER (PARTITION BY doc_id ORDER BY pos
-             ROWS BETWEEN CURRENT ROW AND {_WIN_W - 1} FOLLOWING) AS m
-  FROM grams
-)
-SELECT DISTINCT doc_id, m.pos AS anchor_pos, m.h AS fp FROM mins
 """
 
 
@@ -1444,7 +1382,7 @@ def _q_minhash_candidates(spark, sf_dir):
     from dedup_spark.config import DedupConfig
     from dedup_spark.operators import lsh, shingling
 
-    cfg = DedupConfig(auto_df_band=True)
+    cfg = DedupConfig(df_band_mode="tail")
     # every expensive link in this chain is checkpoint-memoized: the
     # shingle UDF (sets), the DF groupBy (sdf), and the signature UDF
     # (bands) each run ONCE even though the histogram collect, the
@@ -1474,36 +1412,6 @@ def _q_minhash_candidates(spark, sf_dir):
         spark, sf_dir, "mh_sizes", lambda: lsh.band_bucket_sizes(bands)
     )
     return lsh.candidate_pairs(bands, sizes, cfg)
-
-
-def _q_containment_candidates(spark, sf_dir):
-    """Size-stratified containment-LSH candidates over token sets — the
-    MinHashLSHEnsemble analog (reference dedup.py:333-345): recalls a
-    small doc contained in a much larger one (tiny Jaccard) at the 0.99
-    documented target, while the per-stratum collision-count threshold
-    prunes boilerplate pairs plain r=1 banding would flood through.
-    Rows-only (custom numpy kernels)."""
-    from dedup_spark.config import DedupConfig
-    from dedup_spark.operators import lsh
-
-    cfg = DedupConfig(
-        num_perm=128, bands=128, rows_per_band=1, shingle_unit="token", shingle_k=1
-    )
-
-    def build_sigs():
-        docs = _read(spark, sf_dir, "documents")
-        hs = F.array_distinct(
-            F.transform(F.split("text", " "), lambda t: F.xxhash64(t))
-        )
-        sets = docs.select(
-            F.col("doc_id").alias("conv_id"), hs.alias("shingles")
-        ).filter(F.size("shingles") > 0)
-        return lsh.compute_signatures(sets, cfg).select(
-            "conv_id", "n_shingles", "minhash"
-        )
-
-    sigs = _shared(spark, sf_dir, "cont_sigs", build_sigs)
-    return lsh.containment_candidates(sigs, cfg)
 
 
 # --- oracle-checkable algorithmic twins of the hash kernels ---
@@ -1610,120 +1518,6 @@ MINHASH_BAND_PAIRS_SQL = (
     "AND a.band_val = b.band_val AND a.doc_id < b.doc_id "
     "GROUP BY 1, 2"
 )
-
-
-# --- containment-collision twin (upgrades the containment-LSH algorithm
-# from rows-only to value-checked): the SAME pipeline shape as
-# lsh.containment_candidates — per-perm minhash explode → occurrence-
-# capped (perm, value) bucket self-join → per-pair collision count m →
-# per-stratum-pair exact-binomial m_min filter — over the md5-derived
-# 32-bit twin hash both engines compute identically. 64 twin perms and
-# recall 0.9 make the threshold actually BITE (same-stratum m_min ≥ 2,
-# extreme-asymmetry m_min = 1), so the stratum lookup, the threshold
-# table, and the collision counting are all value-checked end to end;
-# only the base hash and (num_perm, recall) differ from production.
-
-_CONT_TWIN_NPERM = 64
-_CONT_TWIN_PERMS = [(2 * j + 1, 7919 * (j + 1)) for j in range(_CONT_TWIN_NPERM)]
-_CONT_TWIN_RECALL = 0.9
-_CONT_TWIN_CAP = 200  # occurrence cap per (perm, value), mirrors max_band_bucket
-
-
-def _cont_twin_thresholds() -> list[tuple[int, int, int]]:
-    """Octave-stratum m_min table for the twin (c = 0.2, 64 perms,
-    recall 0.9) — same derivation as lsh.containment_collision_thresholds
-    with q = 1; strata computed integer-exactly on both engines as
-    length(bin(n)) - 1 == floor(log2(n))."""
-    from dedup_spark.operators.lsh import minhash_collision_threshold
-
-    c = 0.2
-    out = []
-    for i in range(32):
-        for j in range(i, 32):
-            jac = c * (2.0**i) / (2.0**i + 2.0 ** (j + 1) - c * (2.0**i))
-            out.append(
-                (i, j, minhash_collision_threshold(jac, _CONT_TWIN_NPERM, _CONT_TWIN_RECALL))
-            )
-    return out
-
-
-def _q_containment_minm_pairs(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    h = "conv(substring(md5(tok), 1, 8), 16, 10)"
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
-    ).selectExpr("doc_id", f"cast({h} AS bigint) AS h")
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_TWIN_P)).alias(f"cm_{j}")
-        for j, (a, b) in enumerate(_CONT_TWIN_PERMS)
-    ]
-    sigs = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), *aggs)
-    stack = ", ".join(f"{j}, cm_{j}" for j in range(_CONT_TWIN_NPERM))
-    vals = sigs.selectExpr(
-        "doc_id", "n", f"stack({_CONT_TWIN_NPERM}, {stack}) AS (perm, v)"
-    )
-    ok = (
-        vals.groupBy("perm", "v")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter((F.col("occ") > 1) & (F.col("occ") <= _CONT_TWIN_CAP))
-        .select("perm", "v")
-    )
-    b = vals.join(ok, ["perm", "v"])
-    left = b.select("perm", "v", F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    right = b.select("perm", "v", F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    pairs = (
-        left.join(right, ["perm", "v"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("m"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
-    thr = spark.createDataFrame(
-        _cont_twin_thresholds(), "s_small int, s_large int, m_min int"
-    )
-    s_small = F.expr("length(bin(least(n_a, n_b))) - 1").cast("int")
-    s_large = F.expr("length(bin(greatest(n_a, n_b))) - 1").cast("int")
-    return (
-        pairs.withColumn("s_small", s_small)
-        .withColumn("s_large", s_large)
-        .join(F.broadcast(thr), ["s_small", "s_large"])
-        .filter(F.col("m") >= F.col("m_min"))
-        .select("doc_a", "doc_b", "m")
-    )
-
-
-def _cont_twin_sql() -> str:
-    mins = ", ".join(
-        f"min(({a} * h + {b}) % {_TWIN_P}) AS cm_{j}"
-        for j, (a, b) in enumerate(_CONT_TWIN_PERMS)
-    )
-    unpivot = " UNION ALL ".join(
-        f"SELECT doc_id, n, {j} AS perm, cm_{j} AS v FROM sigs"
-        for j in range(_CONT_TWIN_NPERM)
-    )
-    thr_rows = ", ".join(f"({i}, {j}, {m})" for i, j, m in _cont_twin_thresholds())
-    return (
-        "WITH toks AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h "
-        "FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok "
-        "FROM documents)), "
-        f"sigs AS (SELECT doc_id, count(*)::BIGINT AS n, {mins} FROM toks GROUP BY doc_id), "
-        f"vals AS ({unpivot}), "
-        "ok AS (SELECT perm, v FROM vals GROUP BY perm, v "
-        f"HAVING count(*) > 1 AND count(*) <= {_CONT_TWIN_CAP}), "
-        "b AS (SELECT vals.* FROM vals JOIN ok USING (perm, v)), "
-        "pairs AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "count(*)::BIGINT AS m, any_value(x.n) AS n_a, any_value(y.n) AS n_b "
-        "FROM b x JOIN b y ON x.perm = y.perm AND x.v = y.v AND x.doc_id < y.doc_id "
-        "GROUP BY 1, 2), "
-        f"thr(s_small, s_large, m_min) AS (VALUES {thr_rows}) "
-        "SELECT doc_a, doc_b, m FROM pairs JOIN thr "
-        "ON length(bin(least(n_a, n_b))) - 1 = thr.s_small "
-        "AND length(bin(greatest(n_a, n_b))) - 1 = thr.s_large "
-        "WHERE m >= m_min"
-    )
 
 
 def _q_simhash_bitvote_docs(spark, sf_dir):
@@ -1917,13 +1711,11 @@ GROUP BY l_returnflag, l_linestatus""",
 ORDER BY revenue DESC, l_orderkey ASC LIMIT 20""",
     ),
     "minhash_lsh_candidates": QuerySpec(_q_minhash_candidates, None),
-    "containment_lsh_candidates": QuerySpec(_q_containment_candidates, None),
     "simhash_docs": QuerySpec(_q_simhash_docs, None),
     # oracle-checkable algorithmic twins of the two hash kernels above
     "minhash_perm_sigs": QuerySpec(_q_minhash_perm_sigs, MINHASH_TWIN_SQL),
     "simhash_bitvote_docs": QuerySpec(_q_simhash_bitvote_docs, SIMHASH_TWIN_SQL),
     "minhash_band_pairs": QuerySpec(_q_minhash_band_pairs, MINHASH_BAND_PAIRS_SQL),
-    "containment_minm_pairs": QuerySpec(_q_containment_minm_pairs, _cont_twin_sql()),
     "substring_anchors": QuerySpec(
         _q_substring_anchors,
         f"WITH {_ANCHORS_SQL} SELECT conv_a, conv_b, a_pos, b_pos FROM anchors",
@@ -1989,7 +1781,6 @@ def _langid_sql() -> str:
 
 
 QUERIES["langid_heuristic"] = QuerySpec(_q_langid, _langid_sql())
-QUERIES["winnow_anchors"] = QuerySpec(_q_winnow_anchors, WINNOW_ANCHORS_SQL)
 QUERIES["ann_lsh_topk"] = QuerySpec(
     _q_ann_lsh_topk, QUERIES["cosine_topk"].sql
 )

@@ -135,7 +135,7 @@ class IncrementalResult:
 
 
 def _require_supported_config(cfg: DedupConfig) -> None:
-    if cfg.df_band_mode != "manual" or cfg.auto_df_band:
+    if cfg.df_band_mode != "manual":
         raise ValueError(
             "incremental dedup requires df_band_mode='manual': auto band "
             "selection re-fits on the whole corpus, so a delta can move "

@@ -173,164 +173,3 @@ def candidate_pairs(
         "conv_a", "conv_b"
     )
     return normal.union(salted).dropDuplicates(["conv_a", "conv_b"])
-
-
-# ---------------------------------------------------- containment LSH
-#
-# The reference indexes with MinHashLSHEnsemble(threshold=containment/20,
-# num_perm=128) keyed by set SIZE (/root/reference/dedup/dedup.py:333-345)
-# — a *containment* index: a small doc contained in a much larger one
-# must be recalled even when their Jaccard is tiny. Plain (b, r) banding
-# cannot fix this with r: at containment c the pair's Jaccard is
-# J = c·n_small/(n_small + n_large − c·n_small) ≤ c, and banding recall
-# 1−(1−J^r)^(128/r) at c = 0.2 collapses for every r ≥ 2 (r=2 needs
-# J ≥ 0.27 for 99% recall; containment-0.2 pairs never reach it). So —
-# like the ensemble itself at threshold 0.01 — candidate generation must
-# run at r = 1, and the pruning lever is the COLLISION COUNT: a pair
-# colliding on m of the 128 minhash positions has Ĵ ≈ m/128, and the
-# smallest Jaccard a containment-c pair can have follows from the two
-# docs' SIZES. Stratify sizes geometrically (the ensemble's partitions),
-# bound worst-case J per stratum pair, and keep a candidate only when m
-# clears the exact-binomial threshold that preserves ``recall`` at that
-# bound. Same-stratum boilerplate pairs (J ≈ 0.01–0.03) get m_min ≈ 3
-# and are pruned hard; extreme-asymmetry strata degrade m_min to 1 —
-# exactly the (unavoidable, reference-shared) recall floor of a
-# 128-perm containment index.
-
-
-def minhash_collision_threshold(j: float, num_perm: int, recall: float) -> int:
-    """Largest m_min with P(Binomial(num_perm, j) ≥ m_min) ≥ recall —
-    exact CDF walk, driver-side, deterministic."""
-    from math import comb
-
-    if j <= 0.0:
-        return 1
-    acc = 0.0
-    best = 1
-    for t in range(num_perm + 1):
-        acc += comb(num_perm, t) * (j**t) * ((1.0 - j) ** (num_perm - t))
-        if 1.0 - acc >= recall:  # P(X >= t+1) still clears the recall bar
-            best = t + 1
-        else:
-            break
-    return max(1, best)
-
-
-def containment_collision_thresholds(
-    cfg: DedupConfig,
-    recall: float = 0.99,
-    max_stratum: int = 63,
-    per_octave: int = 1,
-) -> list[tuple[int, int, int]]:
-    """(stratum_small, stratum_large, m_min) table for all stratum pairs.
-
-    Stratum s holds sizes in [2^(s/q), 2^((s+1)/q)) with q =
-    ``per_octave`` subdivisions per size doubling; the worst-case
-    Jaccard of a containment-``verify_containment`` pair between strata
-    (i, j ≥ i) is at the smallest query size lo_i = 2^(i/q) against the
-    largest index size hi_j = 2^((j+1)/q):
-
-        J_ij = c·lo_i / (lo_i + hi_j − c·lo_i)
-
-    Finer strata (q > 1) tighten the worst-case bound toward the pair's
-    ACTUAL sizes, raising m_min for near-symmetric pairs (the
-    boilerplate flood) without touching the asymmetric-containment
-    recall the family exists for — measured as the main candidate-volume
-    lever (44% → single digits of all pairs on a shared-vocabulary
-    corpus at q=4). Table size is (63q)²/2 rows — broadcastable at any
-    sane q."""
-    c = cfg.verify_containment
-    q = per_octave
-    out = []
-    for i in range(max_stratum * q):
-        for j in range(i, max_stratum * q):
-            lo_i = 2.0 ** (i / q)
-            hi_j = 2.0 ** ((j + 1) / q)
-            jac = c * lo_i / (lo_i + hi_j - c * lo_i)
-            out.append((i, j, minhash_collision_threshold(jac, cfg.num_perm, recall)))
-    return out
-
-
-def containment_candidates(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    recall: float = 0.99,
-    per_octave: int = 4,
-) -> DataFrame:
-    """Size-stratified containment-LSH candidate pairs — the scale-path
-    analog of the reference's MinHashLSHEnsemble index+query
-    (dedup.py:333-345). Returns (conv_a, conv_b, m) with m = number of
-    colliding minhash positions (out of num_perm).
-
-    Plan shape: posexplode the minhash signature into (perm, value)
-    rows; self-join on (perm, value) — an equi-shuffle, skew-capped like
-    every bucket join in this engine (values held by more than
-    ``max_band_bucket`` docs are excluded and reportable via
-    :func:`containment_skew_report`); count collisions per pair; join
-    doc sizes; keep pairs whose m clears the per-stratum-pair
-    exact-binomial threshold (see module comment). Documented recall
-    target: ``recall`` (0.99) at the verify containment threshold —
-    probabilistic, unlike the r=1 full-band path, but with a candidate
-    volume that stays proportional to genuinely-similar pairs instead of
-    every boilerplate co-occurrence.
-
-    ``per_octave`` sets the size-stratum granularity (default 4 =
-    quarter-octave): finer strata bound worst-case Jaccard closer to the
-    pair's actual sizes, which raises m_min for near-symmetric pairs and
-    cuts the boilerplate candidate flood several-fold at unchanged
-    recall target (see containment_collision_thresholds). NOTE on the
-    engine's containment POLICY: this signature-only path is for regimes
-    where the token/shingle sets are no longer materialized; whenever
-    the sets ARE available (the pipeline and the verified_token_pairs
-    family), prefer operators/prefix_filter.candidate_pairs — exact
-    recall 1.0 with output-proportional volume.
-    """
-    spark = signatures.sparkSession
-    thr = spark.createDataFrame(
-        containment_collision_thresholds(cfg, recall, per_octave=per_octave),
-        "s_small int, s_large int, m_min int",
-    )
-    vals = signatures.select(
-        "conv_id",
-        F.col("n_shingles").alias("n"),
-        F.posexplode("minhash").alias("perm", "v"),
-    )
-    ok_vals = (
-        vals.groupBy("perm", "v")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter((F.col("occ") > 1) & (F.col("occ") <= cfg.max_band_bucket))
-        .select("perm", "v")
-    )
-    b = vals.join(ok_vals, ["perm", "v"])
-    left = b.select("perm", "v", F.col("conv_id").alias("conv_a"), F.col("n").alias("n_a"))
-    right = b.select("perm", "v", F.col("conv_id").alias("conv_b"), F.col("n").alias("n_b"))
-    pairs = (
-        left.join(right, ["perm", "v"])
-        .filter(F.col("conv_a") < F.col("conv_b"))
-        .groupBy("conv_a", "conv_b")
-        .agg(
-            F.count(F.lit(1)).alias("m"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
-    s_small = F.floor(F.lit(per_octave) * F.log2(F.least("n_a", "n_b"))).cast("int")
-    s_large = F.floor(F.lit(per_octave) * F.log2(F.greatest("n_a", "n_b"))).cast("int")
-    return (
-        pairs.withColumn("s_small", s_small)
-        .withColumn("s_large", s_large)
-        .join(F.broadcast(thr), ["s_small", "s_large"])
-        .filter(F.col("m") >= F.col("m_min"))
-        .select("conv_a", "conv_b", "m")
-    )
-
-
-def containment_skew_report(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Minhash values excluded from containment pairing by the occurrence
-    cap — logged, never silent (same policy as skew_report)."""
-    return (
-        signatures.select(F.posexplode("minhash").alias("perm", "v"))
-        .groupBy("perm", "v")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter(F.col("occ") > cfg.max_band_bucket)
-    )

@@ -214,7 +214,7 @@ def pick_df_band(hist_rows: list[tuple[int, int]], cfg: DedupConfig) -> tuple[in
 
     * "manual" — cfg.df_lo/df_hi verbatim (the --homozygous_*_bound
       override parity, reference dedup.py:552-560);
-    * "tail"   — knee heuristic (also via the auto_df_band alias);
+    * "tail"   — knee heuristic;
     * "fit"    — bimodal-Gaussian spectrum fit, raising
       :class:`SpectrumFitError` on a bad fit (the reference's hard
       exit, kmer_spectrum.py:184-187);
@@ -222,8 +222,6 @@ def pick_df_band(hist_rows: list[tuple[int, int]], cfg: DedupConfig) -> tuple[in
       loud warning (never silently).
     """
     mode = cfg.df_band_mode
-    if mode == "manual" and cfg.auto_df_band:
-        mode = "tail"
     if mode == "manual":
         return cfg.df_lo, cfg.df_hi
     if mode == "tail":
@@ -313,20 +311,6 @@ def annotate_shingle_df(exploded: DataFrame) -> DataFrame:
 
     return exploded.repartition(F.col("shingle")).withColumn(
         "df", F.count(F.lit(1)).over(W.partitionBy("shingle"))
-    )
-
-
-def annotate_shingle_df_join(exploded: DataFrame) -> DataFrame:
-    """Join-based twin of :func:`annotate_shingle_df` (same output
-    schema), selected via ``DedupConfig.df_annotation_mode="join"``:
-    groupBy df + shuffle join back. Costs a second shuffle of the
-    exploded table and a huge (non-broadcastable) dim side, but partial
-    aggregation + AQE skew-join splitting keep a pathological Zipf head
-    shingle (df ~ corpus size) task-bounded — the window variant's one
-    known scale exposure (window groups get no AQE skew splitting)."""
-    sdf = shingle_document_frequency(exploded)
-    return exploded.join(sdf.hint("shuffle_hash"), "shingle").select(
-        *exploded.columns, "df"
     )
 
 

@@ -29,13 +29,14 @@ keys instead of shelling out to an aligner:
    strand, so the reference's +/− direction collapses to '+'.
 4. **Best span per pair** — top-1 by score (alignment.py:99-102, O1).
 
-Scale notes: suffix-key enumeration multiplies rows by ~doc_len/stride;
+Scale notes: suffix-key enumeration multiplies rows by ~doc_len;
 the key self-join shuffles on the key (high-cardinality, cap-bounded
 buckets ⇒ bounded pair fan-out m·(m−1)/2 ≤ occ²); chaining shuffles
 once on the pair key. All three shuffles are AQE-coalesced. For a
-10^12-turn corpus raise ``anchor_stride`` (sampled suffixes) — recall
-degrades gracefully: a shared span of length L is still seeded by
-⌊(L−w)/stride⌋ anchors.
+10^12-turn corpus raise ``anchor_sample_mod`` (content-hash sampled
+suffixes, ~1/mod of the keys) — recall degrades gracefully: both docs
+keep the same windows inside shared content, so a shared span of
+length L is seeded with P = 1−(1−1/mod)^(L−w+1).
 """
 
 from __future__ import annotations
@@ -68,13 +69,12 @@ def suffix_keys(
     map-side partial aggregation only stays hash-based (no sort fallback)
     while per-task distinct keys stay under the object-hash-agg
     threshold; ~1M windows per task keeps it there with headroom. The
-    count comes from, in order: ``cfg.suffix_parts`` (explicit knob),
-    the caller-supplied ``total_chars`` (the pipeline passes a single
-    cheap agg over its already-checkpointed transcripts stage), else
-    2×defaultParallelism — adequate for interactive/small-sf use where
-    AQE re-splits, while production corpora should supply one of the
-    first two."""
-    w, stride = cfg.anchor_w, cfg.anchor_stride
+    count comes from the caller-supplied ``total_chars`` (the pipeline
+    passes a single cheap agg over its already-checkpointed transcripts
+    stage), else 2×defaultParallelism — adequate for interactive/small-sf
+    use where AQE re-splits, while production corpora should supply
+    ``total_chars``."""
+    w = cfg.anchor_w
     # The whole substring family operates in BYTE space end to end:
     # positions here are byte offsets of the UTF-8 encoding, and every
     # downstream consumer (span slicing, interval pct denominators,
@@ -82,14 +82,10 @@ def suffix_keys(
     # participate fully (rounds 1-3 excluded them because downstream
     # math was char-based; that gate is gone).
     docs = transcripts.filter(F.octet_length("doc") >= w)
-    if cfg.anchor_source == "winnow":
-        return winnow_keys(docs, cfg, total_chars=total_chars)
-    if cfg.suffix_parts is not None:
-        n_parts = cfg.suffix_parts
-    elif total_chars is not None:
+    if total_chars is not None:
         min_parts = 2 * docs.sparkSession.sparkContext.defaultParallelism
         n_parts = int(
-            max(min_parts, min(total_chars // (stride * 1_000_000) + 1, 20_000))
+            max(min_parts, min(total_chars // 1_000_000 + 1, 20_000))
         )
     else:
         n_parts = 2 * docs.sparkSession.sparkContext.defaultParallelism
@@ -103,20 +99,18 @@ def suffix_keys(
     # Chunked two-level explode: the ×doc_len gram enumeration of ONE
     # document is split across ⌈grams/chunk⌉ byte-sliced chunks before
     # the shuffle, so a pathological multi-GB doc parallelizes instead
-    # of serializing its whole explode into one task. The chunk size is
-    # rounded up to a stride multiple, so chunk bases stay ≡ 0 (mod
-    # stride) and the per-chunk sequence(1, ·, stride) selects exactly
-    # the global stride grid — output identical at any chunk size.
-    chunk = -(-cfg.anchor_chunk_grams // stride) * stride
+    # of serializing its whole explode into one task. Chunks cover
+    # disjoint gram starts, so the output is identical at any chunk size.
+    chunk = cfg.anchor_chunk_grams
     out = (
-        _chunk_slices(docs, w, chunk, lookahead=0)
+        _chunk_slices(docs, w, chunk)
         .repartition(n_parts, "conv_id", "ck")
         .select(
             "conv_id",
             "base",
             "bs",
             F.explode(
-                F.sequence(F.lit(1), F.length("bs") - w + 1, F.lit(stride))
+                F.sequence(F.lit(1), F.length("bs") - w + 1, F.lit(1))
             ).alias("i"),
         )
         .select(
@@ -136,15 +130,14 @@ def suffix_keys(
     return out
 
 
-def _chunk_slices(docs: DataFrame, w: int, chunk: int, lookahead: int) -> DataFrame:
+def _chunk_slices(docs: DataFrame, w: int, chunk: int) -> DataFrame:
     """doc → one row per gram chunk: ``ck`` (chunk index), ``base``
     (0-based gram offset = ck·chunk, bigint — multi-GB-doc safe) and
-    ``bs`` — the byte slice that serves gram starts base+1..base+chunk
-    plus ``lookahead`` further grams (the winnow window's tail context).
+    ``bs`` — the byte slice that serves gram starts base+1..base+chunk.
     The slice is cut BEFORE the shuffle, so a document's bytes cross the
-    wire once (+ (w−1+lookahead) bytes of overlap per chunk), never per
-    gram; the per-chunk gram explode then fuses into the post-shuffle
-    codegen stage. Callers filter octet_length(doc) >= w, so every doc
+    wire once (+ (w−1) bytes of overlap per chunk), never per gram; the
+    per-chunk gram explode then fuses into the post-shuffle codegen
+    stage. Callers filter octet_length(doc) >= w, so every doc
     yields >= 1 chunk."""
     n_chunks = F.ceil((F.length("b") - F.lit(w - 1)) / F.lit(chunk)).cast("int")
     return (
@@ -159,91 +152,9 @@ def _chunk_slices(docs: DataFrame, w: int, chunk: int, lookahead: int) -> DataFr
             "ck",
             (F.col("ck").cast("bigint") * chunk).alias("base"),
             F.expr(
-                f"substring(b, ck * {chunk} + 1, {chunk + lookahead + w - 1})"
+                f"substring(b, ck * {chunk} + 1, {chunk + w - 1})"
             ).alias("bs"),
         )
-    )
-
-
-def winnow_keys(
-    docs: DataFrame, cfg: DedupConfig, total_chars: int | None = None
-) -> DataFrame:
-    """Winnowing / MOSS anchor selection (Schleimer, Wilkerson & Aiken,
-    SIGMOD'03 — public literature): hash every ``anchor_w``-byte gram,
-    slide a window of ``winnow_window`` consecutive gram hashes, keep
-    each window's minimum (leftmost on hash ties — struct-min ordering
-    is deterministic, and ties only occur for identical gram content,
-    whose key is identical anyway). Returns the same (conv_id, pos, key)
-    shape as :func:`suffix_keys`.
-
-    Why this beats stride/mod sampling as the anchor source: selection
-    depends ONLY on local window content, so two documents sharing any
-    substring of length >= anchor_w + winnow_window − 1 are GUARANTEED
-    to select at least one identical (key, aligned-position) anchor —
-    deterministic recall where mod sampling is probabilistic — at the
-    same ~2/(w+1) density (w=7 ≈ the density of the CLI default
-    anchor_sample_mod=4).
-
-    Plan shape: docs are cut into gram CHUNKS of ``anchor_chunk_grams``
-    positions overlapping by winnow_window − 1 grams (window minima
-    need only window-local context — the SIGMOD'03 locality property),
-    shuffled on (conv_id, chunk), and each chunk runs its own window
-    pass — so even a pathological multi-GB document parallelizes across
-    ⌈grams/chunk⌉ tasks instead of serializing its selection into one.
-    A window STARTING in a chunk sees exactly the grams the unchunked
-    pass would (the overlap supplies its tail; end-of-doc windows stay
-    partial in both), so the selected (pos, key) set is byte-identical
-    at any chunk size; the same selection reached from two adjacent
-    chunks (a minimum inside the overlap) and from consecutive windows
-    within a chunk dedupes in one distinct over the winnowed-density
-    output (~2/(winnow_window+1) of the grams)."""
-    w, wn = cfg.anchor_w, cfg.winnow_window
-    chunk = max(cfg.anchor_chunk_grams, wn)
-    if cfg.suffix_parts is not None:
-        n_parts = cfg.suffix_parts
-    elif total_chars is not None:
-        min_parts = 2 * docs.sparkSession.sparkContext.defaultParallelism
-        n_parts = int(
-            max(min_parts, min(total_chars // 1_000_000 + 1, 20_000))
-        )
-    else:
-        n_parts = 2 * docs.sparkSession.sparkContext.defaultParallelism
-    grams = (
-        _chunk_slices(docs, w, chunk, lookahead=wn - 1)
-        .repartition(n_parts, "conv_id", "ck")
-        .select(
-            "conv_id",
-            "ck",
-            "base",
-            "bs",
-            F.explode(
-                F.sequence(F.lit(1), F.length("bs") - w + 1)
-            ).alias("i"),
-        )
-        .select(
-            "conv_id",
-            "ck",
-            "base",
-            (F.col("base") + F.col("i")).alias("gpos"),
-            F.expr(f"xxhash64(substring(bs, i, {w}))").alias("h"),
-        )
-    )
-    sel_win = (
-        W.partitionBy("conv_id", "ck").orderBy("gpos").rowsBetween(0, wn - 1)
-    )
-    m = F.min(F.struct(F.col("h"), F.col("gpos"))).over(sel_win)
-    return (
-        grams.withColumn("m", m)
-        # emit only windows STARTING in the chunk proper — overlap rows
-        # exist to complete this chunk's window tails; their own windows
-        # belong to (and are emitted by) the next chunk
-        .filter(F.col("gpos") <= F.col("base") + chunk)
-        .select(
-            "conv_id",
-            F.col("m.gpos").alias("pos"),
-            F.col("m.h").alias("key"),
-        )
-        .dropDuplicates(["conv_id", "pos", "key"])
     )
 
 
@@ -439,17 +350,12 @@ def chain_anchors(anchors: DataFrame, cfg: DedupConfig) -> DataFrame:
     Span score = estimated matched chars: each anchor certifies w
     matching chars, consecutive in-chain anchors overlap by
     (w − step), so matched ≈ min(span_len, n·step + w − step) with
-    step the expected anchor spacing (anchor_stride, ×anchor_sample_mod
-    when content-hash sampling is on) — weighted analog of the
+    step = anchor_sample_mod, the expected spacing of content-hash
+    sampled anchors (1 when sampling is off) — weighted analog of the
     reference's match bonus (alignment.py:342-343, match_weight).
     """
     w = cfg.anchor_w
-    # expected anchor spacing: selection period for the stride path,
-    # the ~2/(w+1)-density mean gap for winnowing (SIGMOD'03 §4)
-    if cfg.anchor_source == "winnow":
-        step = max(1, (cfg.winnow_window + 1) // 2)
-    else:
-        step = cfg.anchor_stride * max(1, cfg.anchor_sample_mod)
+    step = max(1, cfg.anchor_sample_mod)
     win = W.partitionBy("conv_a", "conv_b").orderBy("a_pos", "b_pos")
     prev_a = F.lag("a_pos").over(win)
     prev_b = F.lag("b_pos").over(win)

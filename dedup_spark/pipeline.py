@@ -128,11 +128,6 @@ class DedupPipeline:
         # and in position_classes), a shuffled join re-shuffled the
         # ×set-size exploded table; the window pays one local sort and
         # every consumer reads the annotated checkpoint instead.
-        annotate = (
-            shingling.annotate_shingle_df
-            if cfg.df_annotation_mode == "window"
-            else shingling.annotate_shingle_df_join  # skew-safe fallback
-        )
         # In manual df-band mode NO consumer ever reads the df == 1 rows
         # of the annotated table (informative_from_ann and
         # repeated_df_from_ann both start with df >= 2, and the
@@ -151,11 +146,11 @@ class DedupPipeline:
         # df_band_mode is part of the config fingerprint, so switching
         # modes recomputes the stage; an old full-layout checkpoint
         # remains readable (consumers detect the layout by column).
-        manual_band = cfg.df_band_mode == "manual" and not cfg.auto_df_band
+        manual_band = cfg.df_band_mode == "manual"
         ann = cat.stage(
             "shingle_ann",
             lambda: (
-                annotate(exploded)
+                shingling.annotate_shingle_df(exploded)
                 .filter(F.col("df") >= 2)
                 .select(
                     *exploded.columns,
@@ -164,7 +159,7 @@ class DedupPipeline:
                     .alias("in_band"),
                 )
                 if manual_band
-                else annotate(exploded)
+                else shingling.annotate_shingle_df(exploded)
             ),
         )
         # df band: manual mode (the default) needs no histogram — the
@@ -172,7 +167,7 @@ class DedupPipeline:
         # and it sits on the critical path (driver blocks). Only the
         # auto modes (tail/fit) pay it; exact counts-of-counts off the
         # annotated table (n_shingles(d) = rows(d)/d).
-        if cfg.df_band_mode == "manual" and not cfg.auto_df_band:
+        if manual_band:
             lo, hi = cfg.df_lo, cfg.df_hi
         else:
             hist = shingling.df_histogram_from_ann(ann).collect()
@@ -410,17 +405,10 @@ class DedupPipeline:
             return anchor_f.result(), spans, marks
 
         try:
-            # SPARK_GRAFT_SERIAL_BRANCHES=1 runs the two branches one
-            # after the other (perf-triage knob; sub-futures still use
-            # the pool, so no deadlock)
-            if os.environ.get("SPARK_GRAFT_SERIAL_BRANCHES") == "1":
-                verified, clusters, ded_f, stats_f = branch_a()
-                anchor_skew, spans, marks = branch_b()
-            else:
-                fa = pool.submit(branch_a)
-                fb = pool.submit(branch_b)
-                verified, clusters, ded_f, stats_f = fa.result()
-                anchor_skew, spans, marks = fb.result()
+            fa = pool.submit(branch_a)
+            fb = pool.submit(branch_b)
+            verified, clusters, ded_f, stats_f = fa.result()
+            anchor_skew, spans, marks = fb.result()
 
             merged = intervals.merge_intervals(marks)
             deduped = ded_f.result()

@@ -115,19 +115,6 @@ def test_ann_path_matches_join_path(spark):
     want_rep = sorted((s, d) for s, d in want_df.items() if d >= 2)
     assert got_rep == want_rep
 
-    # the skew-safe join-mode annotation twin agrees row-for-row
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(shingling.annotate_shingle_df_join(exploded)) == rows(ann)
-
-
-def test_df_annotation_mode_validated():
-    import pytest
-
-    from dedup_spark.config import DedupConfig
-
-    with pytest.raises(ValueError, match="df_annotation_mode"):
-        DedupConfig(df_annotation_mode="bogus")
-
 
 def test_slim_in_band_layout_matches_full(spark):
     """Manual-mode slim annotated layout (in_band boolean instead of df):

@@ -72,9 +72,8 @@ def test_pick_df_band_mode_dispatch():
     # fit_or_tail on zipf falls back to the knee heuristic, loudly
     lo2, hi2 = pick_df_band(_zipf_hist(), DedupConfig(df_band_mode="fit_or_tail"))
     assert lo2 == 2 and hi2 >= 4
-    # auto_df_band alias still selects the tail heuristic
-    lo3, hi3 = pick_df_band(_zipf_hist(), DedupConfig(auto_df_band=True))
-    assert (lo3, hi3) == (lo2, hi2)
+    # ...to exactly the band tail mode picks
+    assert pick_df_band(_zipf_hist(), DedupConfig(df_band_mode="tail")) == (lo2, hi2)
 
 
 def test_bad_mode_rejected():

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
 from dedup_spark.operators import intervals, substring
@@ -179,20 +178,26 @@ class TestAnchorSampling:
 
     def test_sampling_is_content_determined(self, spark):
         """The same shared substring selects the same keys in both docs
-        regardless of its position, so sampled anchors never desync."""
+        regardless of its position, so sampled anchors never desync.
+        The b-side prefix runs over 13–16 bytes, so the offset
+        difference takes every residue mod 4: positional sampling would
+        desync three of the four."""
         rng = np.random.Generator(np.random.PCG64(22))
         shared = _rand_text(rng, 200)
-        a = _rand_text(rng, 97) + shared + _rand_text(rng, 50)
-        b = _rand_text(rng, 13) + shared
-        rows = substring.suffix_keys(
-            _docs_df(spark, {"a": a, "b": b}), self.MOD_CFG
-        ).collect()
+        docs = {"a": _rand_text(rng, 97) + shared + _rand_text(rng, 50)}
+        for n in range(13, 17):
+            docs[f"b{n}"] = _rand_text(rng, n) + shared
+        rows = substring.suffix_keys(_docs_df(spark, docs), self.MOD_CFG).collect()
         w = self.MOD_CFG.anchor_w
-        sel_a = {r["pos"] - 98 for r in rows if r["conv_id"] == "a"
-                 if 98 <= r["pos"] <= 97 + len(shared) - w + 1}
-        sel_b = {r["pos"] - 14 for r in rows if r["conv_id"] == "b"
-                 if 14 <= r["pos"] <= 13 + len(shared) - w + 1}
-        assert sel_a == sel_b and len(sel_a) > 0
+
+        def sel(conv_id, prefix):
+            return {r["pos"] - prefix - 1 for r in rows if r["conv_id"] == conv_id
+                    if prefix < r["pos"] <= prefix + len(shared) - w + 1}
+
+        sel_a = sel("a", 97)
+        assert len(sel_a) > 0
+        for n in range(13, 17):
+            assert sel(f"b{n}", n) == sel_a, f"b prefix {n}"
 
     def test_planted_span_recovered_sampled(self, spark):
         rng = np.random.Generator(np.random.PCG64(23))
@@ -541,98 +546,6 @@ class TestByteSpaceNonAscii:
         )
 
 
-class TestWinnowAnchors:
-    """Winnowing/MOSS anchor selection (anchor_source='winnow'): a
-    DETERMINISTIC seeding guarantee — any shared substring of length
-    >= anchor_w + winnow_window − 1 selects at least one identical
-    (key, aligned-position) anchor in both docs — at ~2/(w+1) the
-    density of dense suffix keys."""
-
-    WIN_CFG = DedupConfig(
-        anchor_w=8, min_span_len=20, max_gap=50, end_buffer=30,
-        min_doc_len=0, anchor_source="winnow", winnow_window=7,
-    )
-
-    def test_density_near_two_over_w_plus_one(self, spark):
-        rng = np.random.Generator(np.random.PCG64(31))
-        docs = _docs_df(spark, {"a": _rand_text(rng, 4000)})
-        dense = substring.suffix_keys(docs, CFG).count()
-        winnowed = substring.suffix_keys(docs, self.WIN_CFG).count()
-        expect = 2 / (self.WIN_CFG.winnow_window + 1)  # = 0.25
-        assert dense * expect * 0.6 <= winnowed <= dense * expect * 1.6
-
-    def test_selection_is_content_determined(self, spark):
-        """The same shared substring selects the same anchors in both
-        docs regardless of absolute position (window minima depend only
-        on local content) — the property the guarantee rests on."""
-        rng = np.random.Generator(np.random.PCG64(32))
-        shared = _rand_text(rng, 200)
-        a = _rand_text(rng, 97) + shared + _rand_text(rng, 50)
-        b = _rand_text(rng, 13) + shared
-        rows = substring.suffix_keys(
-            _docs_df(spark, {"a": a, "b": b}), self.WIN_CFG
-        ).collect()
-        w, wn = self.WIN_CFG.anchor_w, self.WIN_CFG.winnow_window
-        # interior selections (windows fully inside the shared region)
-        lo_a, hi_a = 98 + wn - 1, 97 + len(shared) - w - wn + 2
-        sel_a = {r["pos"] - 98 for r in rows if r["conv_id"] == "a"
-                 and lo_a <= r["pos"] <= hi_a}
-        lo_b, hi_b = 14 + wn - 1, 13 + len(shared) - w - wn + 2
-        sel_b = {r["pos"] - 14 for r in rows if r["conv_id"] == "b"
-                 and lo_b <= r["pos"] <= hi_b}
-        assert len(sel_a) > 0
-        assert sel_a == sel_b
-
-    def test_guarantee_at_threshold_length(self, spark):
-        """A shared substring of EXACTLY anchor_w + winnow_window − 1
-        chars (one full window) must share an anchor — deterministically,
-        for many random placements (mod sampling would miss ~75% of
-        these at equal density)."""
-        w, wn = self.WIN_CFG.anchor_w, self.WIN_CFG.winnow_window
-        rng = np.random.Generator(np.random.PCG64(33))
-        for trial in range(10):
-            shared = _rand_text(rng, w + wn - 1)
-            a = _rand_text(rng, int(rng.integers(20, 300))) + shared + _rand_text(rng, 30)
-            b = shared + _rand_text(rng, int(rng.integers(20, 300)))
-            rows = substring.suffix_keys(
-                _docs_df(spark, {"a": a, "b": b}), self.WIN_CFG
-            ).collect()
-            keys_a = {r["key"] for r in rows if r["conv_id"] == "a"}
-            keys_b = {r["key"] for r in rows if r["conv_id"] == "b"}
-            assert keys_a & keys_b, f"trial {trial}: no shared anchor"
-
-    def test_planted_span_recovered_with_fewer_anchors(self, spark):
-        """VERDICT r5 'done' bar: the pipeline-shaped pass recovers the
-        planted span at a fraction of the dense anchor volume."""
-        rng = np.random.Generator(np.random.PCG64(34))
-        shared = _rand_text(rng, 300)
-        a = _rand_text(rng, 150) + shared + _rand_text(rng, 100)
-        b = _rand_text(rng, 40) + shared + _rand_text(rng, 200)
-        docs = _docs_df(spark, {"a": a, "b": b})
-
-        dense_rows = substring.suffix_keys(docs, CFG).count()
-        win_rows = substring.suffix_keys(docs, self.WIN_CFG).count()
-        assert win_rows < dense_rows * 0.4  # measurably fewer anchors
-
-        best = substring.substring_matches(docs, self.WIN_CFG).collect()
-        assert len(best) == 1
-        r = best[0]
-        slack = self.WIN_CFG.anchor_w + 2 * (self.WIN_CFG.winnow_window + 1)
-        assert abs(r["a_start"] - 151) <= slack
-        assert abs(r["a_end"] - 450) <= slack
-        assert abs(r["b_start"] - 41) <= slack
-        assert r["matched"] >= 300 - 2 * slack
-
-    def test_deterministic_across_partitioning(self, spark):
-        rng = np.random.Generator(np.random.PCG64(35))
-        docs = {f"d{i}": _rand_text(rng, 500) for i in range(6)}
-        r1 = sorted(map(tuple, substring.suffix_keys(
-            _docs_df(spark, docs), self.WIN_CFG).collect()))
-        r2 = sorted(map(tuple, substring.suffix_keys(
-            _docs_df(spark, docs).repartition(7), self.WIN_CFG).collect()))
-        assert r1 == r2
-
-
 class TestChunkedAnchors:
     """The chunked two-level gram explode (anchor_chunk_grams) must be
     byte-identical to the one-chunk plan at ANY chunk size — it's a
@@ -657,24 +570,6 @@ class TestChunkedAnchors:
         for chunk in (17, 64, 100):
             assert self._keys(spark, docs, anchor_chunk_grams=chunk) == big
 
-    def test_stride_gt1_alignment_across_chunks(self, spark):
-        """Chunk bases stay on the stride grid (chunk rounded up to a
-        stride multiple), so stride>1 selects the same global positions
-        regardless of chunking — including a chunk size that is NOT a
-        stride multiple before rounding."""
-        rng = np.random.Generator(np.random.PCG64(41))
-        docs = {"a": _rand_text(rng, 613), "b": _rand_text(rng, 309)}
-        for stride in (2, 3, 5):
-            big = self._keys(
-                spark, docs, anchor_stride=stride, anchor_chunk_grams=1 << 20
-            )
-            small = self._keys(
-                spark, docs, anchor_stride=stride, anchor_chunk_grams=50
-            )
-            assert small == big
-            # stride grid: all positions ≡ 1 (mod stride)
-            assert all(p % stride == 1 % stride for _, p, _ in small)
-
     def test_sample_mod_composes_with_chunking(self, spark):
         rng = np.random.Generator(np.random.PCG64(42))
         docs = {"a": _rand_text(rng, 800)}
@@ -685,39 +580,9 @@ class TestChunkedAnchors:
             spark, docs, anchor_sample_mod=4, anchor_chunk_grams=37
         ) == big
 
-    def test_winnow_chunked_equals_unchunked(self, spark):
-        """Winnow chunks overlap by winnow_window−1 grams, so every
-        window sees the same grams as the one-chunk pass — selected
-        (pos, key) sets must match exactly, including minima that land
-        INSIDE an overlap region (selected from both sides)."""
-        rng = np.random.Generator(np.random.PCG64(43))
-        docs = {f"d{i}": _rand_text(rng, int(rng.integers(8, 900)))
-                for i in range(8)}
-        kw = dict(anchor_source="winnow", winnow_window=7)
-        big = self._keys(spark, docs, anchor_chunk_grams=1 << 20, **kw)
-        for chunk in (7, 23, 96):
-            assert self._keys(spark, docs, anchor_chunk_grams=chunk, **kw) == big
-
-    def test_winnow_guarantee_across_chunk_boundary(self, spark):
-        """A shared substring planted to STRADDLE a chunk boundary in
-        one doc (and sit mid-chunk in the other) still shares an anchor
-        — the MOSS guarantee survives chunking."""
-        rng = np.random.Generator(np.random.PCG64(44))
-        cfg = DedupConfig(
-            anchor_w=8, min_span_len=20, max_gap=50, end_buffer=30,
-            min_doc_len=0, anchor_source="winnow", winnow_window=7,
-            anchor_chunk_grams=64,
-        )
-        shared = _rand_text(rng, 40)
-        # place the shared run so it crosses gram position 64 in doc a
-        a = _rand_text(rng, 50) + shared + _rand_text(rng, 60)
-        b = _rand_text(rng, 200) + shared
-        rows = substring.suffix_keys(_docs_df(spark, {"a": a, "b": b}), cfg).collect()
-        keys_a = {r["key"] for r in rows if r["conv_id"] == "a"}
-        keys_b = {r["key"] for r in rows if r["conv_id"] == "b"}
-        assert keys_a & keys_b
-
     def test_chunk_grams_validated(self):
-        with pytest.raises(ValueError):
-            DedupConfig(anchor_source="winnow", winnow_window=9,
-                        anchor_chunk_grams=8)
+        for bad in (0, -1):
+            with pytest.raises(ValueError, match="anchor_chunk_grams"):
+                DedupConfig(anchor_chunk_grams=bad)
+            with pytest.raises(ValueError, match="anchor_sample_mod"):
+                DedupConfig(anchor_sample_mod=bad)

@@ -131,42 +131,14 @@ class StageCatalog:
             return self.spark.read.table(self._qualified(name))
         return self.spark.read.parquet(self._path(name))
 
-    def read_meta(self, name: str) -> dict | None:
-        """Sidecar metadata of a stage table (fingerprint + any extra
-        keys the writer attached, e.g. the incremental state epoch), or
-        None when the table or its sidecar is missing/corrupt. Driver-
-        local file read — no Spark job."""
-        if self.table_format == "iceberg":
-            q = self._qualified(name)
-            if not self.spark.catalog.tableExists(q):
-                return None
-            props = {
-                r["key"]: r["value"]
-                for r in self.spark.sql(f"SHOW TBLPROPERTIES {q}").collect()
-            }
-            meta = {"fingerprint": props.get("dedup.fingerprint")}
-            if "dedup.meta" in props:
-                try:
-                    meta.update(json.loads(props["dedup.meta"]))
-                except json.JSONDecodeError:
-                    return None
-            return meta
-        if not os.path.isdir(self._path(name)):
-            return None
-        try:
-            with open(self._meta_path(name)) as f:
-                return json.load(f)
-        except (json.JSONDecodeError, OSError):
-            return None
-
-    def write(self, name: str, df: DataFrame, meta: dict | None = None) -> DataFrame:
+    def write(self, name: str, df: DataFrame) -> DataFrame:
         if self.table_format == "iceberg":
             q = self._qualified(name)
             df.writeTo(q).using("iceberg").createOrReplace()
-            props = f"'dedup.fingerprint' = '{self.fingerprint}'"
-            if meta:
-                props += f", 'dedup.meta' = '{json.dumps(meta)}'"
-            self.spark.sql(f"ALTER TABLE {q} SET TBLPROPERTIES ({props})")
+            self.spark.sql(
+                f"ALTER TABLE {q} SET TBLPROPERTIES "
+                f"('dedup.fingerprint' = '{self.fingerprint}')"
+            )
             return self.read(name)
         path = self._path(name)
         tmp = path + ".__tmp__"
@@ -176,14 +148,11 @@ class StageCatalog:
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
-        sidecar = {"fingerprint": self.fingerprint, "stage": name}
-        if meta:
-            sidecar.update(meta)
         with open(self._meta_path(name), "w") as f:
-            json.dump(sidecar, f)
+            json.dump({"fingerprint": self.fingerprint, "stage": name}, f)
         return self.read(name)
 
-    def adopt(self, src: str, dst: str, meta: dict | None = None) -> None:
+    def adopt(self, src: str, dst: str) -> None:
         """MOVE an existing stage table to a new name (driver-side
         rename — no Spark job, no data copy) and stamp a fresh sidecar.
         The source stage ceases to exist (its checkpoint is consumed,
@@ -197,11 +166,6 @@ class StageCatalog:
                 f"ALTER TABLE {self._qualified(src)} "
                 f"RENAME TO {self._qualified(dst)}"
             )
-            if meta:
-                self.spark.sql(
-                    f"ALTER TABLE {self._qualified(dst)} SET TBLPROPERTIES "
-                    f"('dedup.meta' = '{json.dumps(meta)}')"
-                )
             return
         if not os.path.isdir(self._path(src)):
             raise RuntimeError(f"adopt: source stage '{src}' does not exist")
@@ -209,11 +173,8 @@ class StageCatalog:
         if os.path.isdir(dst_path):
             shutil.rmtree(dst_path)
         os.replace(self._path(src), dst_path)
-        sidecar = {"fingerprint": self.fingerprint, "stage": dst}
-        if meta:
-            sidecar.update(meta)
         with open(self._meta_path(dst), "w") as f:
-            json.dump(sidecar, f)
+            json.dump({"fingerprint": self.fingerprint, "stage": dst}, f)
         src_meta = self._meta_path(src)
         if os.path.isfile(src_meta):
             os.remove(src_meta)

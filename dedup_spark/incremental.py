@@ -24,8 +24,8 @@ Why exactness is non-trivial — two global dependencies drift:
 
 Cost model (the round-5 redesign — the round-4 implementation re-built
 every global aggregate per append, measured at 0.43× of a full
-bootstrap): state lives in APPEND-ONLY SEGMENTS plus small rewritten
-tables, so per-apply work is
+bootstrap): state lives in APPEND-ONLY SEGMENTS plus one version of
+each small result table per fold, so per-apply work is
 
 * UDF cost ∝ added characters + re-signed conversations;
 * shuffle cost ∝ (delta ∪ affected): df counts merge only for TOUCHED
@@ -41,16 +41,17 @@ tables, so per-apply work is
   :meth:`IncrementalDedup.compact` (auto after ``auto_compact_segments``
   epochs).
 
-Atomicity (a crash mid-fold must never leave a silently-torn
-warehouse): every state table's sidecar carries the epoch it was
-written at, and a single JSON MANIFEST — replaced atomically, committed
-LAST — names the exact segment set and the expected epoch of every
-rewritten table. Segments written by a crashed apply are orphans the
-manifest never references; a crash between the small-table rewrites and
-the manifest commit leaves sidecar epochs ahead of the manifest, which
-:meth:`_check_state` refuses LOUDLY. Stale batch-pipeline stages are
-invalidated BEFORE the fold, so no interleaving leaves them readable
-against post-fold state.
+Atomicity (a crash at any write leaves a warehouse the next call
+recovers from on its own): every state table is an epoch-named dir
+``<base>__s<e>`` that no later fold or compaction ever rewrites, and a
+single JSON MANIFEST — replaced atomically, committed LAST — lists the
+exact dirs that make up the state (the snapshot). Writes before the
+commit land only under names the committed manifest does not list, so a
+crashed fold or compaction leaves unreferenced dirs, never a mixed
+state; the next ``apply``/``compact`` deletes every ``inc_*`` entry the
+manifest does not list before it writes anything, then simply retries.
+Stale batch-pipeline stages are invalidated BEFORE the fold, so no
+interleaving leaves them readable against post-fold state.
 
 Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
@@ -77,6 +78,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -90,21 +92,21 @@ from dedup_spark.pipeline import DedupPipeline
 from dedup_spark.util import eager_ckpt
 
 # ---------------------------------------------------------------- state names
-#: segmented state tables (one parquet dir per epoch: "<name>__s<e>")
+#: append-only state tables: one parquet dir per fold that adds rows,
+#: "<name>__s<e>", each listed in the manifest
 SEG_TURNS = "inc_turns"      # raw turns of convs (re)added at epoch e
 SEG_SETS = "inc_sets"        # (conv_id, shingles, n_shingles) raw sets
 SEG_SIGS = "inc_sigs"        # signature rows of convs (re)signed at e
 SEG_BANDS = "inc_bands"      # exploded (conv_id, band_id, band_hash)
 SEG_DF = "inc_df"            # (shingle, df) CURRENT totals, touched at e
 SEG_SIZES = "inc_sizes"      # (band_id, band_hash, bucket_size), touched at e
-#: small tables rewritten wholesale each apply (epoch-stamped)
-TBL_RETIRED_SETS = "inc_retired_sets"   # (conv_id, __e) dead sets/turns rows
-TBL_RETIRED_SIGS = "inc_retired_sigs"   # (conv_id, __e) dead sig/band rows
+SEG_RETIRED_SETS = "inc_retired_sets"   # (conv_id, seg_e) dead sets/turns rows
+SEG_RETIRED_SIGS = "inc_retired_sigs"   # (conv_id, seg_e) dead sig/band rows
+#: result tables: one full version per fold that changes them; the
+#: manifest lists only the latest
 TBL_VERIFIED = "inc_verified"
 TBL_CLUSTERS = "inc_clusters"
 TBL_SKEW = "inc_skew"
-_WHOLESALE = (TBL_RETIRED_SETS, TBL_RETIRED_SIGS, TBL_VERIFIED, TBL_CLUSTERS,
-              TBL_SKEW)
 _MANIFEST = "_inc_manifest.json"
 
 #: batch-pipeline stage names that become stale the moment the corpus
@@ -197,63 +199,60 @@ class IncrementalDedup:
             )
         with open(p) as f:
             man = json.load(f)
-        if man.get("fingerprint") != self.cat.fingerprint:
+        if (man.get("fingerprint") != self.cat.fingerprint
+                or "results" not in man):
             raise RuntimeError(
                 "incremental state was written under a different config "
-                "fingerprint — bootstrap this warehouse with the current "
-                "config first"
+                "fingerprint or state layout — bootstrap this warehouse "
+                "with the current config first"
             )
         return man
 
     def _commit_manifest(self, man: dict) -> None:
-        """Atomic replace: the manifest commit IS the apply's commit
-        point — everything written before it is invisible until this
-        rename lands."""
+        """Atomic replace: the manifest commit IS the single commit point
+        of every fold, compaction and bootstrap — everything written
+        before it is invisible until this rename lands."""
         p = self._manifest_path()
         tmp = p + ".__tmp__"
         with open(tmp, "w") as f:
             json.dump(man, f)
         os.replace(tmp, p)
 
+    @staticmethod
+    def _listed(man: dict) -> set[str]:
+        """Every state dir the manifest lists (the committed snapshot)."""
+        return {
+            f"{base}__s{e}" for base, es in man["segments"].items() for e in es
+        } | {f"{base}__s{e}" for base, e in man["results"].items()}
+
     def _check_state(self) -> dict:
-        """Loud torn-warehouse detection (fold atomicity contract): every
-        manifest-listed segment and every wholesale table must carry the
-        epoch the manifest expects. A crash mid-fold leaves either
-        orphan segments (never listed — harmless, overwritten by the
-        retried apply) or wholesale sidecars AHEAD of the manifest —
-        refused here instead of silently mixing epochs."""
+        """The committed manifest, once every dir it lists is present and
+        was written under the current config fingerprint."""
         man = self._read_manifest()
-        fp = self.cat.fingerprint
-        for tbl, epochs in man["segments"].items():
-            for e in epochs:
-                meta = self.cat.read_meta(f"{tbl}__s{e}")
-                if meta is None or meta.get("fingerprint") != fp:
-                    raise RuntimeError(
-                        f"incremental state segment {tbl}__s{e} is missing "
-                        "or was written under a different config fingerprint"
-                    )
-                if meta.get("epoch") != e:
-                    raise RuntimeError(
-                        f"torn incremental warehouse: segment {tbl}__s{e} "
-                        f"carries epoch {meta.get('epoch')} — refusing a "
-                        "mixed-epoch state"
-                    )
-        for tbl in _WHOLESALE:
-            meta = self.cat.read_meta(tbl)
-            if meta is None or meta.get("fingerprint") != fp:
+        for name in sorted(self._listed(man)):
+            if not self.cat.exists(name):
                 raise RuntimeError(
-                    f"incremental state table {tbl} is missing or was "
+                    f"incremental state table {name} is missing or was "
                     "written under a different config fingerprint"
                 )
-            if meta.get("epoch") != man["epoch"]:
-                raise RuntimeError(
-                    f"torn incremental warehouse: {tbl} is at epoch "
-                    f"{meta.get('epoch')} but the committed manifest is at "
-                    f"{man['epoch']} — a fold crashed between the state "
-                    "rewrite and the manifest commit; re-bootstrap (or "
-                    "restore the warehouse) before applying further deltas"
-                )
         return man
+
+    def _sweep(self, man: dict) -> None:
+        """The one recovery rule and GC site, run before the caller's
+        first write: delete every ``inc_*`` dir, sidecar or ``.__tmp__``
+        leftover the committed manifest does not list — orphans of a
+        crashed fold or compaction, superseded result versions, segments
+        compaction replaced. Superseded dirs thus live until the next
+        fold, which keeps the previous result's lazy frames readable."""
+        listed = self._listed(man)
+        keep = {_MANIFEST} | listed | {f"_{n}.meta.json" for n in listed}
+        for entry in os.listdir(self.cat.warehouse):
+            if entry.lstrip("_").startswith("inc_") and entry not in keep:
+                path = os.path.join(self.cat.warehouse, entry)
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
 
     # ------------------------------------------------------------ seg reads
 
@@ -268,6 +267,25 @@ class IncrementalDedup:
             )
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _retired(self, man: dict, base: str) -> DataFrame:
+        """(conv_id, __e) rows retired from a conv-keyed table: the union
+        of the listed retired segments, or a typed empty frame when none
+        is listed (bootstrap and compaction list none). The empty frame
+        is an empty range, not ``createDataFrame([])``: the optimizer
+        drops anti-joins against it, where a local list would run as a
+        Python RDD in every join that reads it."""
+        u = self._seg_union(man, base)
+        if u is None:
+            return self.spark.range(0).select(
+                F.lit(None).cast("string").alias("conv_id"),
+                F.lit(None).cast("int").alias("__e"),
+            )
+        return u.select("conv_id", F.col("seg_e").alias("__e"))
+
+    def _result(self, man: dict, base: str) -> DataFrame:
+        """The manifest-listed version of a result table."""
+        return self.cat.read(f"{base}__s{man['results'][base]}")
 
     #: restrict sides below this many rows are broadcast into the state
     #: semi-join: the big (state-scan) side then never shuffles — the
@@ -363,11 +381,11 @@ class IncrementalDedup:
         segs: dict[str, list[int]] = {}
 
         def seg(name: str, df: DataFrame) -> None:
-            cat.write(f"{name}__s0", df, meta={"epoch": 0})
+            cat.write(f"{name}__s0", df)
             segs[name] = [0]
 
         def adopt(src: str, dst_seg: str) -> None:
-            cat.adopt(src, f"{dst_seg}__s0", meta={"epoch": 0})
+            cat.adopt(src, f"{dst_seg}__s0")
             segs[dst_seg] = [0]
 
         sets_df = cat.read("shingle_sets")
@@ -381,20 +399,14 @@ class IncrementalDedup:
         adopt("shingle_sets", SEG_SETS)
         adopt("signatures", SEG_SIGS)
 
-        empty_retired = self.spark.createDataFrame(
-            [], "conv_id string, __e int"
-        )
-        epoch_meta = {"epoch": 0}
-        cat.adopt("verified_pairs", TBL_VERIFIED, meta=epoch_meta)
-        cat.adopt("clusters", TBL_CLUSTERS, meta=epoch_meta)
+        cat.adopt("verified_pairs", f"{TBL_VERIFIED}__s0")
+        cat.adopt("clusters", f"{TBL_CLUSTERS}__s0")
         if banding:
-            cat.adopt("skew_report", TBL_SKEW, meta=epoch_meta)
+            cat.adopt("skew_report", f"{TBL_SKEW}__s0")
         else:
-            cat.write(TBL_SKEW, self.spark.createDataFrame(
+            cat.write(f"{TBL_SKEW}__s0", self.spark.createDataFrame(
                 [], "band_id int, band_hash long, bucket_size long"
-            ), meta=epoch_meta)
-        cat.write(TBL_RETIRED_SETS, empty_retired, meta=epoch_meta)
-        cat.write(TBL_RETIRED_SIGS, empty_retired, meta=epoch_meta)
+            ))
 
         # smallest signed stratum for the prefix probe range (tracked in
         # the manifest; monotone-decreasing — deletes never raise it, a
@@ -407,6 +419,7 @@ class IncrementalDedup:
             "fingerprint": cat.fingerprint,
             "epoch": 0,
             "segments": segs,
+            "results": dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW), 0),
             "min_stratum": int(math.floor(math.log2(min_n))) if min_n else 0,
         })
         return res
@@ -441,6 +454,7 @@ class IncrementalDedup:
         lo, hi = cfg.df_lo, cfg.df_hi
         banding = cfg.candidate_source == "banding"
         man = self._check_state()
+        self._sweep(man)
         e_new = int(man["epoch"]) + 1
         rpt: dict = {"epoch": e_new}
         # per-phase wall observability (delta-cost accounting lives and
@@ -455,13 +469,10 @@ class IncrementalDedup:
             t_phases[name] = round(now - t_last, 2)
             t_last = now
 
-        # small rewritten tables are eagerly checkpointed so every plan
-        # built below survives the fold's rewrites (segment dirs are
-        # immutable and need no such shielding)
-        retired_sets = eager_ckpt(cat.read(TBL_RETIRED_SETS))
-        retired_sigs = eager_ckpt(cat.read(TBL_RETIRED_SIGS))
-        old_verified = eager_ckpt(cat.read(TBL_VERIFIED))
-        old_skew = eager_ckpt(cat.read(TBL_SKEW)) if banding else None
+        # every dir read below is immutable: the fold writes only names
+        # the committed manifest does not list
+        retired_sets = self._retired(man, SEG_RETIRED_SETS)
+        retired_sigs = self._retired(man, SEG_RETIRED_SIGS)
 
         removed = self._as_conv_df(remove_conv_ids)
         if removed is not None:
@@ -634,6 +645,14 @@ class IncrementalDedup:
         resigned = eager_ckpt(lsh.compute_signatures(resign_informative, cfg))
         n_resigned = resigned.count()
         rpt["n_resigned"] = n_resigned
+        # smallest signed stratum after this fold: the manifest's next
+        # min_stratum and the prefix probe floor of THIS apply — a new
+        # doc smaller than every historical one lowers the meet stratum
+        # of its pairs, and the probe side must emit down to it
+        min_strat = int(man.get("min_stratum", 0))
+        new_min = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
+        if new_min:
+            min_strat = min(min_strat, int(math.floor(math.log2(new_min))))
         tick("resign")
 
         # convs whose sig-cadence rows retire: re-signed olds + removed
@@ -641,7 +660,7 @@ class IncrementalDedup:
         sigs_retired_rows = self._resolve_conv(
             man, SEG_SIGS, retired_sigs, restrict=sig_gone, keep_epoch=True,
             n_restrict=n_affected + n_removed,
-        ).select("conv_id", "__e")
+        ).select("conv_id", F.col("__e").alias("seg_e"))
 
         added_convs = (
             t_new.select("conv_id") if t_new is not None else empty_convs
@@ -650,7 +669,7 @@ class IncrementalDedup:
             changed, cand_changed, sz_touched, skew_new, rpt_b = (
                 self._banding_candidates(
                     man, retired_sigs, affected_old, added_convs, removed_c,
-                    sig_gone, resigned, old_skew, e_new,
+                    sig_gone, resigned, e_new,
                 )
             )
             rpt.update(rpt_b)
@@ -659,10 +678,9 @@ class IncrementalDedup:
                 affected_old.unionByName(added_convs).dropDuplicates()
             )
             cand_changed = self._prefix_candidates(
-                man, retired_sigs, sigs_retired_rows, resigned, changed
+                man, retired_sigs, sigs_retired_rows, resigned, changed,
+                min_strat,
             )
-            sz_touched = None
-            skew_new = eager_ckpt(cat.read(TBL_SKEW))  # stays the empty table
 
         cand_changed = eager_ckpt(cand_changed)
         rpt["n_changed_convs"] = changed.count()
@@ -684,7 +702,7 @@ class IncrementalDedup:
         )
         verified_new = verify.verify_pairs(cand_changed, sigs_lookup, cfg)
         drop_pairs = changed.unionByName(removed_c).dropDuplicates()
-        kept_old = old_verified.join(
+        kept_old = self._result(man, TBL_VERIFIED).join(
             drop_pairs.select(F.col("conv_id").alias("conv_a")),
             "conv_a", "left_anti",
         ).join(
@@ -720,23 +738,27 @@ class IncrementalDedup:
         deduped = DedupPipeline._emit(turns_post, clusters)
 
         # ------------------------------------------------------------ fold
-        # stale batch stages go FIRST (fold atomicity: no ordering leaves
-        # a config-fingerprint-valid batch stage readable against
-        # post-fold state), then segments (orphans harmless until the
-        # manifest lists them), then epoch-stamped wholesale rewrites,
-        # then the manifest commit — the single atomic commit point.
+        # stale batch stages go FIRST (no ordering leaves a config-
+        # fingerprint-valid batch stage readable against post-fold
+        # state), then every state write under a name the committed
+        # manifest does not list, then the manifest commit — the single
+        # atomic commit point.
         for stale in _BATCH_STAGES:
             cat.invalidate(stale)
 
         new_segs = {k: list(v) for k, v in man["segments"].items()}
+        results = dict(man["results"])
 
         def seg_write(base: str, df: DataFrame) -> None:
-            cat.write(f"{base}__s{e_new}", df, meta={"epoch": e_new})
+            cat.write(f"{base}__s{e_new}", df)
             new_segs[base] = new_segs.get(base, []) + [e_new]
 
-        # empty deltas write NO segment (a zero-row parquet dir is a
-        # schema-inference trap for later readers, and the manifest list
-        # stays minimal); the counts were already taken for the report
+        def result_write(base: str, df: DataFrame) -> DataFrame:
+            results[base] = e_new
+            return cat.write(f"{base}__s{e_new}", df)
+
+        # empty deltas write NO segment (the manifest list stays
+        # minimal); the counts were already taken for the report
         if sets_new is not None:
             seg_write(SEG_SETS, sets_new)
             seg_write(SEG_TURNS, new_turns)
@@ -749,37 +771,29 @@ class IncrementalDedup:
                 seg_write(SEG_BANDS, lsh.explode_bands(resigned))
             if rpt["n_touched_buckets"]:
                 seg_write(SEG_SIZES, sz_touched)
-
-        em = {"epoch": e_new}
-        sets_retired_rows = (
-            self._resolve_conv(
+        if n_removed:
+            seg_write(SEG_RETIRED_SETS, self._resolve_conv(
                 man, SEG_SETS, retired_sets, restrict=removed,
                 keep_epoch=True, n_restrict=n_removed,
-            ).select("conv_id", "__e")
-            if removed is not None
-            else spark.createDataFrame([], "conv_id string, __e int")
-        )
-        cat.write(
-            TBL_RETIRED_SETS,
-            retired_sets.unionByName(eager_ckpt(sets_retired_rows)), meta=em,
-        )
-        cat.write(
-            TBL_RETIRED_SIGS,
-            retired_sigs.unionByName(eager_ckpt(sigs_retired_rows)), meta=em,
-        )
-        cat.write(TBL_VERIFIED, verified_all, meta=em)
-        cat.write(TBL_CLUSTERS, clusters, meta=em)
-        skew_new = eager_ckpt(skew_new)
-        cat.write(TBL_SKEW, skew_new, meta=em)
+            ).select("conv_id", F.col("__e").alias("seg_e")))
+        if n_affected + n_removed:
+            # zero rows when none of these convs ever signed: the
+            # segment still reads back typed
+            seg_write(SEG_RETIRED_SIGS, sigs_retired_rows)
+        result_write(TBL_VERIFIED, verified_all)
+        result_write(TBL_CLUSTERS, clusters)
+        if banding and rpt["n_touched_buckets"]:
+            skew_report = result_write(TBL_SKEW, skew_new)
+        else:
+            # no bucket size moved (and prefix mode has no buckets): the
+            # dropped-bucket report is unchanged
+            skew_report = self._result(man, TBL_SKEW)
 
-        min_strat = int(man.get("min_stratum", 0))
-        new_min = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-        if new_min:
-            min_strat = min(min_strat, int(math.floor(math.log2(new_min))))
         self._commit_manifest({
             "fingerprint": cat.fingerprint,
             "epoch": e_new,
             "segments": new_segs,
+            "results": results,
             "min_stratum": min_strat,
         })
         tick("fold")
@@ -788,16 +802,13 @@ class IncrementalDedup:
             self.auto_compact_segments
             and max(len(v) for v in new_segs.values()) > self.auto_compact_segments
         ):
-            # compaction drops the superseded segment dirs the lazy emit
-            # plan still references — materialize it first
-            deduped = eager_ckpt(deduped)
             self.compact()
 
         return IncrementalResult(
             verified_pairs=verified_all,
             clusters=clusters,
             deduped_turns=deduped,
-            skew_report=skew_new,
+            skew_report=skew_report,
             n_new_convs=n_new,
             n_affected_old=n_affected,
             n_resigned=n_resigned,
@@ -809,7 +820,7 @@ class IncrementalDedup:
 
     def _banding_candidates(
         self, man, retired_sigs, affected_old, added_convs, removed_c,
-        sig_gone, resigned, old_skew, e_new,
+        sig_gone, resigned, e_new,
     ):
         """One-sided three-tier band join over bucket-restricted state.
 
@@ -930,7 +941,9 @@ class IncrementalDedup:
 
         # dropped-bucket report maintained incrementally ("dropped,
         # never silently"): untouched buckets keep their report status
-        skew_new = old_skew.join(sz_delta, bkey, "left_anti").unionByName(
+        skew_new = self._result(man, TBL_SKEW).join(
+            sz_delta, bkey, "left_anti"
+        ).unionByName(
             sz_touched.filter(F.col("bucket_size") > drop)
             .select(*bkey, "bucket_size")
         )
@@ -939,7 +952,7 @@ class IncrementalDedup:
         ), skew_new, rpt
 
     def _prefix_candidates(
-        self, man, retired_sigs, sigs_retired_rows, resigned, changed
+        self, man, retired_sigs, sigs_retired_rows, resigned, changed, s_min,
     ) -> DataFrame:
         """One-sided exact prefix-filter candidates (AllPairs/PPJoin
         family) over the informative shingle sets, under ascending
@@ -965,15 +978,6 @@ class IncrementalDedup:
         frac = Fraction(cfg.verify_containment).limit_denominator(1_000_000)
         t_num, t_den = frac.numerator, frac.denominator
         p1 = 1 if cfg.containment_plus1 else 0
-        # effective probe floor for THIS apply: the manifest minimum
-        # extended by the re-signed batch — a new doc smaller than every
-        # historical one lowers the meet stratum of its pairs, and the
-        # probe side must emit down to it (the manifest itself is only
-        # updated at the fold)
-        s_min = int(man.get("min_stratum", 0))
-        m = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-        if m:
-            s_min = min(s_min, int(math.floor(math.log2(m))))
 
         def emit(sigs: DataFrame) -> DataFrame:
             return (
@@ -1049,14 +1053,16 @@ class IncrementalDedup:
 
     def compact(self) -> None:
         """Rewrite every segmented table as a single resolved segment and
-        empty the retired lists: bounds the per-apply segment scan (the
-        parquet stand-in for Iceberg snapshot compaction). Exactness-
-        neutral — resolution before and after reads identical rows."""
+        list no retired segment: bounds the per-apply segment scan (the
+        parquet stand-in for Iceberg snapshot compaction). Result tables
+        carry forward unchanged. Exactness-neutral — resolution before
+        and after reads identical rows."""
         cat = self.cat
         man = self._check_state()
+        self._sweep(man)
         e = int(man["epoch"]) + 1
-        retired_sets = eager_ckpt(cat.read(TBL_RETIRED_SETS))
-        retired_sigs = eager_ckpt(cat.read(TBL_RETIRED_SIGS))
+        retired_sets = self._retired(man, SEG_RETIRED_SETS)
+        retired_sigs = self._retired(man, SEG_RETIRED_SIGS)
         segs: dict[str, list[int]] = {}
         conv_tables = [
             (SEG_TURNS, retired_sets), (SEG_SETS, retired_sets),
@@ -1068,31 +1074,18 @@ class IncrementalDedup:
             kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
                               "bucket_size"))
         for base, retired in conv_tables:
-            resolved = eager_ckpt(self._resolve_conv(man, base, retired))
-            cat.write(f"{base}__s{e}", resolved, meta={"epoch": e})
+            cat.write(f"{base}__s{e}", self._resolve_conv(man, base, retired))
             segs[base] = [e]
         for base, keys, val in kv_tables:
-            resolved = eager_ckpt(self._resolve_kv(man, base, keys, val))
-            cat.write(f"{base}__s{e}", resolved, meta={"epoch": e})
+            cat.write(f"{base}__s{e}", self._resolve_kv(man, base, keys, val))
             segs[base] = [e]
-        em = {"epoch": e}
-        empty_retired = self.spark.createDataFrame([], "conv_id string, __e int")
-        cat.write(TBL_RETIRED_SETS, empty_retired, meta=em)
-        cat.write(TBL_RETIRED_SIGS, empty_retired, meta=em)
-        # wholesale result tables are re-stamped at the new epoch
-        # (contents unchanged) so the torn-fold check stays uniform
-        for tbl in (TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW):
-            cat.write(tbl, eager_ckpt(cat.read(tbl)), meta=em)
         self._commit_manifest({
             "fingerprint": cat.fingerprint,
             "epoch": e,
             "segments": segs,
+            "results": man["results"],
             "min_stratum": int(man.get("min_stratum", 0)),
         })
-        # drop the superseded segment dirs (manifest no longer lists them)
-        for base, epochs in man["segments"].items():
-            for old_e in epochs:
-                cat.invalidate(f"{base}__s{old_e}")
 
     # -------------------------------------------------------------- helpers
 

@@ -75,17 +75,9 @@ def band_bucket_sizes(bands: DataFrame) -> DataFrame:
 
 def skew_report(bucket_sizes: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Buckets DROPPED from pairing (beyond the salted tier) — logged,
-    never silent. Buckets in the salted tier are fully processed and
-    surface via :func:`salted_report` instead."""
+    never silent. Buckets in the salted tier are fully processed, so
+    they never appear here."""
     return bucket_sizes.filter(F.col("bucket_size") > cfg.max_salted_bucket)
-
-
-def salted_report(bucket_sizes: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Buckets handled by the grid-salted tier (observability)."""
-    return bucket_sizes.filter(
-        (F.col("bucket_size") > cfg.max_band_bucket)
-        & (F.col("bucket_size") <= cfg.max_salted_bucket)
-    )
 
 
 def candidate_pairs(

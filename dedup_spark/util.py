@@ -2,15 +2,12 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
 def eager_ckpt(df: DataFrame) -> DataFrame:
-    """Eager lineage-truncating checkpoint at a SERIALIZED, disk-backed
-    storage level (default ``DISK_ONLY``; override via
-    ``SPARK_GRAFT_CKPT_LEVEL``).
+    """Eager lineage-truncating checkpoint at the SERIALIZED, disk-backed
+    ``DISK_ONLY`` storage level.
 
     The default ``localCheckpoint`` level keeps deserialized row objects
     in the executors' storage-memory region. With a checkpoint per
@@ -27,10 +24,7 @@ def eager_ckpt(df: DataFrame) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    level = getattr(
-        StorageLevel, os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "DISK_ONLY")
-    )
-    return df.localCheckpoint(eager=True, storageLevel=level)
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 # logical-plan node names that imply a shuffle (or explicit repartition)
 # below this point — such plans are already wide (shuffle width comes

@@ -7,10 +7,14 @@ cluster assignments, and surviving turns to a fresh DedupPipeline run
 over the post-change corpus — including the df-drift cases (a delta
 pushing an old shingle into or out of the informative band forces old
 conversations to re-sign), drop-tier bucket crossings in both
-directions, segmented-state chaining/compaction, and torn-fold refusal.
+directions, segmented-state chaining/compaction, and recovery from a
+crash at any state write.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import numpy as np
 import pytest
@@ -473,78 +477,123 @@ class TestRemoveAndEdit:
 
 
 class TestFoldAtomicity:
-    """ADVICE r4 (medium): a crash mid-fold must leave a LOUDLY-refused
-    warehouse, never a silently-torn one — wholesale state sidecars
-    carry the fold epoch and the manifest (committed last, atomically)
-    is the single commit point."""
+    """The manifest is the only commit point: a crash at any state write,
+    at the manifest commit or inside compact() leaves the committed
+    manifest and every dir it lists untouched, and the next call sweeps
+    the leftovers and recovers on its own — no refusal, no re-bootstrap."""
 
-    def test_crash_between_rewrites_detected(self, spark, tmp_path_factory):
-        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=40))
-        all_turns = spark.createDataFrame(turns_pdf).cache()
-        convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})
-        new_ids = set(convs[::4])
-        old = all_turns.filter(~F.col("conv_id").isin(list(new_ids)))
-        new = all_turns.filter(F.col("conv_id").isin(list(new_ids)))
+    def test_crash_at_every_write_recovers(self, spark, tmp_path_factory):
+        rng = np.random.Generator(np.random.PCG64(55))
 
-        inc = IncrementalDedup(
-            spark, DedupConfig(), str(tmp_path_factory.mktemp("wh_tear"))
-        )
-        inc.bootstrap(old)
+        def seg(n):
+            return "".join(chr(97 + c) for c in rng.integers(0, 26, size=n))
 
-        real_write = inc.cat.write
+        sA, sB, sC = seg(300), seg(300), seg(300)
+        old = {
+            **{f"q{i}": [sA, seg(60)] for i in range(4)},  # df(sA)=4, in band
+            "p0": [sB, seg(60)],
+            "p1": [sB, seg(70)],                           # df(sB)=2, in band
+            "lone": [sC, seg(80)],                         # df(sC)=1
+        }
+        # one apply that appends AND removes, so every state table is
+        # written: sA leaves the band, sC enters it, removing p1 retires
+        # signed rows and takes sB out of the band
+        new = {"zq_new": [sA, seg(65)], "zc_new": [sC, seg(75)]}
+        gone = ["p1"]
+        post = {k: v for k, v in {**old, **new}.items() if k not in gone}
+        new_t = _turns_df(spark, new)
 
-        def crashing_write(name, df, meta=None):
-            if name == "inc_clusters":
-                raise RuntimeError("simulated crash mid-fold")
-            return real_write(name, df, meta=meta)
+        wh = str(tmp_path_factory.mktemp("wh_crash"))
+        inc = IncrementalDedup(spark, DedupConfig(), wh)
+        inc.bootstrap(_turns_df(spark, old))
+        man_path = os.path.join(wh, "_inc_manifest.json")
 
-        inc.cat.write = crashing_write
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            inc.append(new)
+        def committed():
+            """The manifest and the identity of every dir it lists."""
+            with open(man_path) as f:
+                man = f.read()
+            return man, {
+                n: (st.st_ino, st.st_mtime_ns)
+                for n in inc._listed(json.loads(man))
+                for st in [os.stat(os.path.join(wh, n))]
+            }
+
+        class Crash(Exception):
+            pass
+
+        real_write, real_commit = inc.cat.write, inc._commit_manifest
+        writes = []
+
+        def crash_at(k):
+            """Crash right after the k-th state write lands (None: never)."""
+
+            def write(name, df):
+                out = real_write(name, df)
+                writes.append(name)
+                if len(writes) - 1 == k:
+                    raise Crash(name)
+                return out
+
+            writes.clear()
+            inc.cat.write = write
+
+        def crash_in_commit(man):
+            with open(man_path + ".__tmp__", "w") as f:
+                f.write("{")  # half-written temp file, never renamed
+            raise Crash("commit")
+
+        def fold():
+            return inc.apply(new_turns=new_t, remove_conv_ids=gone)
+
+        # a fold that crashes at the commit has made every write of a
+        # clean fold: count them instead of hard-coding the figure
+        before = committed()
+        crash_at(None)
+        inc._commit_manifest = crash_in_commit
+        with pytest.raises(Crash, match="commit"):
+            fold()
+        inc._commit_manifest = real_commit
+        n_writes = len(writes)
+        assert committed() == before
+        assert {w.rsplit("__s", 1)[0] for w in writes} == {
+            "inc_turns", "inc_sets", "inc_sigs", "inc_bands", "inc_df",
+            "inc_sizes", "inc_retired_sets", "inc_retired_sigs",
+            "inc_verified", "inc_clusters", "inc_skew",
+        }
+        # crash at every write: each retry gets past the previous point
+        for k in range(n_writes):
+            crash_at(k)
+            with pytest.raises(Crash):
+                fold()
+            assert len(writes) == k + 1
+            assert committed() == before
+        # one crash inside compact()
+        crash_at(1)
+        with pytest.raises(Crash):
+            inc.compact()
+        assert committed() == before
         inc.cat.write = real_write
+        inc.compact()
+        compacted = json.loads(committed()[0])
+        res = fold()
 
-        # inc_verified was rewritten at epoch 1, manifest still says 0 —
-        # any further state read must refuse loudly
-        with pytest.raises(RuntimeError, match="torn"):
-            inc.append(new)
-
-    def test_orphan_segments_from_crash_are_harmless(
-        self, spark, tmp_path_factory
-    ):
-        """A crash BEFORE the wholesale rewrites leaves only orphan
-        segments the manifest never lists: the retried apply overwrites
-        them and the chain still equals a full recompute."""
-        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=40))
-        all_turns = spark.createDataFrame(turns_pdf).cache()
-        convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})
-        new_ids = set(convs[::4])
-        old = all_turns.filter(~F.col("conv_id").isin(list(new_ids)))
-        new = all_turns.filter(F.col("conv_id").isin(list(new_ids)))
-
-        cfg = DedupConfig()
-        inc = IncrementalDedup(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_orph"))
-        )
-        inc.bootstrap(old)
-
-        real_write = inc.cat.write
-
-        def crashing_write(name, df, meta=None):
-            if name == "inc_retired_sets":  # first wholesale rewrite
-                raise RuntimeError("simulated crash pre-wholesale")
-            return real_write(name, df, meta=meta)
-
-        inc.cat.write = crashing_write
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            inc.append(new)
-        inc.cat.write = real_write
-
-        res = inc.append(new)  # clean retry succeeds
         full = DedupPipeline(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_orph_f"))
-        ).run(all_turns)
+            spark, DedupConfig(), str(tmp_path_factory.mktemp("wh_crash_f"))
+        ).run(_turns_df(spark, post))
         assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
         assert _clusters(res.clusters) == _clusters(full.clusters)
+        assert _turn_keys(res.deduped_turns) == _turn_keys(full.deduped_turns)
+        # the fold swept every crash leftover and every segment compaction
+        # replaced; what it does not list is only the result versions it
+        # superseded, which stay readable until the next fold
+        listed = inc._listed(json.loads(committed()[0]))
+        superseded = inc._listed(compacted) - listed
+        kept = listed | superseded
+        on_disk = {e for e in os.listdir(wh) if e.lstrip("_").startswith("inc_")}
+        assert superseded
+        assert on_disk == {"_inc_manifest.json"} | kept | {
+            f"_{n}.meta.json" for n in kept
+        }
 
 
 class TestCompaction:

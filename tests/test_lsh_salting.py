@@ -34,7 +34,6 @@ class TestSaltedTier:
         }
         assert got == _all_pairs(convs)  # all 435, none lost
         assert lsh.skew_report(sizes, cfg).count() == 0
-        assert lsh.salted_report(sizes, cfg).count() == 1
 
     def test_mega_bucket_dropped_and_reported(self, spark):
         cfg = DedupConfig(max_band_bucket=5, max_salted_bucket=20)

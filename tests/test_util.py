@@ -1,7 +1,5 @@
 """eager_ckpt: lineage-truncating checkpoint at a disk-backed level."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from dedup_spark.util import eager_ckpt
@@ -29,12 +27,6 @@ def test_eager_ckpt_preserves_rows_and_truncates_lineage(spark):
         for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     }
     assert any("disk" in lv and "memory" not in lv for lv in levels), levels
-
-
-def test_eager_ckpt_level_env_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK")
-    ck = eager_ckpt(spark.range(10))
-    assert ck.count() == 10
 
 
 def test_shared_memo_mtime_guard(tmp_path, monkeypatch):

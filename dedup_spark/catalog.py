@@ -179,13 +179,15 @@ class StageCatalog:
         if os.path.isfile(src_meta):
             os.remove(src_meta)
 
-    def _footer_stats(self, name: str) -> tuple[int, int]:
-        """(rows, files) from parquet footers — driver-local metadata
-        reads, NO Spark job. ~19 per-stage count() jobs used to add
-        seconds of serial wall time per run, a pure scaling-efficiency
-        tax."""
-        parts = self.partition_stats(name)
-        return sum(p["rows"] for p in parts), len(parts)
+    def rows(self, name: str) -> int:
+        """Row count of a stage table: summed parquet footers on the
+        parquet backend — driver-local metadata reads, NO Spark job (~19
+        per-stage count() jobs used to add seconds of serial wall time
+        per run, a pure scaling-efficiency tax) — and a ``count()`` on
+        iceberg."""
+        if self.table_format == "iceberg":
+            return self.read(name).count()
+        return sum(p["rows"] for p in self.partition_stats(name))
 
     def partition_stats(self, name: str) -> list[dict]:
         """Per-partition lineage of a stage table: one record per output
@@ -277,18 +279,9 @@ class StageCatalog:
             # this stage lands exactly once, via the writer thread
             return self._live[name]
         reused = self.exists(name)
-        if reused:
-            out = self.read(name)
-            if self.table_format == "iceberg":
-                rows, files = out.count(), out.rdd.getNumPartitions()
-            else:
-                rows, files = self._footer_stats(name)
-            self._record(name, t0, rows, files, reused=True)
-            return out
-        if self.table_format == "iceberg":
-            out = self.write(name, build())
-            rows, files = out.count(), out.rdd.getNumPartitions()
-            self._record(name, t0, rows, files, reused=False)
+        if reused or self.table_format == "iceberg":
+            out = self.read(name) if reused else self.write(name, build())
+            self._record(name, t0, reused)
             return out
         from dedup_spark.util import eager_ckpt
 
@@ -301,12 +294,16 @@ class StageCatalog:
         return ckpt
 
     def _record(
-        self, name: str, t0: float, rows: int, files: int, reused: bool,
-        t1: float | None = None,
+        self, name: str, t0: float, reused: bool, t1: float | None = None
     ) -> None:
         t1 = time.monotonic() if t1 is None else t1
+        files = (
+            self.read(name).rdd.getNumPartitions()
+            if self.table_format == "iceberg"
+            else len(self.partition_stats(name))
+        )
         m = StageMetric(
-            stage=name, rows_out=rows,
+            stage=name, rows_out=self.rows(name),
             wall_ms=int((t1 - t0) * 1000), partitions=files, reused=reused,
             t_start=round(t0 - self._t0, 3), t_end=round(t1 - self._t0, 3),
         )
@@ -316,8 +313,7 @@ class StageCatalog:
         self, name: str, ckpt: DataFrame, t0: float, t1: float
     ) -> None:
         self.write(name, ckpt)
-        rows, files = self._footer_stats(name)
-        self._record(name, t0, rows, files, reused=False, t1=t1)
+        self._record(name, t0, reused=False, t1=t1)
 
     def _writer(self) -> ThreadPoolExecutor:
         if self._writer_pool is None:

@@ -39,19 +39,24 @@ each small result table per fold, so per-apply work is
   full-corpus shuffle, no full-corpus UDF, no wholesale rewrite of any
   corpus-sized table. Segment reads are bounded by periodic
   :meth:`IncrementalDedup.compact` (auto after ``auto_compact_segments``
-  epochs).
+  epochs);
+* every segment and result version is materialized ONCE: the phase that
+  computes it writes it and later phases read the re-read; the row
+  counts that gate a segment come from its parquet footers, not a
+  count job.
 
 Atomicity (a crash at any write leaves a warehouse the next call
 recovers from on its own): every state table is an epoch-named dir
 ``<base>__s<e>`` that no later fold or compaction ever rewrites, and a
 single JSON MANIFEST — replaced atomically, committed LAST — lists the
-exact dirs that make up the state (the snapshot). Writes before the
-commit land only under names the committed manifest does not list, so a
-crashed fold or compaction leaves unreferenced dirs, never a mixed
-state; the next ``apply``/``compact`` deletes every ``inc_*`` entry the
-manifest does not list before it writes anything, then simply retries.
-Stale batch-pipeline stages are invalidated BEFORE the fold, so no
-interleaving leaves them readable against post-fold state.
+exact dirs that make up the state (the snapshot). A fold's phases write
+their tables as they compute them, but only under names the committed
+manifest does not list, so a crashed fold or compaction leaves
+unreferenced dirs, never a mixed state; the next ``apply``/``compact``
+deletes every ``inc_*`` entry the manifest does not list before it
+writes anything, then simply retries. Stale batch-pipeline stages are
+invalidated BEFORE the commit, so no interleaving leaves them readable
+against post-fold state.
 
 Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
@@ -79,9 +84,11 @@ import json
 import math
 import os
 import shutil
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from dedup_spark.catalog import StageCatalog
 from dedup_spark.config import DedupConfig
@@ -119,6 +126,13 @@ _BATCH_STAGES = (
     "key_occ_repeated", "anchor_skew", "substring_chains",
     "position_classes", "substring_spans", "interval_marks",
     "trimmed_turns",
+)
+
+#: an apply's phases, in run order: the ``_Fold`` methods ``apply`` runs
+#: and the keys of ``report["t_phases"]``
+_PHASES = (
+    "guards", "shingle_delta", "df_merge", "affected_probe", "resign",
+    "candidates", "verify", "clusters", "fold",
 )
 
 @dataclass
@@ -184,6 +198,7 @@ class IncrementalDedup:
         #: df state-probe regime for re-sign lookups: "auto" picks by
         #: affected fraction; "restricted"/"full" pin a branch (tests)
         self.df_probe_regime = "auto"
+        self._reads: dict[str, DataFrame] = {}
 
     # ------------------------------------------------------------- manifest
 
@@ -208,14 +223,22 @@ class IncrementalDedup:
             )
         return man
 
-    def _commit_manifest(self, man: dict) -> None:
+    def _commit_manifest(
+        self, epoch: int, segments: dict, results: dict, min_stratum: int
+    ) -> None:
         """Atomic replace: the manifest commit IS the single commit point
         of every fold, compaction and bootstrap — everything written
         before it is invisible until this rename lands."""
         p = self._manifest_path()
         tmp = p + ".__tmp__"
         with open(tmp, "w") as f:
-            json.dump(man, f)
+            json.dump({
+                "fingerprint": self.cat.fingerprint,
+                "epoch": epoch,
+                "segments": segments,
+                "results": results,
+                "min_stratum": min_stratum,
+            }, f)
         os.replace(tmp, p)
 
     @staticmethod
@@ -244,6 +267,7 @@ class IncrementalDedup:
         crashed fold or compaction, superseded result versions, segments
         compaction replaced. Superseded dirs thus live until the next
         fold, which keeps the previous result's lazy frames readable."""
+        self._reads.clear()
         listed = self._listed(man)
         keep = {_MANIFEST} | listed | {f"_{n}.meta.json" for n in listed}
         for entry in os.listdir(self.cat.warehouse):
@@ -256,36 +280,49 @@ class IncrementalDedup:
 
     # ------------------------------------------------------------ seg reads
 
+    def _read(self, name: str) -> DataFrame:
+        """A state dir, read once per fold or compaction (a fold's own
+        writes enter as their re-reads): a dir never changes while it is
+        listed, and every parquet read runs a schema job."""
+        if name not in self._reads:
+            self._reads[name] = self.cat.read(name)
+        return self._reads[name]
+
     def _seg_union(self, man: dict, base: str) -> DataFrame | None:
         """Union of a table's manifest-listed segments, each tagged with
         its epoch as ``__e``. Immutable dirs — plans built on this stay
         valid across folds (folds only ADD segments)."""
         out = None
         for e in man["segments"].get(base, []):
-            df = self.cat.read(f"{base}__s{e}").withColumn(
+            df = self._read(f"{base}__s{e}").withColumn(
                 "__e", F.lit(int(e))
             )
             out = df if out is None else out.unionByName(df)
         return out
 
+    def _empty(self, schema: StructType | str) -> DataFrame:
+        """A typed empty frame. It is an empty range, not
+        ``createDataFrame([])``: the optimizer drops joins against it,
+        where a local list would run as a Python RDD in every join that
+        reads it (measured: a fold ~30% slower)."""
+        if isinstance(schema, str):
+            schema = StructType.fromDDL(schema)
+        return self.spark.range(0).select(
+            *(F.lit(None).cast(f.dataType).alias(f.name) for f in schema)
+        )
+
     def _retired(self, man: dict, base: str) -> DataFrame:
         """(conv_id, __e) rows retired from a conv-keyed table: the union
         of the listed retired segments, or a typed empty frame when none
-        is listed (bootstrap and compaction list none). The empty frame
-        is an empty range, not ``createDataFrame([])``: the optimizer
-        drops anti-joins against it, where a local list would run as a
-        Python RDD in every join that reads it."""
+        is listed (bootstrap and compaction list none)."""
         u = self._seg_union(man, base)
         if u is None:
-            return self.spark.range(0).select(
-                F.lit(None).cast("string").alias("conv_id"),
-                F.lit(None).cast("int").alias("__e"),
-            )
+            return self._empty("conv_id string, __e int")
         return u.select("conv_id", F.col("seg_e").alias("__e"))
 
     def _result(self, man: dict, base: str) -> DataFrame:
         """The manifest-listed version of a result table."""
-        return self.cat.read(f"{base}__s{man['results'][base]}")
+        return self._read(f"{base}__s{man['results'][base]}")
 
     #: restrict sides below this many rows are broadcast into the state
     #: semi-join: the big (state-scan) side then never shuffles — the
@@ -336,24 +373,15 @@ class IncrementalDedup:
         key_cols: list[str],
         val_col: str,
         restrict: DataFrame | None = None,
-        extra: DataFrame | None = None,
-        extra_epoch: int | None = None,
         n_restrict: int | None = None,
     ) -> DataFrame:
         """Latest-wins resolution of a key→value segmented table
         (df state, bucket sizes): the row from the highest epoch wins
-        per key. ``extra`` splices a not-yet-written delta segment in,
-        so 'state after this apply' reads exist before the fold."""
+        per key."""
         u = self._seg_union(man, base)
         if u is None:
             raise RuntimeError(f"incremental state table {base} has no segments")
         u = u.select(*key_cols, val_col, "__e")
-        if extra is not None:
-            u = u.unionByName(
-                extra.select(*key_cols, val_col).withColumn(
-                    "__e", F.lit(int(extra_epoch))
-                )
-            )
         if restrict is not None:
             u = u.join(
                 self._restrict_hint(restrict.select(*key_cols), n_restrict),
@@ -404,8 +432,8 @@ class IncrementalDedup:
         if banding:
             cat.adopt("skew_report", f"{TBL_SKEW}__s0")
         else:
-            cat.write(f"{TBL_SKEW}__s0", self.spark.createDataFrame(
-                [], "band_id int, band_hash long, bucket_size long"
+            cat.write(f"{TBL_SKEW}__s0", self._empty(
+                "band_id int, band_hash long, bucket_size long"
             ))
 
         # smallest signed stratum for the prefix probe range (tracked in
@@ -415,13 +443,10 @@ class IncrementalDedup:
             cat.read(f"{SEG_SIGS}__s0")
             .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
         )
-        self._commit_manifest({
-            "fingerprint": cat.fingerprint,
-            "epoch": 0,
-            "segments": segs,
-            "results": dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW), 0),
-            "min_stratum": int(math.floor(math.log2(min_n))) if min_n else 0,
-        })
+        self._commit_manifest(
+            0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW), 0),
+            int(math.floor(math.log2(min_n))) if min_n else 0,
+        )
         return res
 
     # ----------------------------------------------------------- public API
@@ -448,76 +473,204 @@ class IncrementalDedup:
         equality with a fresh full run over the post-change corpus. An
         edit = the conv_id in BOTH ``remove_conv_ids`` and
         ``new_turns``."""
-        import time
-
-        cfg, cat, spark = self.cfg, self.cat, self.spark
-        lo, hi = cfg.df_lo, cfg.df_hi
-        banding = cfg.candidate_source == "banding"
         man = self._check_state()
         self._sweep(man)
-        e_new = int(man["epoch"]) + 1
-        rpt: dict = {"epoch": e_new}
+        fold = _Fold(self, man, new_turns, remove_conv_ids, _append_only)
         # per-phase wall observability (delta-cost accounting lives and
         # dies by knowing WHERE an apply spends its time)
-        t_phases: dict[str, float] = {}
-        rpt["t_phases"] = t_phases
-        t_last = time.monotonic()
+        t_phases = fold.rpt["t_phases"]
+        for name in _PHASES:
+            t0 = time.monotonic()
+            getattr(fold, name)()
+            t_phases[name] = round(time.monotonic() - t0, 2)
+        return IncrementalResult(
+            verified_pairs=fold.verified,
+            clusters=fold.components,
+            deduped_turns=fold.deduped,
+            skew_report=fold.skew_report,
+            n_new_convs=fold.rpt["n_new_convs"],
+            n_affected_old=fold.n_affected,
+            n_resigned=fold.n_resigned,
+            n_removed_convs=fold.n_removed,
+            report=fold.rpt,
+        )
 
-        def tick(name: str) -> None:
-            nonlocal t_last
-            now = time.monotonic()
-            t_phases[name] = round(now - t_last, 2)
-            t_last = now
+    # -------------------------------------------------------------- compact
 
-        # every dir read below is immutable: the fold writes only names
-        # the committed manifest does not list
+    def compact(self) -> None:
+        """Rewrite every segmented table as a single resolved segment and
+        list no retired segment: bounds the per-apply segment scan (the
+        parquet stand-in for Iceberg snapshot compaction). Result tables
+        carry forward unchanged. Exactness-neutral — resolution before
+        and after reads identical rows."""
+        cat = self.cat
+        man = self._check_state()
+        self._sweep(man)
+        e = int(man["epoch"]) + 1
         retired_sets = self._retired(man, SEG_RETIRED_SETS)
         retired_sigs = self._retired(man, SEG_RETIRED_SIGS)
-
-        removed = self._as_conv_df(remove_conv_ids)
-        if removed is not None:
-            removed = eager_ckpt(removed.select("conv_id").dropDuplicates())
-        t_new = (
-            eager_ckpt(assemble_transcripts(new_turns))
-            if new_turns is not None else None
+        segs: dict[str, list[int]] = {}
+        conv_tables = [
+            (SEG_TURNS, retired_sets), (SEG_SETS, retired_sets),
+            (SEG_SIGS, retired_sigs),
+        ]
+        kv_tables = [(SEG_DF, ["shingle"], "df")]
+        if self.cfg.candidate_source == "banding":
+            conv_tables.append((SEG_BANDS, retired_sigs))
+            kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
+                              "bucket_size"))
+        for base, retired in conv_tables:
+            cat.write(f"{base}__s{e}", self._resolve_conv(man, base, retired))
+            segs[base] = [e]
+        for base, keys, val in kv_tables:
+            cat.write(f"{base}__s{e}", self._resolve_kv(man, base, keys, val))
+            segs[base] = [e]
+        self._commit_manifest(
+            e, segs, man["results"], int(man.get("min_stratum", 0))
         )
 
+
+class _Fold:
+    """One :meth:`IncrementalDedup.apply`: a method per phase, run in
+    ``_PHASES`` order, and an attribute per table the phases hand on.
+
+    A phase that computes a state segment or a result table writes it
+    right there, under an epoch name the committed manifest does not
+    list, and later phases read the re-read: every table is materialized
+    once. Only the manifest commit in :meth:`fold` makes the writes
+    visible, so the order of the writes before it does not matter."""
+
+    def __init__(self, inc: IncrementalDedup, man: dict, new_turns,
+                 remove_conv_ids, append_only: bool):
+        self.inc, self.man = inc, man
+        self.cfg, self.cat = inc.cfg, inc.cat
+        self.new_turns, self.remove_conv_ids = new_turns, remove_conv_ids
+        self.append_only = append_only
+        self.banding = self.cfg.candidate_source == "banding"
+        self.e_new = int(man["epoch"]) + 1
+        self.rpt: dict = {"epoch": self.e_new, "t_phases": {}}
+        self.segs = {k: list(v) for k, v in man["segments"].items()}
+        self.results = dict(man["results"])
+        # every dir read below is immutable: the fold writes only names
+        # the committed manifest does not list
+        self.retired_sets = inc._retired(man, SEG_RETIRED_SETS)
+        self.retired_sigs = inc._retired(man, SEG_RETIRED_SIGS)
+        # no bucket size moved (and prefix mode has no buckets): the
+        # dropped-bucket report is unchanged
+        self.skew_report = inc._result(man, TBL_SKEW)
+
+    # ----------------------------------------------------------- helpers
+
+    def _conv(self, base: str, **kw) -> DataFrame:
+        """Current rows of a conv-keyed table at the committed epoch."""
+        retired = (
+            self.retired_sigs if base in (SEG_SIGS, SEG_BANDS)
+            else self.retired_sets
+        )
+        return self.inc._resolve_conv(self.man, base, retired, **kw)
+
+    def _write(self, base: str, df: DataFrame) -> tuple[DataFrame, int]:
+        """Write this fold's version of ``base``; return its re-read and
+        its row count, read from the file footers (no count job)."""
+        name = f"{base}__s{self.e_new}"
+        out = self.cat.write(name, df)
+        self.inc._reads[name] = out  # a later resolve reuses the re-read
+        return out, self.cat.rows(name)
+
+    def _segment(self, base: str, df: DataFrame) -> tuple[DataFrame, int]:
+        """This fold's segment of an append-only table. It is listed only
+        if it holds rows (the manifest list stays minimal); an empty one
+        is dropped again and a typed empty frame stands in for it."""
+        out, n = self._write(base, df)
+        if n:
+            self.segs.setdefault(base, []).append(self.e_new)
+            return out, n
+        self.cat.invalidate(f"{base}__s{self.e_new}")
+        return self.inc._empty(df.schema), 0
+
+    def _write_result(self, base: str, df: DataFrame) -> tuple[DataFrame, int]:
+        """This fold's version of a result table, listed even when empty."""
+        self.results[base] = self.e_new
+        return self._write(base, df)
+
+    # ------------------------------------------------------------ phases
+
+    def guards(self) -> None:
+        """Loud identity guards: removals must exist; additions must be
+        new conv_ids unless the same id is being removed in this apply
+        (an edit) — and append() never edits."""
+        ids = self.remove_conv_ids
+        empty_convs = self.inc._empty("conv_id string")
+        if ids is not None and not isinstance(ids, DataFrame):
+            ids = self.inc.spark.createDataFrame(
+                [(str(c),) for c in ids], "conv_id string"
+            )
+        self.removed = (
+            eager_ckpt(ids.select("conv_id").dropDuplicates())
+            if ids is not None else empty_convs
+        )
+        self.t_new = (
+            eager_ckpt(assemble_transcripts(self.new_turns))
+            if self.new_turns is not None else None
+        )
+        self.added_convs = (
+            self.t_new.select("conv_id") if self.t_new is not None
+            else empty_convs
+        )
         # one scan of the sets segments serves the guards AND the CC
         # node list (live conv ids are tiny — checkpoint, never rescan)
-        live_ids = eager_ckpt(
-            self._resolve_conv(man, SEG_SETS, retired_sets).select("conv_id")
-        )
-        self._guard_ids(live_ids, t_new, removed, _append_only)
-        n_removed = removed.count() if removed is not None else 0
-        n_new = t_new.count() if t_new is not None else 0
-        rpt["n_new_convs"], rpt["n_removed_convs"] = n_new, n_removed
-        tick("guards")
+        self.live_ids = eager_ckpt(self._conv(SEG_SETS).select("conv_id"))
+        self.n_removed = 0
+        if ids is not None:
+            self.n_removed, n_live = self.removed.join(
+                self.live_ids.withColumn("live", F.lit(1)), "conv_id", "left"
+            ).agg(F.count("*"), F.count("live")).first()
+            if n_live < self.n_removed:
+                raise ValueError(
+                    f"{self.n_removed - n_live} conv_ids in the removal batch"
+                    " do not exist in state — refusing a partial delete"
+                )
+        self.rpt["n_removed_convs"] = self.n_removed
+        if self.t_new is not None:
+            overlap = self.added_convs.join(self.live_ids, "conv_id", "left_semi")
+            if not self.append_only:
+                overlap = overlap.join(self.removed, "conv_id", "left_anti")
+            n = overlap.count()
+            if n:
+                raise ValueError(
+                    f"{n} conv_ids in the new batch already exist in state — "
+                    "append() is append-only; pass the ids in "
+                    "remove_conv_ids too (apply) to express an edit"
+                )
 
-        empty_convs = spark.createDataFrame([], "conv_id string")
-        removed_c = removed if removed is not None else empty_convs
-
-        # 1. UDF cost ∝ NEW characters only
-        if t_new is not None:
-            sets_new = eager_ckpt(shingling.shingle_sets(t_new, cfg))
+    def shingle_delta(self) -> None:
+        """df delta of the TOUCHED shingles; UDF cost ∝ NEW characters
+        only. Writes the new sets and turns and the retired-sets rows."""
+        df_add = df_sub = self.inc._empty("shingle long, df long")
+        self.sets_new = self.turns_new = None
+        n_new = 0
+        if self.t_new is not None:
+            self.sets_new, n_new = self._segment(
+                SEG_SETS, shingling.shingle_sets(self.t_new, self.cfg)
+            )
+            self.turns_new, _ = self._segment(SEG_TURNS, self.new_turns)
             df_add = shingling.shingle_document_frequency(
-                shingling.exploded_shingles(sets_new)
+                shingling.exploded_shingles(self.sets_new)
             )
-        else:
-            sets_new = None
-            df_add = spark.createDataFrame([], "shingle long, df long")
-        if removed is not None:
-            sets_removed = self._resolve_conv(
-                man, SEG_SETS, retired_sets, restrict=removed,
-                n_restrict=n_removed,
+        self.rpt["n_new_convs"] = n_new
+        if self.n_removed:
+            # one resolve of the removed convs' sets rows feeds both the
+            # df decrement and their retired-sets segment
+            sets_removed = self._conv(
+                SEG_SETS, restrict=self.removed, keep_epoch=True,
+                n_restrict=self.n_removed,
             )
+            self._segment(SEG_RETIRED_SETS, sets_removed.select(
+                "conv_id", F.col("__e").alias("seg_e")
+            ))
             df_sub = shingling.shingle_document_frequency(
                 shingling.exploded_shingles(sets_removed)
             )
-        else:
-            df_sub = spark.createDataFrame([], "shingle long, df long")
-
-        # 2. df delta for TOUCHED shingles only; old totals come from a
-        # shingle-restricted state read, never a full-corpus merge.
         # Net-zero rows (an edit removing and re-adding the same
         # shingle) are kept separately: their df is unchanged but the
         # re-sign lookup below still needs a state value for them.
@@ -530,67 +683,75 @@ class IncrementalDedup:
                  ).alias("d"),
             )
         )
-        delta = touched_all.filter(F.col("d") != 0)
-        zero_keys = touched_all.filter(F.col("d") == 0).select("shingle")
-        rpt["n_touched_shingles"] = delta.count()
-        tick("shingle_delta")
-        df_old_touched = self._resolve_kv(
-            man, SEG_DF, ["shingle"], "df", restrict=delta,
-            n_restrict=rpt["n_touched_shingles"],
-        )
-        merged_touched = eager_ckpt(
-            delta.join(df_old_touched.withColumnRenamed("df", "df_old"),
-                       "shingle", "left")
-            .select(
-                "shingle",
-                (F.coalesce("df_old", F.lit(0)) + F.col("d")).alias("df"),
-                F.coalesce("df_old", F.lit(0)).alias("df_old"),
-            )
-        )
+        self.delta = touched_all.filter(F.col("d") != 0)
+        self.zero_keys = touched_all.filter(F.col("d") == 0).select("shingle")
+        self.rpt["n_touched_shingles"] = self.delta.count()
 
-        # 3. band flips → affected OLD conversations. Only touched
-        # shingles can flip; membership probe is a semi-join of the
-        # (immutable-segment) set explode against the small flip list —
-        # columnar scan of the corpus, shuffle ∝ hits.
-        in_band = lambda c: F.col(c).between(F.lit(lo), F.lit(hi))  # noqa: E731
-        flipped = merged_touched.filter(
-            in_band("df") != in_band("df_old")
+    def df_merge(self) -> None:
+        """New df totals of the touched shingles, written as this fold's
+        df segment. Old totals come from a shingle-restricted state read,
+        never a full-corpus merge."""
+        delta = self.delta
+        df_old = self.inc._resolve_kv(
+            self.man, SEG_DF, ["shingle"], "df", restrict=delta,
+            n_restrict=self.rpt["n_touched_shingles"],
+        ).withColumnRenamed("df", "df_old")
+        self.df_touched, _ = self._segment(SEG_DF, delta.join(
+            df_old, "shingle", "left"
+        ).select(
+            "shingle", (F.coalesce("df_old", F.lit(0)) + F.col("d")).alias("df")
+        ))
+        # band flips: only touched shingles can flip, and their old df
+        # is the written total minus the delta
+        lo, hi = self.cfg.df_lo, self.cfg.df_hi
+        in_band = lambda c: c.between(F.lit(lo), F.lit(hi))  # noqa: E731
+        self.flipped = self.df_touched.join(delta, "shingle").filter(
+            in_band(F.col("df")) != in_band(F.col("df") - F.col("d"))
         ).select("shingle")
-        rpt["n_flipped_shingles"] = flipped.count()
-        tick("df_merge")
-        survivors_pre = self._resolve_conv(man, SEG_SETS, retired_sets).join(
-            removed_c, "conv_id", "left_anti"
+        self.rpt["n_flipped_shingles"] = self.flipped.count()
+
+    def affected_probe(self) -> None:
+        """Band flips → affected OLD conversations. The membership probe
+        is a semi-join of the (immutable-segment) set explode against the
+        small flip list — columnar scan of the corpus, shuffle ∝ hits."""
+        survivors_pre = self._conv(SEG_SETS).join(
+            self.removed, "conv_id", "left_anti"
         )
-        affected_old = eager_ckpt(
+        self.affected_old = eager_ckpt(
             shingling.exploded_shingles(survivors_pre)
             .join(
-                self._restrict_hint(flipped, rpt["n_flipped_shingles"]),
+                self.inc._restrict_hint(
+                    self.flipped, self.rpt["n_flipped_shingles"]
+                ),
                 "shingle", "left_semi",
             )
             .select("conv_id")
             .dropDuplicates()
         )
-        n_affected = affected_old.count()
-        rpt["n_affected_old"] = n_affected
-        tick("affected_probe")
+        self.n_affected = self.affected_old.count()
+        self.rpt["n_affected_old"] = self.n_affected
 
-        # 4. re-sign (affected ∪ new). The df lookup comes from the
-        # delta merge for every TOUCHED shingle (already computed — no
-        # second state probe for the new batch's millions of shingles);
-        # only the affected convs' untouched shingles plus net-zero edit
-        # shingles — both ∝ affected, typically tiny — read state.
+    def resign(self) -> None:
+        """Re-sign (affected ∪ new), written as this fold's sigs segment,
+        plus the retired-sigs rows of the affected and removed convs.
+
+        The df lookup comes from the delta merge for every TOUCHED
+        shingle (already computed — no second state probe for the new
+        batch's millions of shingles); only the affected convs'
+        untouched shingles plus net-zero edit shingles — both ∝
+        affected, typically tiny — read state."""
+        inc, cfg, man = self.inc, self.cfg, self.man
         # NOT eagerly checkpointed: in the worst case (corpus-wide df
         # drift) affected ≈ everything, and materializing the full sets
         # table costs more than letting the two consumers below re-scan
         # the immutable segments through the broadcast-restricted plan
-        affected_sets = self._resolve_conv(
-            man, SEG_SETS, retired_sets, restrict=affected_old,
-            n_restrict=n_affected,
+        affected_sets = self._conv(
+            SEG_SETS, restrict=self.affected_old, n_restrict=self.n_affected,
         ).select("conv_id", "shingles")
         resign_sets = affected_sets
-        if sets_new is not None:
+        if self.sets_new is not None:
             resign_sets = resign_sets.unionByName(
-                sets_new.select("conv_id", "shingles")
+                self.sets_new.select("conv_id", "shingles")
             )
         resign_expl = resign_sets.select(
             "conv_id", F.explode("shingles").alias("shingle")
@@ -601,13 +762,11 @@ class IncrementalDedup:
         # needed anyway and building a corpus-sized restrict set costs
         # more than one full resolve. df_probe_regime ("auto" | restricted"
         # | "full") pins the choice — both branches are equality-tested.
-        n_live = live_ids.count()
-        delta_regime = (
-            self.df_probe_regime == "restricted"
-            or (
-                self.df_probe_regime == "auto"
-                and n_affected <= max(1000, n_live // 5)
-            )
+        # (the live count is taken only when more than 1000 re-sign)
+        delta_regime = inc.df_probe_regime == "restricted" or (
+            inc.df_probe_regime == "auto"
+            and (self.n_affected <= 1000
+                 or self.n_affected <= self.live_ids.count() // 5)
         )
         if delta_regime:
             # delta regime: the state probe is restricted to the
@@ -615,11 +774,11 @@ class IncrementalDedup:
             untouched_keys = eager_ckpt(
                 affected_sets.select(F.explode("shingles").alias("shingle"))
                 .dropDuplicates()
-                .unionByName(zero_keys)
-                .join(delta, "shingle", "left_anti")
+                .unionByName(self.zero_keys)
+                .join(self.delta, "shingle", "left_anti")
                 .dropDuplicates()
             )
-            state_part = self._resolve_kv(
+            state_part = inc._resolve_kv(
                 man, SEG_DF, ["shingle"], "df", restrict=untouched_keys,
                 n_restrict=untouched_keys.count(),
             )
@@ -628,200 +787,136 @@ class IncrementalDedup:
             # re-sign): most state keys are needed anyway, so one full
             # resolve beats building and probing a corpus-sized
             # restrict set; touched keys defer to the merged delta
-            state_part = self._resolve_kv(
+            state_part = inc._resolve_kv(
                 man, SEG_DF, ["shingle"], "df"
             ).join(
-                self._restrict_hint(
-                    delta.select("shingle"), rpt["n_touched_shingles"]
+                inc._restrict_hint(
+                    self.delta.select("shingle"),
+                    self.rpt["n_touched_shingles"],
                 ),
                 "shingle", "left_anti",
             )
-        df_for_resign = merged_touched.select("shingle", "df").unionByName(
-            state_part
-        )
         resign_informative = shingling.informative_shingle_sets(
-            resign_expl, df_for_resign, lo, hi
+            resign_expl, self.df_touched.unionByName(state_part),
+            cfg.df_lo, cfg.df_hi,
         )
-        resigned = eager_ckpt(lsh.compute_signatures(resign_informative, cfg))
-        n_resigned = resigned.count()
-        rpt["n_resigned"] = n_resigned
+        self.resigned, self.n_resigned = self._segment(
+            SEG_SIGS, lsh.compute_signatures(resign_informative, cfg)
+        )
+        self.rpt["n_resigned"] = self.n_resigned
         # smallest signed stratum after this fold: the manifest's next
         # min_stratum and the prefix probe floor of THIS apply — a new
         # doc smaller than every historical one lowers the meet stratum
         # of its pairs, and the probe side must emit down to it
-        min_strat = int(man.get("min_stratum", 0))
-        new_min = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
+        self.min_strat = int(man.get("min_stratum", 0))
+        new_min = self.resigned.agg(
+            F.min("n_shingles").alias("m")
+        ).collect()[0]["m"]
         if new_min:
-            min_strat = min(min_strat, int(math.floor(math.log2(new_min))))
-        tick("resign")
-
-        # convs whose sig-cadence rows retire: re-signed olds + removed
-        sig_gone = affected_old.unionByName(removed_c).dropDuplicates()
-        sigs_retired_rows = self._resolve_conv(
-            man, SEG_SIGS, retired_sigs, restrict=sig_gone, keep_epoch=True,
-            n_restrict=n_affected + n_removed,
-        ).select("conv_id", F.col("__e").alias("seg_e"))
-
-        added_convs = (
-            t_new.select("conv_id") if t_new is not None else empty_convs
-        )
-        if banding:
-            changed, cand_changed, sz_touched, skew_new, rpt_b = (
-                self._banding_candidates(
-                    man, retired_sigs, affected_old, added_convs, removed_c,
-                    sig_gone, resigned, e_new,
-                )
+            self.min_strat = min(
+                self.min_strat, int(math.floor(math.log2(new_min)))
             )
-            rpt.update(rpt_b)
+
+        # convs whose sig-cadence rows retire: re-signed olds + removed.
+        # The written segment also stands for those convs in every later
+        # anti-join against old sig and band rows: a conv with no live
+        # sig row has no live band row either.
+        self.sig_gone, self.n_gone = inc._empty("conv_id string"), 0
+        if self.n_affected + self.n_removed:
+            gone, self.n_gone = self._segment(SEG_RETIRED_SIGS, self._conv(
+                SEG_SIGS,
+                restrict=self.affected_old.unionByName(self.removed),
+                keep_epoch=True, n_restrict=self.n_affected + self.n_removed,
+            ).select("conv_id", F.col("__e").alias("seg_e")))
+            self.sig_gone = gone.select("conv_id")
+
+    def candidates(self) -> None:
+        """Candidate pairs with at least one changed conv."""
+        if self.banding:
+            self._banding_candidates()
         else:
-            changed = eager_ckpt(
-                affected_old.unionByName(added_convs).dropDuplicates()
+            self.changed = eager_ckpt(
+                self.affected_old.unionByName(self.added_convs)
+                .dropDuplicates()
             )
-            cand_changed = self._prefix_candidates(
-                man, retired_sigs, sigs_retired_rows, resigned, changed,
-                min_strat,
-            )
+            self.rpt["n_changed_convs"] = self.changed.count()
+            self.cand = self._prefix_candidates()
+        self.cand = eager_ckpt(self.cand)
+        self.rpt["n_candidate_pairs"] = self.cand.count()
 
-        cand_changed = eager_ckpt(cand_changed)
-        rpt["n_changed_convs"] = changed.count()
-        rpt["n_candidate_pairs"] = cand_changed.count()
-        tick("candidates")
-
-        # 5. verify only changed-touching candidates; signatures come
-        # from a conv-restricted state read spliced with the re-signed
+    def verify(self) -> None:
+        """Verify only changed-touching candidates, then splice them into
+        the kept old pairs: this fold's verified-pairs version. Signatures
+        come from a conv-restricted state read spliced with the
+        re-signed."""
+        cand = self.cand
         pair_convs = eager_ckpt(
-            cand_changed.select(F.col("conv_a").alias("conv_id"))
-            .unionByName(cand_changed.select(F.col("conv_b").alias("conv_id")))
+            cand.select(F.col("conv_a").alias("conv_id"))
+            .unionByName(cand.select(F.col("conv_b").alias("conv_id")))
             .dropDuplicates()
         )
-        sigs_lookup = self._resolve_conv(
-            man, SEG_SIGS, retired_sigs, restrict=pair_convs,
-            n_restrict=pair_convs.count(),
-        ).join(sig_gone, "conv_id", "left_anti").unionByName(
-            resigned.join(pair_convs, "conv_id", "left_semi")
+        sigs_lookup = self._conv(
+            SEG_SIGS, restrict=pair_convs, n_restrict=pair_convs.count(),
+        ).join(self.sig_gone, "conv_id", "left_anti").unionByName(
+            self.resigned.join(pair_convs, "conv_id", "left_semi")
         )
-        verified_new = verify.verify_pairs(cand_changed, sigs_lookup, cfg)
-        drop_pairs = changed.unionByName(removed_c).dropDuplicates()
-        kept_old = self._result(man, TBL_VERIFIED).join(
+        verified_new = verify.verify_pairs(cand, sigs_lookup, self.cfg)
+        drop_pairs = self.changed.unionByName(self.removed).dropDuplicates()
+        kept_old = self.inc._result(self.man, TBL_VERIFIED).join(
             drop_pairs.select(F.col("conv_id").alias("conv_a")),
             "conv_a", "left_anti",
         ).join(
             drop_pairs.select(F.col("conv_id").alias("conv_b")),
             "conv_b", "left_anti",
         )
-        verified_all = eager_ckpt(
+        self.verified, self.rpt["n_verified_pairs"] = self._write_result(
+            TBL_VERIFIED,
             kept_old.unionByName(verified_new).dropDuplicates(
                 ["conv_a", "conv_b"]
-            )
+            ),
         )
-        rpt["n_verified_pairs"] = verified_all.count()
-        tick("verify")
 
-        # 6. clusters + emit over the post-change corpus (edges are
-        # small; emit reads immutable turn segments lazily). Nodes come
-        # from the checkpointed live-id list — no segment rescan.
-        nodes = live_ids.join(removed_c, "conv_id", "left_anti").unionByName(
-            added_convs
-        ).dropDuplicates()
-        clusters = eager_ckpt(
+    def clusters(self) -> None:
+        """Clusters + emit over the post-change corpus (edges are small;
+        emit reads immutable turn segments lazily). Nodes come from the
+        checkpointed live-id list — no segment rescan."""
+        nodes = self.live_ids.join(
+            self.removed, "conv_id", "left_anti"
+        ).unionByName(self.added_convs).dropDuplicates()
+        self.components, _ = self._write_result(
+            TBL_CLUSTERS,
             connected_components(
-                nodes, verified_all.select("conv_a", "conv_b"),
-                cfg.cc_max_iters,
-            )
+                nodes, self.verified.select("conv_a", "conv_b"),
+                self.cfg.cc_max_iters,
+            ),
         )
-        tick("clusters")
-        turns_post = self._resolve_conv(
-            man, SEG_TURNS, retired_sets
-        ).join(removed_c, "conv_id", "left_anti")
-        if new_turns is not None:
-            turns_post = turns_post.unionByName(new_turns)
-        deduped = DedupPipeline._emit(turns_post, clusters)
+        turns_post = self._conv(SEG_TURNS).join(
+            self.removed, "conv_id", "left_anti"
+        )
+        if self.turns_new is not None:
+            turns_post = turns_post.unionByName(self.turns_new)
+        self.deduped = DedupPipeline._emit(turns_post, self.components)
 
-        # ------------------------------------------------------------ fold
-        # stale batch stages go FIRST (no ordering leaves a config-
-        # fingerprint-valid batch stage readable against post-fold
-        # state), then every state write under a name the committed
-        # manifest does not list, then the manifest commit — the single
-        # atomic commit point.
+    def fold(self) -> None:
+        """Invalidate the stale batch stages, commit the manifest — the
+        single atomic commit point — then auto-compact."""
+        # stale batch stages go BEFORE the commit: no ordering leaves a
+        # config-fingerprint-valid batch stage readable against
+        # post-fold state
         for stale in _BATCH_STAGES:
-            cat.invalidate(stale)
-
-        new_segs = {k: list(v) for k, v in man["segments"].items()}
-        results = dict(man["results"])
-
-        def seg_write(base: str, df: DataFrame) -> None:
-            cat.write(f"{base}__s{e_new}", df)
-            new_segs[base] = new_segs.get(base, []) + [e_new]
-
-        def result_write(base: str, df: DataFrame) -> DataFrame:
-            results[base] = e_new
-            return cat.write(f"{base}__s{e_new}", df)
-
-        # empty deltas write NO segment (the manifest list stays
-        # minimal); the counts were already taken for the report
-        if sets_new is not None:
-            seg_write(SEG_SETS, sets_new)
-            seg_write(SEG_TURNS, new_turns)
-        if n_resigned:
-            seg_write(SEG_SIGS, resigned)
-        if rpt["n_touched_shingles"]:
-            seg_write(SEG_DF, merged_touched.select("shingle", "df"))
-        if banding:
-            if n_resigned:
-                seg_write(SEG_BANDS, lsh.explode_bands(resigned))
-            if rpt["n_touched_buckets"]:
-                seg_write(SEG_SIZES, sz_touched)
-        if n_removed:
-            seg_write(SEG_RETIRED_SETS, self._resolve_conv(
-                man, SEG_SETS, retired_sets, restrict=removed,
-                keep_epoch=True, n_restrict=n_removed,
-            ).select("conv_id", F.col("__e").alias("seg_e")))
-        if n_affected + n_removed:
-            # zero rows when none of these convs ever signed: the
-            # segment still reads back typed
-            seg_write(SEG_RETIRED_SIGS, sigs_retired_rows)
-        result_write(TBL_VERIFIED, verified_all)
-        result_write(TBL_CLUSTERS, clusters)
-        if banding and rpt["n_touched_buckets"]:
-            skew_report = result_write(TBL_SKEW, skew_new)
-        else:
-            # no bucket size moved (and prefix mode has no buckets): the
-            # dropped-bucket report is unchanged
-            skew_report = self._result(man, TBL_SKEW)
-
-        self._commit_manifest({
-            "fingerprint": cat.fingerprint,
-            "epoch": e_new,
-            "segments": new_segs,
-            "results": results,
-            "min_stratum": min_strat,
-        })
-        tick("fold")
-
+            self.cat.invalidate(stale)
+        inc = self.inc
+        inc._commit_manifest(self.e_new, self.segs, self.results, self.min_strat)
         if (
-            self.auto_compact_segments
-            and max(len(v) for v in new_segs.values()) > self.auto_compact_segments
+            inc.auto_compact_segments
+            and max(len(v) for v in self.segs.values())
+            > inc.auto_compact_segments
         ):
-            self.compact()
+            inc.compact()
 
-        return IncrementalResult(
-            verified_pairs=verified_all,
-            clusters=clusters,
-            deduped_turns=deduped,
-            skew_report=skew_report,
-            n_new_convs=n_new,
-            n_affected_old=n_affected,
-            n_resigned=n_resigned,
-            n_removed_convs=n_removed,
-            report=rpt,
-        )
+    # --------------------------------------------------- candidate paths
 
-    # ------------------------------------------------------ candidate paths
-
-    def _banding_candidates(
-        self, man, retired_sigs, affected_old, added_convs, removed_c,
-        sig_gone, resigned, e_new,
-    ):
+    def _banding_candidates(self) -> None:
         """One-sided three-tier band join over bucket-restricted state.
 
         Bucket sizes are READ from durable state and updated with delta
@@ -831,17 +926,17 @@ class IncrementalDedup:
         threshold changes outcomes for unchanged convs inside it, so
         every member of a drop-tier-crossing bucket is promoted into the
         changed set (both crossing directions: an append can push a
-        bucket over, a removal can pull one back under)."""
-        cfg, cat, spark = self.cfg, self.cat, self.spark
-        rpt: dict = {}
+        bucket over, a removal can pull one back under). Writes the new
+        band rows, the touched bucket sizes and, when a size moved, the
+        dropped-bucket report."""
+        inc, cfg, man, rpt = self.inc, self.cfg, self.man, self.rpt
         bkey = ["band_id", "band_hash"]
 
-        bands_added = eager_ckpt(lsh.explode_bands(resigned))
-        sig_gone = eager_ckpt(sig_gone)
-        n_gone = sig_gone.count()
-        bands_gone = self._resolve_conv(
-            man, SEG_BANDS, retired_sigs, restrict=sig_gone,
-            n_restrict=n_gone,
+        bands_added = lsh.explode_bands(self.resigned)
+        if self.n_resigned:
+            bands_added, _ = self._segment(SEG_BANDS, bands_added)
+        bands_gone = self._conv(
+            SEG_BANDS, restrict=self.sig_gone, n_restrict=self.n_gone,
         )
         sz_delta = eager_ckpt(
             lsh.band_bucket_sizes(bands_added)
@@ -859,38 +954,34 @@ class IncrementalDedup:
             .filter(F.col("d") != 0)
         )
         rpt["n_touched_buckets"] = sz_delta.count()
-        sz_old_touched = self._resolve_kv(
+        sz_old = inc._resolve_kv(
             man, SEG_SIZES, bkey, "bucket_size", restrict=sz_delta,
             n_restrict=rpt["n_touched_buckets"],
-        )
-        sz_touched = eager_ckpt(
-            sz_delta.join(
-                sz_old_touched.withColumnRenamed("bucket_size", "sz_old"),
-                bkey, "left",
-            )
-            .select(
-                *bkey,
-                (F.coalesce("sz_old", F.lit(0)) + F.col("d"))
-                .alias("bucket_size"),
-                F.coalesce("sz_old", F.lit(0)).alias("sz_old"),
-            )
-        )
+        ).withColumnRenamed("bucket_size", "sz_old")
+        sz_touched, _ = self._segment(SEG_SIZES, sz_delta.join(
+            sz_old, bkey, "left"
+        ).select(
+            *bkey,
+            (F.coalesce("sz_old", F.lit(0)) + F.col("d")).alias("bucket_size"),
+        ))
 
+        # a touched bucket's old size is its written size minus the delta
         drop = cfg.max_salted_bucket
         crossing = eager_ckpt(
-            sz_touched.filter(
-                (F.col("sz_old") > drop) != (F.col("bucket_size") > drop)
+            sz_touched.join(sz_delta, bkey).filter(
+                (F.col("bucket_size") - F.col("d") > drop)
+                != (F.col("bucket_size") > drop)
             ).select(*bkey)
         )
         rpt["n_tier_crossing_buckets"] = crossing.count()
         # members (old index ∪ new rows) of crossing buckets, survivors only
         old_members = (
-            self._seg_union(man, SEG_BANDS)
+            inc._seg_union(man, SEG_BANDS)
             .join(
-                self._restrict_hint(crossing, rpt["n_tier_crossing_buckets"]),
+                inc._restrict_hint(crossing, rpt["n_tier_crossing_buckets"]),
                 bkey, "left_semi",
             )
-            .join(retired_sigs, ["conv_id", "__e"], "left_anti")
+            .join(self.retired_sigs, ["conv_id", "__e"], "left_anti")
             .select("conv_id")
         )
         tier_changed = (
@@ -898,10 +989,10 @@ class IncrementalDedup:
                 bands_added.join(crossing, bkey, "left_semi").select("conv_id")
             )
             .dropDuplicates()
-            .join(removed_c, "conv_id", "left_anti")
+            .join(self.removed, "conv_id", "left_anti")
         )
-        changed = eager_ckpt(
-            affected_old.unionByName(added_convs)
+        self.changed = eager_ckpt(
+            self.affected_old.unionByName(self.added_convs)
             .unionByName(tier_changed)
             .dropDuplicates()
         )
@@ -909,16 +1000,15 @@ class IncrementalDedup:
         # post-apply band index restricted to the buckets changed convs
         # occupy: tier decisions come from GLOBAL (state-maintained)
         # sizes, pair volume from changed convs' bucket membership
-        n_changed = changed.count()
+        n_changed = self.changed.count()
         rpt["n_changed_convs"] = n_changed
-        bands_post_all = self._resolve_conv(
-            man, SEG_BANDS, retired_sigs
-        ).join(
-            self._restrict_hint(sig_gone, n_gone), "conv_id", "left_anti"
+        bands_post_all = self._conv(SEG_BANDS).join(
+            inc._restrict_hint(self.sig_gone, self.n_gone),
+            "conv_id", "left_anti",
         ).unionByName(bands_added)
         changed_buckets = eager_ckpt(
             bands_post_all.join(
-                self._restrict_hint(changed, n_changed),
+                inc._restrict_hint(self.changed, n_changed),
                 "conv_id", "left_semi",
             )
             .select(*bkey)
@@ -926,34 +1016,31 @@ class IncrementalDedup:
         )
         rpt["n_changed_buckets"] = changed_buckets.count()
         bands_restricted = bands_post_all.join(
-            self._restrict_hint(changed_buckets, rpt["n_changed_buckets"]),
+            inc._restrict_hint(changed_buckets, rpt["n_changed_buckets"]),
             bkey, "left_semi",
         )
-        sizes_restricted = self._resolve_kv(
-            man, SEG_SIZES, bkey, "bucket_size",
-            restrict=changed_buckets,
-            extra=sz_touched.select(*bkey, "bucket_size"), extra_epoch=e_new,
-            n_restrict=rpt["n_changed_buckets"],
+        # sizes after this fold: its segment list holds the touched
+        # sizes written above
+        sizes_restricted = inc._resolve_kv(
+            {"segments": self.segs}, SEG_SIZES, bkey, "bucket_size",
+            restrict=changed_buckets, n_restrict=rpt["n_changed_buckets"],
         )
-        cand_changed = lsh.candidate_pairs(
-            bands_restricted, sizes_restricted, cfg, left_convs=changed
+        self.cand = lsh.candidate_pairs(
+            bands_restricted, sizes_restricted, cfg, left_convs=self.changed
         )
 
         # dropped-bucket report maintained incrementally ("dropped,
         # never silently"): untouched buckets keep their report status
-        skew_new = self._result(man, TBL_SKEW).join(
-            sz_delta, bkey, "left_anti"
-        ).unionByName(
-            sz_touched.filter(F.col("bucket_size") > drop)
-            .select(*bkey, "bucket_size")
-        )
-        return changed, cand_changed, sz_touched.select(
-            *bkey, "bucket_size"
-        ), skew_new, rpt
+        if rpt["n_touched_buckets"]:
+            self.skew_report, _ = self._write_result(
+                TBL_SKEW,
+                self.skew_report.join(sz_delta, bkey, "left_anti").unionByName(
+                    sz_touched.filter(F.col("bucket_size") > drop)
+                    .select(*bkey, "bucket_size")
+                ),
+            )
 
-    def _prefix_candidates(
-        self, man, retired_sigs, sigs_retired_rows, resigned, changed, s_min,
-    ) -> DataFrame:
+    def _prefix_candidates(self) -> DataFrame:
         """One-sided exact prefix-filter candidates (AllPairs/PPJoin
         family) over the informative shingle sets, under ascending
         shingle-VALUE order.
@@ -974,7 +1061,7 @@ class IncrementalDedup:
         side is small AQE turns it into a broadcast probe."""
         from fractions import Fraction
 
-        cfg = self.cfg
+        cfg, s_min = self.cfg, self.min_strat
         frac = Fraction(cfg.verify_containment).limit_denominator(1_000_000)
         t_num, t_den = frac.numerator, frac.denominator
         p1 = 1 if cfg.containment_plus1 else 0
@@ -1012,11 +1099,11 @@ class IncrementalDedup:
                 )
             )
 
-        sigs_post = self._resolve_conv(man, SEG_SIGS, retired_sigs).join(
-            sigs_retired_rows.select("conv_id"), "conv_id", "left_anti"
-        ).unionByName(resigned.select(*self._sig_cols()))
+        sigs_post = self._conv(SEG_SIGS).join(
+            self.sig_gone, "conv_id", "left_anti"
+        ).unionByName(self.resigned)
         a = eager_ckpt(
-            emit(resigned.join(changed, "conv_id", "left_semi"))
+            emit(self.resigned.join(self.changed, "conv_id", "left_semi"))
         ).select(
             F.col("conv_id").alias("conv_a"), F.col("s_own").alias("sa"),
             F.col("rem").alias("rem_a"), "s", "c_s", "tok",
@@ -1048,88 +1135,3 @@ class IncrementalDedup:
             .dropDuplicates(["conv_a", "conv_b"])
         )
         return pairs
-
-    # -------------------------------------------------------------- compact
-
-    def compact(self) -> None:
-        """Rewrite every segmented table as a single resolved segment and
-        list no retired segment: bounds the per-apply segment scan (the
-        parquet stand-in for Iceberg snapshot compaction). Result tables
-        carry forward unchanged. Exactness-neutral — resolution before
-        and after reads identical rows."""
-        cat = self.cat
-        man = self._check_state()
-        self._sweep(man)
-        e = int(man["epoch"]) + 1
-        retired_sets = self._retired(man, SEG_RETIRED_SETS)
-        retired_sigs = self._retired(man, SEG_RETIRED_SIGS)
-        segs: dict[str, list[int]] = {}
-        conv_tables = [
-            (SEG_TURNS, retired_sets), (SEG_SETS, retired_sets),
-            (SEG_SIGS, retired_sigs),
-        ]
-        kv_tables = [(SEG_DF, ["shingle"], "df")]
-        if self.cfg.candidate_source == "banding":
-            conv_tables.append((SEG_BANDS, retired_sigs))
-            kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
-                              "bucket_size"))
-        for base, retired in conv_tables:
-            cat.write(f"{base}__s{e}", self._resolve_conv(man, base, retired))
-            segs[base] = [e]
-        for base, keys, val in kv_tables:
-            cat.write(f"{base}__s{e}", self._resolve_kv(man, base, keys, val))
-            segs[base] = [e]
-        self._commit_manifest({
-            "fingerprint": cat.fingerprint,
-            "epoch": e,
-            "segments": segs,
-            "results": man["results"],
-            "min_stratum": int(man.get("min_stratum", 0)),
-        })
-
-    # -------------------------------------------------------------- helpers
-
-    @staticmethod
-    def _sig_cols() -> list[str]:
-        return ["conv_id", "shingles", "n_shingles", "minhash", "simhash",
-                "bands"]
-
-    def _as_conv_df(self, conv_ids) -> DataFrame | None:
-        if conv_ids is None:
-            return None
-        if isinstance(conv_ids, DataFrame):
-            return conv_ids
-        return self.spark.createDataFrame(
-            [(str(c),) for c in conv_ids], "conv_id string"
-        )
-
-    def _guard_ids(
-        self,
-        live_ids: DataFrame,
-        t_new: DataFrame | None,
-        removed: DataFrame | None,
-        append_only: bool,
-    ) -> None:
-        """Loud identity guards: removals must exist; additions must be
-        new conv_ids unless the same id is being removed in this apply
-        (an edit) — and append() never edits."""
-        if removed is not None:
-            missing = removed.join(live_ids, "conv_id", "left_anti").count()
-            if missing:
-                raise ValueError(
-                    f"{missing} conv_ids in the removal batch do not exist "
-                    "in state — refusing a partial delete"
-                )
-        if t_new is not None:
-            overlap = t_new.select("conv_id").join(
-                live_ids, "conv_id", "left_semi"
-            )
-            if removed is not None and not append_only:
-                overlap = overlap.join(removed, "conv_id", "left_anti")
-            n = overlap.count()
-            if n:
-                raise ValueError(
-                    f"{n} conv_ids in the new batch already exist in state — "
-                    "append() is append-only; pass the ids in "
-                    "remove_conv_ids too (apply) to express an edit"
-                )

@@ -537,7 +537,7 @@ class TestFoldAtomicity:
             writes.clear()
             inc.cat.write = write
 
-        def crash_in_commit(man):
+        def crash_in_commit(*_):
             with open(man_path + ".__tmp__", "w") as f:
                 f.write("{")  # half-written temp file, never renamed
             raise Crash("commit")
@@ -659,6 +659,11 @@ class TestDeltaProportionalReport:
                   "n_touched_buckets", "n_changed_buckets",
                   "n_candidate_pairs"):
             assert k in rpt, k
+        # perfbench's incremental.<phase>_s metrics read these names
+        assert list(rpt["t_phases"]) == [
+            "guards", "shingle_delta", "df_merge", "affected_probe",
+            "resign", "candidates", "verify", "clusters", "fold",
+        ]
         # delta-proportionality on a low-overlap corpus: nothing old is
         # touched, the changed set IS the appended batch
         assert rpt["n_affected_old"] == 0

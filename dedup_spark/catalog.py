@@ -18,7 +18,8 @@ Backends (``table_format``):
 * ``"parquet"`` (default, and the only backend exercised in this
   sandbox — no Iceberg runtime jars are installed here): plain parquet
   directories under the warehouse path with atomic replace via
-  temp-dir rename and a JSON sidecar carrying the config fingerprint.
+  temp-dir rename and a JSON sidecar carrying the config fingerprint
+  and the table's schema (reads pass it instead of inferring it).
 * ``"iceberg"``: real Iceberg tables via ``df.writeTo(ns.name)
   .using("iceberg").createOrReplace()`` with the fingerprint stored in
   table properties. Requires an Iceberg catalog configured on the
@@ -42,6 +43,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -117,19 +119,38 @@ class StageCatalog:
                 for r in self.spark.sql(f"SHOW TBLPROPERTIES {q}").collect()
             }
             return props.get("dedup.fingerprint") == self.fingerprint
-        meta = self._meta_path(name)
-        if not (os.path.isdir(self._path(name)) and os.path.isfile(meta)):
-            return False
+        return (
+            os.path.isdir(self._path(name))
+            and self._sidecar(name).get("fingerprint") == self.fingerprint
+        )
+
+    def _sidecar(self, name: str) -> dict:
+        """The parquet table's JSON sidecar; empty when missing or torn."""
         try:
-            with open(meta) as f:
-                return json.load(f).get("fingerprint") == self.fingerprint
+            with open(self._meta_path(name)) as f:
+                return json.load(f)
         except (json.JSONDecodeError, OSError):
-            return False
+            return {}
+
+    def _stamp(self, name: str, schema: dict | None) -> None:
+        """Write the sidecar: fingerprint, stage name and the table's
+        schema, which lets :meth:`read` skip schema inference."""
+        meta = {"fingerprint": self.fingerprint, "stage": name}
+        if schema is not None:
+            meta["schema"] = schema
+        with open(self._meta_path(name), "w") as f:
+            json.dump(meta, f)
 
     def read(self, name: str) -> DataFrame:
         if self.table_format == "iceberg":
             return self.spark.read.table(self._qualified(name))
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read
+        schema = self._sidecar(name).get("schema")
+        if schema is not None:
+            # a plain parquet read infers the schema with a Spark job
+            # (one per read: every write's re-read, every state probe)
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(self._path(name))
 
     def write(self, name: str, df: DataFrame) -> DataFrame:
         if self.table_format == "iceberg":
@@ -148,8 +169,7 @@ class StageCatalog:
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
-        with open(self._meta_path(name), "w") as f:
-            json.dump({"fingerprint": self.fingerprint, "stage": name}, f)
+        self._stamp(name, df.schema.jsonValue())
         return self.read(name)
 
     def adopt(self, src: str, dst: str) -> None:
@@ -173,8 +193,7 @@ class StageCatalog:
         if os.path.isdir(dst_path):
             shutil.rmtree(dst_path)
         os.replace(self._path(src), dst_path)
-        with open(self._meta_path(dst), "w") as f:
-            json.dump({"fingerprint": self.fingerprint, "stage": dst}, f)
+        self._stamp(dst, self._sidecar(src).get("schema"))
         src_meta = self._meta_path(src)
         if os.path.isfile(src_meta):
             os.remove(src_meta)

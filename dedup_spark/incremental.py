@@ -283,7 +283,8 @@ class IncrementalDedup:
     def _read(self, name: str) -> DataFrame:
         """A state dir, read once per fold or compaction (a fold's own
         writes enter as their re-reads): a dir never changes while it is
-        listed, and every parquet read runs a schema job."""
+        listed, and every read lists its files (and, for a dir whose
+        sidecar holds no schema, runs a schema-inference job)."""
         if name not in self._reads:
             self._reads[name] = self.cat.read(name)
         return self._reads[name]

@@ -81,6 +81,32 @@ def test_partition_lineage_and_run_report(spark, tmp_path):
     assert sum(p["rows"] for p in st["partition_lineage"]) == 100
 
 
+def test_read_takes_schema_from_sidecar(spark, tmp_path):
+    """The sidecar carries the table's schema, so a read (every write's
+    re-read, every incremental state probe) submits no schema-inference
+    Spark job; an adopted table keeps it."""
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    cat = StageCatalog(spark, str(tmp_path), "fp1")
+    df = spark.range(6).select(
+        F.col("id").cast("string").alias("conv_id"),
+        F.array("id", F.lit(7).cast("long")).alias("shingles"),
+        F.col("id").alias("n"),
+    )
+    cat.write("t", df)
+    cat.adopt("t", "u")
+    inferred = spark.read.parquet(str(tmp_path / "u")).schema
+    before = last_job()
+    out = cat.read("u")
+    assert last_job() == before
+    assert out.schema == inferred
+    assert sorted(out.collect()) == sorted(df.collect())
+
+
 def test_iceberg_backend_requires_real_catalog(spark, tmp_path):
     """The iceberg branch never silently fakes capability: without an
     Iceberg catalog configured on the session it refuses to construct."""

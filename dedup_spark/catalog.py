@@ -134,12 +134,11 @@ class StageCatalog:
 
     def _stamp(self, name: str, schema: dict | None) -> None:
         """Write the sidecar: fingerprint, stage name and the table's
-        schema, which lets :meth:`read` skip schema inference."""
-        meta = {"fingerprint": self.fingerprint, "stage": name}
-        if schema is not None:
-            meta["schema"] = schema
+        schema (None when unknown), which :meth:`read` passes instead of
+        inferring it."""
         with open(self._meta_path(name), "w") as f:
-            json.dump(meta, f)
+            json.dump({"fingerprint": self.fingerprint, "stage": name,
+                       "schema": schema}, f)
 
     def read(self, name: str) -> DataFrame:
         if self.table_format == "iceberg":

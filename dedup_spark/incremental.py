@@ -198,7 +198,6 @@ class IncrementalDedup:
         #: df state-probe regime for re-sign lookups: "auto" picks by
         #: affected fraction; "restricted"/"full" pin a branch (tests)
         self.df_probe_regime = "auto"
-        self._reads: dict[str, DataFrame] = {}
 
     # ------------------------------------------------------------- manifest
 
@@ -267,7 +266,6 @@ class IncrementalDedup:
         crashed fold or compaction, superseded result versions, segments
         compaction replaced. Superseded dirs thus live until the next
         fold, which keeps the previous result's lazy frames readable."""
-        self._reads.clear()
         listed = self._listed(man)
         keep = {_MANIFEST} | listed | {f"_{n}.meta.json" for n in listed}
         for entry in os.listdir(self.cat.warehouse):
@@ -280,22 +278,13 @@ class IncrementalDedup:
 
     # ------------------------------------------------------------ seg reads
 
-    def _read(self, name: str) -> DataFrame:
-        """A state dir, read once per fold or compaction (a fold's own
-        writes enter as their re-reads): a dir never changes while it is
-        listed, and every read lists its files (and, for a dir whose
-        sidecar holds no schema, runs a schema-inference job)."""
-        if name not in self._reads:
-            self._reads[name] = self.cat.read(name)
-        return self._reads[name]
-
     def _seg_union(self, man: dict, base: str) -> DataFrame | None:
         """Union of a table's manifest-listed segments, each tagged with
         its epoch as ``__e``. Immutable dirs — plans built on this stay
         valid across folds (folds only ADD segments)."""
         out = None
         for e in man["segments"].get(base, []):
-            df = self._read(f"{base}__s{e}").withColumn(
+            df = self.cat.read(f"{base}__s{e}").withColumn(
                 "__e", F.lit(int(e))
             )
             out = df if out is None else out.unionByName(df)
@@ -323,7 +312,7 @@ class IncrementalDedup:
 
     def _result(self, man: dict, base: str) -> DataFrame:
         """The manifest-listed version of a result table."""
-        return self._read(f"{base}__s{man['results'][base]}")
+        return self.cat.read(f"{base}__s{man['results'][base]}")
 
     #: restrict sides below this many rows are broadcast into the state
     #: semi-join: the big (state-scan) side then never shuffles — the
@@ -574,9 +563,7 @@ class _Fold:
         """Write this fold's version of ``base``; return its re-read and
         its row count, read from the file footers (no count job)."""
         name = f"{base}__s{self.e_new}"
-        out = self.cat.write(name, df)
-        self.inc._reads[name] = out  # a later resolve reuses the re-read
-        return out, self.cat.rows(name)
+        return self.cat.write(name, df), self.cat.rows(name)
 
     def _segment(self, base: str, df: DataFrame) -> tuple[DataFrame, int]:
         """This fold's segment of an append-only table. It is listed only

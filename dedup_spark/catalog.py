@@ -9,6 +9,9 @@ hardened per the north rule:
 * a sidecar fingerprint records the config hash the stage was built
   under — a rerun with a changed config recomputes instead of silently
   reusing stale outputs (the reference would reuse them);
+* each stage is written once, synchronously, and downstream stages read
+  the written table back — the same path whether the stage was just
+  built or resumed;
 * per-stage metrics (rows out, wall ms, partition count) accumulate
   into a ``metrics`` table (analog of {prefix}_stats.csv,
   reference dedup.py:418-422, plus per-partition lineage).
@@ -39,7 +42,6 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,9 +80,6 @@ class StageCatalog:
     table_format: str = "parquet"   # "parquet" | "iceberg"
     iceberg_namespace: str = "dedup"
     iceberg_catalog: str = "spark_catalog"
-    _pending: list[Future] = field(default_factory=list, repr=False)
-    _writer_pool: ThreadPoolExecutor | None = field(default=None, repr=False)
-    _live: dict[str, DataFrame] = field(default_factory=dict, repr=False)
     _t0: float = field(default_factory=time.monotonic, repr=False)
 
     def __post_init__(self) -> None:
@@ -177,9 +176,6 @@ class StageCatalog:
         The source stage ceases to exist (its checkpoint is consumed,
         not shared): used by the incremental bootstrap to take ownership
         of batch-pipeline outputs as durable state segments."""
-        self.flush()  # a pending background write must land first
-        self._live.pop(src, None)
-        self._live.pop(dst, None)
         if self.table_format == "iceberg":
             self.spark.sql(
                 f"ALTER TABLE {self._qualified(src)} "
@@ -235,15 +231,14 @@ class StageCatalog:
         """Durable JSON run report: per-stage metrics (incl. the stage
         timeline) plus per-partition lineage for every checkpointed
         stage. Driver-local file ops only — zero Spark jobs, so it adds
-        no serial tax to the measured pipeline wall. Call after
-        ``flush()`` (it flushes itself to be safe).
+        no serial tax to the measured pipeline wall.
 
         Pure observability: a failure here (unwritable path, a stage dir
         missing from the warehouse) is logged as a warning, never
         propagated — it must not turn an otherwise-successful run into a
-        failed exit after the timed work is done. ``flush()`` errors DO
-        propagate (checkpoint durability is correctness, not telemetry)."""
-        self.flush()
+        failed exit after the timed work is done. A failed stage write
+        has already raised from :meth:`stage` (checkpoint durability is
+        correctness, not telemetry)."""
         try:
             report = {
                 "fingerprint": self.fingerprint,
@@ -279,81 +274,40 @@ class StageCatalog:
         """Build-or-resume: skip ``build`` when a fingerprint-matching
         checkpoint exists (the reference's resume contract, S10).
 
-        Parquet backend is WRITE-THROUGH: the stage is materialized once
-        into executor block storage (``localCheckpoint``) and returned
-        immediately — downstream stages consume the in-memory blocks —
-        while the durable parquet write happens on a background writer
-        thread. The critical path pays only the compute job; the
-        encode+write+rename+re-read cycle that used to serialize every
-        stage (≈17 barriers of pure Amdahl tax per run) overlaps with
-        downstream work. ``flush()`` (called before run() returns)
-        guarantees every checkpoint is durable on disk, so the resume
-        contract is unchanged.
-        """
+        A built stage is written synchronously and read back, so it is
+        durable — table, sidecar and metric — when this returns, and a
+        failed write raises here. A stage requested again in the same
+        session is read back like any resumed stage."""
         t0 = time.monotonic()
-        if name in self._live:
-            # same-session re-request while (or after) the background
-            # write runs: serve the in-memory checkpoint — the metric for
-            # this stage lands exactly once, via the writer thread
-            return self._live[name]
         reused = self.exists(name)
-        if reused or self.table_format == "iceberg":
-            out = self.read(name) if reused else self.write(name, build())
-            self._record(name, t0, reused)
-            return out
-        from dedup_spark.util import eager_ckpt
+        out = self.read(name) if reused else self.write(name, build())
+        self._record(name, t0, reused)
+        return out
 
-        ckpt = eager_ckpt(build())
+    def _record(self, name: str, t0: float, reused: bool) -> None:
         t1 = time.monotonic()
-        self._live[name] = ckpt
-        self._pending.append(
-            self._writer().submit(self._write_and_record, name, ckpt, t0, t1)
-        )
-        return ckpt
-
-    def _record(
-        self, name: str, t0: float, reused: bool, t1: float | None = None
-    ) -> None:
-        t1 = time.monotonic() if t1 is None else t1
-        files = (
-            self.read(name).rdd.getNumPartitions()
-            if self.table_format == "iceberg"
-            else len(self.partition_stats(name))
-        )
-        m = StageMetric(
-            stage=name, rows_out=self.rows(name),
+        if self.table_format == "iceberg":
+            rows = self.rows(name)
+            files = self.read(name).rdd.getNumPartitions()
+        else:
+            # one footer pass gives both the file count and the rows
+            parts = self.partition_stats(name)
+            rows, files = sum(p["rows"] for p in parts), len(parts)
+        self.metrics.append(StageMetric(
+            stage=name, rows_out=rows,
             wall_ms=int((t1 - t0) * 1000), partitions=files, reused=reused,
             t_start=round(t0 - self._t0, 3), t_end=round(t1 - self._t0, 3),
-        )
-        self.metrics.append(m)
-
-    def _write_and_record(
-        self, name: str, ckpt: DataFrame, t0: float, t1: float
-    ) -> None:
-        self.write(name, ckpt)
-        self._record(name, t0, reused=False, t1=t1)
-
-    def _writer(self) -> ThreadPoolExecutor:
-        if self._writer_pool is None:
-            self._writer_pool = ThreadPoolExecutor(
-                max_workers=2, thread_name_prefix="stage-writer"
-            )
-        return self._writer_pool
+        ))
 
     def flush(self) -> None:
-        """Wait for all background checkpoint writes; re-raise the first
-        failure. Must run before the pipeline returns — a stage is only
-        'checkpointed' once its parquet + fingerprint sidecar are durable."""
-        pending, self._pending = self._pending, []
-        for f in pending:
-            f.result()
+        """No-op kept for callers and tracers that wrap it by name:
+        :meth:`stage` writes synchronously, so every stage is already
+        durable when it returns."""
 
     def invalidate(self, name: str) -> None:
-        self._live.pop(name, None)
         if self.table_format == "iceberg":
             self.spark.sql(f"DROP TABLE IF EXISTS {self._qualified(name)}")
             return
-        self.flush()  # a pending write must not resurrect the stage
         for p in (self._path(name), self._meta_path(name)):
             if os.path.isdir(p):
                 shutil.rmtree(p)
@@ -361,7 +315,6 @@ class StageCatalog:
                 os.remove(p)
 
     def metrics_df(self) -> DataFrame:
-        self.flush()  # metrics rows for write-through stages land on write
         rows = [
             (m.stage, m.rows_out, m.wall_ms, m.partitions, m.reused,
              m.t_start, m.t_end)

@@ -28,7 +28,6 @@ class DedupConfig:
                                  # the analog of the reference's 20×-loose
                                  # LSH threshold (dedup.py:333):
                                  # P(candidate) = 1-(1-J^2)^64 ≈ .998 @ J=.3
-    simhash_bits: int = 64
 
     # --- informative-shingle DF band (duplicated-kmer analog) ---
     df_lo: int = 2               # ref duplicate_kmer_lower_count, dedup.py:604
@@ -70,7 +69,6 @@ class DedupConfig:
 
     # --- verification ---
     verify_containment: float = 0.2   # ref containment_threshold, dedup.py:592
-    lsh_slack: float = 20.0           # ref LSH thr = containment/20, dedup.py:333
     containment_plus1: bool = True    # ref +1 denominators, dedup.py:363-364
     use_simhash_filter: bool = True
     simhash_hamming_max: int = 26     # lenient pre-filter; recall-first

@@ -43,7 +43,8 @@ each small result table per fold, so per-apply work is
 * every segment and result version is materialized ONCE: the phase that
   computes it writes it and later phases read the re-read; the row
   counts that gate a segment come from its parquet footers, not a
-  count job.
+  count job, and a checkpointed intermediate is materialized by the
+  one count that sizes it (``util.ckpt_count``).
 
 Atomicity (a crash at any write leaves a warehouse the next call
 recovers from on its own): every state table is an epoch-named dir
@@ -85,7 +86,7 @@ import math
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -96,7 +97,7 @@ from dedup_spark.operators import lsh, shingling, verify
 from dedup_spark.operators.connected_components import connected_components
 from dedup_spark.operators.transcripts import assemble_transcripts
 from dedup_spark.pipeline import DedupPipeline
-from dedup_spark.util import eager_ckpt
+from dedup_spark.util import ckpt_count, eager_ckpt
 
 # ---------------------------------------------------------------- state names
 #: append-only state tables: one parquet dir per fold that adds rows,
@@ -104,11 +105,10 @@ from dedup_spark.util import eager_ckpt
 SEG_TURNS = "inc_turns"      # raw turns of convs (re)added at epoch e
 SEG_SETS = "inc_sets"        # (conv_id, shingles, n_shingles) raw sets
 SEG_SIGS = "inc_sigs"        # signature rows of convs (re)signed at e
-SEG_BANDS = "inc_bands"      # exploded (conv_id, band_id, band_hash)
 SEG_DF = "inc_df"            # (shingle, df) CURRENT totals, touched at e
 SEG_SIZES = "inc_sizes"      # (band_id, band_hash, bucket_size), touched at e
 SEG_RETIRED_SETS = "inc_retired_sets"   # (conv_id, seg_e) dead sets/turns rows
-SEG_RETIRED_SIGS = "inc_retired_sigs"   # (conv_id, seg_e) dead sig/band rows
+SEG_RETIRED_SIGS = "inc_retired_sigs"   # (conv_id, seg_e) dead sig rows
 #: result tables: one full version per fold that changes them; the
 #: manifest lists only the latest
 TBL_VERIFIED = "inc_verified"
@@ -388,10 +388,11 @@ class IncrementalDedup:
 
         shingle_sets / signatures / bucket_sizes / verified_pairs /
         clusters / skew_report move (driver-side rename, no copy) into
-        state tables; only the exploded band index, the full (shingle,
-        df) table (the slim in_band pipeline checkpoint cannot answer
-        "was this df 1 or out-of-band", so state keeps real counts
-        including 1), and the raw turns are computed/written fresh."""
+        state tables; only the full (shingle, df) table (the slim in_band
+        pipeline checkpoint cannot answer "was this df 1 or out-of-band",
+        so state keeps real counts including 1) and the raw turns are
+        computed/written fresh. Band rows are not state: a fold explodes
+        them from the signature state, as the batch pipeline does."""
         res = self.pipeline.run(turns)
         cat, cfg = self.cat, self.cfg
         banding = cfg.candidate_source == "banding"
@@ -412,7 +413,6 @@ class IncrementalDedup:
         ))
         seg(SEG_TURNS, turns)
         if banding:
-            seg(SEG_BANDS, lsh.explode_bands(cat.read("signatures")))
             adopt("bucket_sizes", SEG_SIZES)
         adopt("shingle_sets", SEG_SETS)
         adopt("signatures", SEG_SIGS)
@@ -428,16 +428,26 @@ class IncrementalDedup:
 
         # smallest signed stratum for the prefix probe range (tracked in
         # the manifest; monotone-decreasing — deletes never raise it, a
-        # superset probe range is merely extra candidates)
-        min_n = (
-            cat.read(f"{SEG_SIGS}__s0")
-            .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-        )
+        # superset probe range is merely extra candidates). Only the
+        # prefix path reads it, and candidate_source is fingerprinted.
+        min_stratum = 0
+        if not banding:
+            min_n = (
+                cat.read(f"{SEG_SIGS}__s0")
+                .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
+            )
+            min_stratum = int(math.floor(math.log2(min_n))) if min_n else 0
         self._commit_manifest(
             0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW), 0),
-            int(math.floor(math.log2(min_n))) if min_n else 0,
+            min_stratum,
         )
-        return res
+        # the adopted stages moved: hand back frames over their new dirs
+        return replace(
+            res, signatures=cat.read(f"{SEG_SIGS}__s0"),
+            verified_pairs=cat.read(f"{TBL_VERIFIED}__s0"),
+            clusters=cat.read(f"{TBL_CLUSTERS}__s0"),
+            skew_report=cat.read(f"{TBL_SKEW}__s0"),
+        )
 
     # ----------------------------------------------------------- public API
 
@@ -506,7 +516,6 @@ class IncrementalDedup:
         ]
         kv_tables = [(SEG_DF, ["shingle"], "df")]
         if self.cfg.candidate_source == "banding":
-            conv_tables.append((SEG_BANDS, retired_sigs))
             kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
                               "bucket_size"))
         for base, retired in conv_tables:
@@ -553,10 +562,7 @@ class _Fold:
 
     def _conv(self, base: str, **kw) -> DataFrame:
         """Current rows of a conv-keyed table at the committed epoch."""
-        retired = (
-            self.retired_sigs if base in (SEG_SIGS, SEG_BANDS)
-            else self.retired_sets
-        )
+        retired = self.retired_sigs if base == SEG_SIGS else self.retired_sets
         return self.inc._resolve_conv(self.man, base, retired, **kw)
 
     def _write(self, base: str, df: DataFrame) -> tuple[DataFrame, int]:
@@ -662,18 +668,19 @@ class _Fold:
         # Net-zero rows (an edit removing and re-adding the same
         # shingle) are kept separately: their df is unchanged but the
         # re-sign lookup below still needs a state value for them.
-        touched_all = eager_ckpt(
+        moved = F.col("d") != 0
+        touched_all, self.rpt["n_touched_shingles"] = ckpt_count(
             df_add.withColumnRenamed("df", "d_add")
             .join(df_sub.withColumnRenamed("df", "d_sub"), "shingle", "full_outer")
             .select(
                 "shingle",
                 (F.coalesce("d_add", F.lit(0)) - F.coalesce("d_sub", F.lit(0))
                  ).alias("d"),
-            )
+            ),
+            moved,
         )
-        self.delta = touched_all.filter(F.col("d") != 0)
-        self.zero_keys = touched_all.filter(F.col("d") == 0).select("shingle")
-        self.rpt["n_touched_shingles"] = self.delta.count()
+        self.delta = touched_all.filter(moved)
+        self.zero_keys = touched_all.filter(~moved).select("shingle")
 
     def df_merge(self) -> None:
         """New df totals of the touched shingles, written as this fold's
@@ -705,7 +712,7 @@ class _Fold:
         survivors_pre = self._conv(SEG_SETS).join(
             self.removed, "conv_id", "left_anti"
         )
-        self.affected_old = eager_ckpt(
+        self.affected_old, self.n_affected = ckpt_count(
             shingling.exploded_shingles(survivors_pre)
             .join(
                 self.inc._restrict_hint(
@@ -716,7 +723,6 @@ class _Fold:
             .select("conv_id")
             .dropDuplicates()
         )
-        self.n_affected = self.affected_old.count()
         self.rpt["n_affected_old"] = self.n_affected
 
     def resign(self) -> None:
@@ -759,7 +765,7 @@ class _Fold:
         if delta_regime:
             # delta regime: the state probe is restricted to the
             # affected convs' untouched shingles — a broadcast-sized set
-            untouched_keys = eager_ckpt(
+            untouched_keys, n_untouched = ckpt_count(
                 affected_sets.select(F.explode("shingles").alias("shingle"))
                 .dropDuplicates()
                 .unionByName(self.zero_keys)
@@ -768,7 +774,7 @@ class _Fold:
             )
             state_part = inc._resolve_kv(
                 man, SEG_DF, ["shingle"], "df", restrict=untouched_keys,
-                n_restrict=untouched_keys.count(),
+                n_restrict=n_untouched,
             )
         else:
             # corpus-drift regime (worst case: most conversations
@@ -795,20 +801,21 @@ class _Fold:
         # smallest signed stratum after this fold: the manifest's next
         # min_stratum and the prefix probe floor of THIS apply — a new
         # doc smaller than every historical one lowers the meet stratum
-        # of its pairs, and the probe side must emit down to it
+        # of its pairs, and the probe side must emit down to it. Banding
+        # never reads it: the committed value is carried forward.
         self.min_strat = int(man.get("min_stratum", 0))
-        new_min = self.resigned.agg(
-            F.min("n_shingles").alias("m")
-        ).collect()[0]["m"]
-        if new_min:
-            self.min_strat = min(
-                self.min_strat, int(math.floor(math.log2(new_min)))
-            )
+        if not self.banding:
+            new_min = self.resigned.agg(
+                F.min("n_shingles").alias("m")
+            ).collect()[0]["m"]
+            if new_min:
+                self.min_strat = min(
+                    self.min_strat, int(math.floor(math.log2(new_min)))
+                )
 
-        # convs whose sig-cadence rows retire: re-signed olds + removed.
-        # The written segment also stands for those convs in every later
-        # anti-join against old sig and band rows: a conv with no live
-        # sig row has no live band row either.
+        # convs whose sig rows retire: re-signed olds + removed. The
+        # written segment also stands for those convs in every later
+        # anti-join against old sig rows.
         self.sig_gone, self.n_gone = inc._empty("conv_id string"), 0
         if self.n_affected + self.n_removed:
             gone, self.n_gone = self._segment(SEG_RETIRED_SIGS, self._conv(
@@ -823,14 +830,12 @@ class _Fold:
         if self.banding:
             self._banding_candidates()
         else:
-            self.changed = eager_ckpt(
+            self.changed, self.rpt["n_changed_convs"] = ckpt_count(
                 self.affected_old.unionByName(self.added_convs)
                 .dropDuplicates()
             )
-            self.rpt["n_changed_convs"] = self.changed.count()
             self.cand = self._prefix_candidates()
-        self.cand = eager_ckpt(self.cand)
-        self.rpt["n_candidate_pairs"] = self.cand.count()
+        self.cand, self.rpt["n_candidate_pairs"] = ckpt_count(self.cand)
 
     def verify(self) -> None:
         """Verify only changed-touching candidates, then splice them into
@@ -838,13 +843,13 @@ class _Fold:
         come from a conv-restricted state read spliced with the
         re-signed."""
         cand = self.cand
-        pair_convs = eager_ckpt(
+        pair_convs, n_pair_convs = ckpt_count(
             cand.select(F.col("conv_a").alias("conv_id"))
             .unionByName(cand.select(F.col("conv_b").alias("conv_id")))
             .dropDuplicates()
         )
         sigs_lookup = self._conv(
-            SEG_SIGS, restrict=pair_convs, n_restrict=pair_convs.count(),
+            SEG_SIGS, restrict=pair_convs, n_restrict=n_pair_convs,
         ).join(self.sig_gone, "conv_id", "left_anti").unionByName(
             self.resigned.join(pair_convs, "conv_id", "left_semi")
         )
@@ -914,19 +919,18 @@ class _Fold:
         threshold changes outcomes for unchanged convs inside it, so
         every member of a drop-tier-crossing bucket is promoted into the
         changed set (both crossing directions: an append can push a
-        bucket over, a removal can pull one back under). Writes the new
-        band rows, the touched bucket sizes and, when a size moved, the
-        dropped-bucket report."""
+        bucket over, a removal can pull one back under). Band rows are a
+        lazy projection of the signature state, never stored. Writes the
+        touched bucket sizes and, when a size moved, the dropped-bucket
+        report."""
         inc, cfg, man, rpt = self.inc, self.cfg, self.man, self.rpt
         bkey = ["band_id", "band_hash"]
 
         bands_added = lsh.explode_bands(self.resigned)
-        if self.n_resigned:
-            bands_added, _ = self._segment(SEG_BANDS, bands_added)
-        bands_gone = self._conv(
-            SEG_BANDS, restrict=self.sig_gone, n_restrict=self.n_gone,
-        )
-        sz_delta = eager_ckpt(
+        bands_gone = lsh.explode_bands(self._conv(
+            SEG_SIGS, restrict=self.sig_gone, n_restrict=self.n_gone,
+        ))
+        sz_delta, rpt["n_touched_buckets"] = ckpt_count(
             lsh.band_bucket_sizes(bands_added)
             .withColumnRenamed("bucket_size", "n_add")
             .join(
@@ -941,7 +945,6 @@ class _Fold:
             )
             .filter(F.col("d") != 0)
         )
-        rpt["n_touched_buckets"] = sz_delta.count()
         sz_old = inc._resolve_kv(
             man, SEG_SIZES, bkey, "bucket_size", restrict=sz_delta,
             n_restrict=rpt["n_touched_buckets"],
@@ -955,21 +958,20 @@ class _Fold:
 
         # a touched bucket's old size is its written size minus the delta
         drop = cfg.max_salted_bucket
-        crossing = eager_ckpt(
+        crossing, rpt["n_tier_crossing_buckets"] = ckpt_count(
             sz_touched.join(sz_delta, bkey).filter(
                 (F.col("bucket_size") - F.col("d") > drop)
                 != (F.col("bucket_size") > drop)
             ).select(*bkey)
         )
-        rpt["n_tier_crossing_buckets"] = crossing.count()
         # members (old index ∪ new rows) of crossing buckets, survivors only
+        sigs_old = self._conv(SEG_SIGS)
         old_members = (
-            inc._seg_union(man, SEG_BANDS)
+            lsh.explode_bands(sigs_old)
             .join(
                 inc._restrict_hint(crossing, rpt["n_tier_crossing_buckets"]),
                 bkey, "left_semi",
             )
-            .join(self.retired_sigs, ["conv_id", "__e"], "left_anti")
             .select("conv_id")
         )
         tier_changed = (
@@ -979,7 +981,7 @@ class _Fold:
             .dropDuplicates()
             .join(self.removed, "conv_id", "left_anti")
         )
-        self.changed = eager_ckpt(
+        self.changed, n_changed = ckpt_count(
             self.affected_old.unionByName(self.added_convs)
             .unionByName(tier_changed)
             .dropDuplicates()
@@ -988,13 +990,12 @@ class _Fold:
         # post-apply band index restricted to the buckets changed convs
         # occupy: tier decisions come from GLOBAL (state-maintained)
         # sizes, pair volume from changed convs' bucket membership
-        n_changed = self.changed.count()
         rpt["n_changed_convs"] = n_changed
-        bands_post_all = self._conv(SEG_BANDS).join(
+        bands_post_all = lsh.explode_bands(sigs_old.join(
             inc._restrict_hint(self.sig_gone, self.n_gone),
             "conv_id", "left_anti",
-        ).unionByName(bands_added)
-        changed_buckets = eager_ckpt(
+        )).unionByName(bands_added)
+        changed_buckets, rpt["n_changed_buckets"] = ckpt_count(
             bands_post_all.join(
                 inc._restrict_hint(self.changed, n_changed),
                 "conv_id", "left_semi",
@@ -1002,7 +1003,6 @@ class _Fold:
             .select(*bkey)
             .dropDuplicates()
         )
-        rpt["n_changed_buckets"] = changed_buckets.count()
         bands_restricted = bands_post_all.join(
             inc._restrict_hint(changed_buckets, rpt["n_changed_buckets"]),
             bkey, "left_semi",
@@ -1090,9 +1090,10 @@ class _Fold:
         sigs_post = self._conv(SEG_SIGS).join(
             self.sig_gone, "conv_id", "left_anti"
         ).unionByName(self.resigned)
-        a = eager_ckpt(
+        a, n_a = ckpt_count(
             emit(self.resigned.join(self.changed, "conv_id", "left_semi"))
-        ).select(
+        )
+        a = a.select(
             F.col("conv_id").alias("conv_a"), F.col("s_own").alias("sa"),
             F.col("rem").alias("rem_a"), "s", "c_s", "tok",
         )
@@ -1104,7 +1105,6 @@ class _Fold:
         # corpus-wide probe explode a map-side hash lookup (no shuffle of
         # the probe rows). Lower threshold than _restrict_hint — these
         # rows are 6 columns wide, not a bare key.
-        n_a = a.count()
         a_side = F.broadcast(a) if n_a <= 2_000_000 else a
         pairs = (
             a_side.join(b, ["s", "tok"])

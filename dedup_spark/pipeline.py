@@ -77,8 +77,8 @@ class DedupPipeline:
         from concurrent.futures import ThreadPoolExecutor
 
         # one pool for the whole DAG: the two main branches plus the
-        # off-critical-path stage writes (skew/anchor reports, deduped) —
-        # sized so no submitted task can wait behind a blocked waiter
+        # off-critical-path stages (skew/anchor reports, deduped, stats)
+        # — sized so no submitted task can wait behind a blocked waiter
         pool = ThreadPoolExecutor(max_workers=6)
 
         transcripts = cat.stage("transcripts", lambda: assemble_transcripts(turns))
@@ -424,8 +424,8 @@ class DedupPipeline:
                 )
             )
         finally:
+            # every stage is durable once its cat.stage call returns
             pool.shutdown(wait=True)
-        cat.flush()  # every checkpoint durable before the run returns
 
         return PipelineResult(
             transcripts=transcripts,

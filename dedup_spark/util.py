@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def eager_ckpt(df: DataFrame) -> DataFrame:
@@ -25,6 +25,19 @@ def eager_ckpt(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def ckpt_count(df: DataFrame, where: Column | None = None) -> tuple[DataFrame, int]:
+    """:func:`eager_ckpt` and a row count from ONE action: a lazy
+    ``DISK_ONLY`` checkpoint that the ``count()`` (of the rows matching
+    ``where``, or of all rows) materializes — every partition is computed
+    and stored either way — instead of a checkpoint job and then a
+    second job that re-reads the blocks to count them."""
+    from pyspark import StorageLevel
+
+    ck = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    return ck, (ck if where is None else ck.filter(where)).count()
+
 
 # logical-plan node names that imply a shuffle (or explicit repartition)
 # below this point — such plans are already wide (shuffle width comes
@@ -80,9 +93,9 @@ def ensure_parallelism(
     if any(node in plan for node in _WIDE_NODES):
         return df
     if "ExistingRDD" in plan or "LogicalRDD" in plan:
-        # write-through checkpoint (localCheckpoint): the plan IS an
-        # already-materialized RDD, so getNumPartitions is a metadata
-        # read — no job, no AQE bypass concern
+        # a localCheckpoint: the plan IS an already-materialized RDD,
+        # so getNumPartitions is a metadata read — no job, no AQE bypass
+        # concern
         if df.rdd.getNumPartitions() < target:
             return df.repartition(target)
         return df

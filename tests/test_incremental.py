@@ -556,7 +556,7 @@ class TestFoldAtomicity:
         n_writes = len(writes)
         assert committed() == before
         assert {w.rsplit("__s", 1)[0] for w in writes} == {
-            "inc_turns", "inc_sets", "inc_sigs", "inc_bands", "inc_df",
+            "inc_turns", "inc_sets", "inc_sigs", "inc_df",
             "inc_sizes", "inc_retired_sets", "inc_retired_sigs",
             "inc_verified", "inc_clusters", "inc_skew",
         }
@@ -628,6 +628,51 @@ class TestCompaction:
         assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
         assert _clusters(res.clusters) == _clusters(full.clusters)
         assert _turn_keys(res.deduped_turns) == _turn_keys(full.deduped_turns)
+
+
+    def test_band_segments_of_older_manifest_are_dropped(
+        self, spark, tmp_path_factory
+    ):
+        """Band rows are derived from the signature state. A manifest
+        that still lists an ``inc_bands`` table folds without reading
+        it; compaction drops it from the manifest and the next fold's
+        sweep deletes its dirs."""
+        from dedup_spark.operators import lsh
+
+        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=60))
+        all_turns = spark.createDataFrame(turns_pdf).cache()
+        convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})
+        new_ids = convs[::4]
+        gone = [c for c in convs[1::5] if c not in new_ids]
+        old = all_turns.filter(~F.col("conv_id").isin(new_ids))
+        new = all_turns.filter(F.col("conv_id").isin(new_ids))
+        post = all_turns.filter(~F.col("conv_id").isin(gone))
+
+        cfg = DedupConfig()
+        wh = str(tmp_path_factory.mktemp("wh_lb"))
+        inc = IncrementalDedup(spark, cfg, wh)
+        inc.bootstrap(old)
+        inc.cat.write(
+            "inc_bands__s0", lsh.explode_bands(inc.cat.read("inc_sigs__s0"))
+        )
+        man = inc._read_manifest()
+        man["segments"]["inc_bands"] = [0]
+        inc._commit_manifest(
+            man["epoch"], man["segments"], man["results"], man["min_stratum"]
+        )
+        inc.append(new)
+        inc.compact()
+        assert "inc_bands" not in inc._read_manifest()["segments"]
+        res = inc.remove(gone)
+        assert not any(
+            e.lstrip("_").startswith("inc_bands") for e in os.listdir(wh)
+        )
+        fresh = DedupPipeline(
+            spark, cfg, str(tmp_path_factory.mktemp("wh_lbf"))
+        ).run(post)
+        assert _pairs(res.verified_pairs) == _pairs(fresh.verified_pairs)
+        assert _clusters(res.clusters) == _clusters(fresh.clusters)
+        assert _turn_keys(res.deduped_turns) == _turn_keys(fresh.deduped_turns)
 
 
 class TestDeltaProportionalReport:

@@ -6,6 +6,7 @@ import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dedup_spark.catalog import StageCatalog
 from dedup_spark.config import DedupConfig
@@ -105,6 +106,17 @@ def test_read_takes_schema_from_sidecar(spark, tmp_path):
     assert last_job() == before
     assert out.schema == inferred
     assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_stage_is_durable_on_return(spark, tmp_path):
+    """A built stage is written before ``stage`` returns: no flush is
+    needed for its table, sidecar schema or metric."""
+    cat = StageCatalog(spark, str(tmp_path), "fp1")
+    cat.stage("t", lambda: spark.range(10).repartition(3))
+    assert cat.exists("t")
+    assert StructType.fromJson(cat._sidecar("t")["schema"]) == spark.range(1).schema
+    (m,) = [m for m in cat.metrics if m.stage == "t"]
+    assert not m.reused and m.rows_out == cat.rows("t") == 10
 
 
 def test_iceberg_backend_requires_real_catalog(spark, tmp_path):

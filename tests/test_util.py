@@ -1,8 +1,9 @@
-"""eager_ckpt: lineage-truncating checkpoint at a disk-backed level."""
+"""eager_ckpt / ckpt_count: lineage-truncating checkpoints at a
+disk-backed level."""
 
 from pyspark.sql import functions as F
 
-from dedup_spark.util import eager_ckpt
+from dedup_spark.util import ckpt_count, eager_ckpt
 
 
 def test_eager_ckpt_preserves_rows_and_truncates_lineage(spark):
@@ -27,6 +28,34 @@ def test_eager_ckpt_preserves_rows_and_truncates_lineage(spark):
         for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     }
     assert any("disk" in lv and "memory" not in lv for lv in levels), levels
+
+
+def test_ckpt_count_materializes_once(spark):
+    """One action both materializes the checkpoint and counts it, where
+    eager_ckpt followed by count() takes a checkpoint job and then a
+    count job."""
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    def frame():
+        return spark.range(0, 1000, 1, 4).withColumn("r", F.rand())
+
+    j0 = last_job()
+    eager_ckpt(frame()).count()
+    j1 = last_job()
+    ck, n = ckpt_count(frame())
+    j2 = last_job()
+    assert n == 1000
+    assert j2 - j1 < j1 - j0
+    assert sorted(ck.collect()) == sorted(ck.collect())
+    plan = ck._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "Range" not in plan
+    # a filtered count counts the matching rows only
+    _, n_even = ckpt_count(frame(), F.col("id") % 2 == 0)
+    assert n_even == 500
 
 
 def test_shared_memo_mtime_guard(tmp_path, monkeypatch):

@@ -629,7 +629,6 @@ class TestCompaction:
         assert _clusters(res.clusters) == _clusters(full.clusters)
         assert _turn_keys(res.deduped_turns) == _turn_keys(full.deduped_turns)
 
-
     def test_band_segments_of_older_manifest_are_dropped(
         self, spark, tmp_path_factory
     ):

@@ -42,7 +42,7 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -61,6 +61,10 @@ class StageMetric:
     # ordering alone cannot)
     t_start: float = 0.0
     t_end: float = 0.0
+    # per-file lineage read from the footers when the stage was recorded
+    # (parquet backend): the run report serializes it, so a stage table
+    # moved since (``adopt``) is still reported
+    partition_lineage: list[dict] = field(default_factory=list)
 
 
 def _has_iceberg_catalog(spark: SparkSession, catalog: str) -> bool:
@@ -230,35 +234,21 @@ class StageCatalog:
     def write_run_report(self, path: str) -> None:
         """Durable JSON run report: per-stage metrics (incl. the stage
         timeline) plus per-partition lineage for every checkpointed
-        stage. Driver-local file ops only — zero Spark jobs, so it adds
-        no serial tax to the measured pipeline wall.
+        stage, as recorded when each stage was written or resumed — so a
+        stage table moved since (:meth:`adopt`) is still reported. One
+        driver-local file write: zero Spark jobs, so it adds no serial
+        tax to the measured pipeline wall.
 
-        Pure observability: a failure here (unwritable path, a stage dir
-        missing from the warehouse) is logged as a warning, never
-        propagated — it must not turn an otherwise-successful run into a
-        failed exit after the timed work is done. A failed stage write
-        has already raised from :meth:`stage` (checkpoint durability is
-        correctness, not telemetry)."""
+        Pure observability: a failure here (unwritable path) is logged
+        as a warning, never propagated — it must not turn an
+        otherwise-successful run into a failed exit after the timed work
+        is done. A failed stage write has already raised from
+        :meth:`stage` (checkpoint durability is correctness, not
+        telemetry)."""
         try:
             report = {
                 "fingerprint": self.fingerprint,
-                "stages": [
-                    {
-                        "stage": m.stage,
-                        "rows_out": m.rows_out,
-                        "wall_ms": m.wall_ms,
-                        "partitions": m.partitions,
-                        "reused": m.reused,
-                        "t_start": m.t_start,
-                        "t_end": m.t_end,
-                        "partition_lineage": (
-                            self.partition_stats(m.stage)
-                            if self.table_format == "parquet"
-                            else []
-                        ),
-                    }
-                    for m in self.metrics
-                ],
+                "stages": [asdict(m) for m in self.metrics],
             }
             with open(path, "w") as f:
                 json.dump(report, f)
@@ -287,16 +277,19 @@ class StageCatalog:
     def _record(self, name: str, t0: float, reused: bool) -> None:
         t1 = time.monotonic()
         if self.table_format == "iceberg":
+            parts = []
             rows = self.rows(name)
             files = self.read(name).rdd.getNumPartitions()
         else:
-            # one footer pass gives both the file count and the rows
+            # one footer pass gives the file count, the rows and the
+            # lineage the run report carries
             parts = self.partition_stats(name)
             rows, files = sum(p["rows"] for p in parts), len(parts)
         self.metrics.append(StageMetric(
             stage=name, rows_out=rows,
             wall_ms=int((t1 - t0) * 1000), partitions=files, reused=reused,
             t_start=round(t0 - self._t0, 3), t_end=round(t1 - self._t0, 3),
+            partition_lineage=parts,
         ))
 
     def flush(self) -> None:

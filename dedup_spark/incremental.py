@@ -29,7 +29,9 @@ each small result table per fold, so per-apply work is
 
 * UDF cost ∝ added characters + re-signed conversations;
 * shuffle cost ∝ (delta ∪ affected): df counts merge only for TOUCHED
-  shingles against a shingle-restricted state read, bucket sizes update
+  shingles against a shingle-restricted state read — the one read of
+  the df state per fold (re-signing takes band membership from the
+  stored informative sets plus the fold's df delta), bucket sizes update
   only for TOUCHED buckets against a bucket-restricted state read
   (sizes are READ from durable state, never re-aggregated from the full
   signature table), the one-sided candidate join touches only changed
@@ -195,9 +197,6 @@ class IncrementalDedup:
         self.pipeline = DedupPipeline(spark, cfg, warehouse)
         self.cat: StageCatalog = self.pipeline.catalog
         self.auto_compact_segments = auto_compact_segments
-        #: df state-probe regime for re-sign lookups: "auto" picks by
-        #: affected fraction; "restricted"/"full" pin a branch (tests)
-        self.df_probe_regime = "auto"
 
     # ------------------------------------------------------------- manifest
 
@@ -665,22 +664,18 @@ class _Fold:
             df_sub = shingling.shingle_document_frequency(
                 shingling.exploded_shingles(sets_removed)
             )
-        # Net-zero rows (an edit removing and re-adding the same
-        # shingle) are kept separately: their df is unchanged but the
-        # re-sign lookup below still needs a state value for them.
-        moved = F.col("d") != 0
-        touched_all, self.rpt["n_touched_shingles"] = ckpt_count(
+        # a net-zero key (added and removed in equal numbers) kept its
+        # df: it is not in the delta
+        self.delta, self.rpt["n_touched_shingles"] = ckpt_count(
             df_add.withColumnRenamed("df", "d_add")
             .join(df_sub.withColumnRenamed("df", "d_sub"), "shingle", "full_outer")
             .select(
                 "shingle",
                 (F.coalesce("d_add", F.lit(0)) - F.coalesce("d_sub", F.lit(0))
                  ).alias("d"),
-            ),
-            moved,
+            )
+            .filter(F.col("d") != 0)
         )
-        self.delta = touched_all.filter(moved)
-        self.zero_keys = touched_all.filter(~moved).select("shingle")
 
     def df_merge(self) -> None:
         """New df totals of the touched shingles, written as this fold's
@@ -729,70 +724,48 @@ class _Fold:
         """Re-sign (affected ∪ new), written as this fold's sigs segment,
         plus the retired-sigs rows of the affected and removed convs.
 
-        The df lookup comes from the delta merge for every TOUCHED
-        shingle (already computed — no second state probe for the new
-        batch's millions of shingles); only the affected convs'
-        untouched shingles plus net-zero edit shingles — both ∝
-        affected, typically tiny — read state."""
-        inc, cfg, man = self.inc, self.cfg, self.man
-        # NOT eagerly checkpointed: in the worst case (corpus-wide df
-        # drift) affected ≈ everything, and materializing the full sets
-        # table costs more than letting the two consumers below re-scan
-        # the immutable segments through the broadcast-restricted plan
-        affected_sets = self._conv(
+        Band membership needs no df state read. A touched key's new df is
+        in the written df segment. A key outside the delta kept its df,
+        so it is in band exactly when an old signature set holds it: an
+        affected conv's raw set is unchanged, so its untouched in-band
+        keys are its own old signature set, and a net-zero edit key
+        (added and removed in equal numbers) is in band exactly when a
+        removed conv's old signature set holds it. A conv with no
+        signature row had an empty informative set."""
+        cfg, man = self.cfg, self.man
+        keys_in = self.df_touched.filter(
+            F.col("df").between(F.lit(cfg.df_lo), F.lit(cfg.df_hi))
+        ).select("shingle")
+        # convs whose sig rows retire: re-signed olds + removed. One
+        # resolve of their old sig rows feeds the in-band keys and the
+        # retired-sigs segment, which also stands for those convs in
+        # every later anti-join against old sig rows.
+        self.sig_gone, self.n_gone = self.inc._empty("conv_id string"), 0
+        if self.n_affected + self.n_removed:
+            old_sigs = eager_ckpt(self._conv(
+                SEG_SIGS,
+                restrict=self.affected_old.unionByName(self.removed),
+                keep_epoch=True, n_restrict=self.n_affected + self.n_removed,
+            ).select("conv_id", "__e", "shingles"))
+            gone, self.n_gone = self._segment(SEG_RETIRED_SIGS, old_sigs.select(
+                "conv_id", F.col("__e").alias("seg_e")
+            ))
+            self.sig_gone = gone.select("conv_id")
+            keys_in = keys_in.unionByName(
+                old_sigs.select(F.explode("shingles").alias("shingle"))
+                .join(self.delta, "shingle", "left_anti")
+                .dropDuplicates()
+            )
+        resign_sets = self._conv(
             SEG_SETS, restrict=self.affected_old, n_restrict=self.n_affected,
         ).select("conv_id", "shingles")
-        resign_sets = affected_sets
         if self.sets_new is not None:
             resign_sets = resign_sets.unionByName(
                 self.sets_new.select("conv_id", "shingles")
             )
-        resign_expl = resign_sets.select(
-            "conv_id", F.explode("shingles").alias("shingle")
-        )
-        # regime switch: when a small fraction of the corpus re-signs,
-        # restrict the state probe to those convs' shingles; when df
-        # drift is corpus-wide (the synthetic worst case), most keys are
-        # needed anyway and building a corpus-sized restrict set costs
-        # more than one full resolve. df_probe_regime ("auto" | restricted"
-        # | "full") pins the choice — both branches are equality-tested.
-        # (the live count is taken only when more than 1000 re-sign)
-        delta_regime = inc.df_probe_regime == "restricted" or (
-            inc.df_probe_regime == "auto"
-            and (self.n_affected <= 1000
-                 or self.n_affected <= self.live_ids.count() // 5)
-        )
-        if delta_regime:
-            # delta regime: the state probe is restricted to the
-            # affected convs' untouched shingles — a broadcast-sized set
-            untouched_keys, n_untouched = ckpt_count(
-                affected_sets.select(F.explode("shingles").alias("shingle"))
-                .dropDuplicates()
-                .unionByName(self.zero_keys)
-                .join(self.delta, "shingle", "left_anti")
-                .dropDuplicates()
-            )
-            state_part = inc._resolve_kv(
-                man, SEG_DF, ["shingle"], "df", restrict=untouched_keys,
-                n_restrict=n_untouched,
-            )
-        else:
-            # corpus-drift regime (worst case: most conversations
-            # re-sign): most state keys are needed anyway, so one full
-            # resolve beats building and probing a corpus-sized
-            # restrict set; touched keys defer to the merged delta
-            state_part = inc._resolve_kv(
-                man, SEG_DF, ["shingle"], "df"
-            ).join(
-                inc._restrict_hint(
-                    self.delta.select("shingle"),
-                    self.rpt["n_touched_shingles"],
-                ),
-                "shingle", "left_anti",
-            )
-        resign_informative = shingling.informative_shingle_sets(
-            resign_expl, self.df_touched.unionByName(state_part),
-            cfg.df_lo, cfg.df_hi,
+        resign_informative = shingling.shingle_sets_over(
+            resign_sets.select("conv_id", F.explode("shingles").alias("shingle")),
+            keys_in,
         )
         self.resigned, self.n_resigned = self._segment(
             SEG_SIGS, lsh.compute_signatures(resign_informative, cfg)
@@ -812,18 +785,6 @@ class _Fold:
                 self.min_strat = min(
                     self.min_strat, int(math.floor(math.log2(new_min)))
                 )
-
-        # convs whose sig rows retire: re-signed olds + removed. The
-        # written segment also stands for those convs in every later
-        # anti-join against old sig rows.
-        self.sig_gone, self.n_gone = inc._empty("conv_id string"), 0
-        if self.n_affected + self.n_removed:
-            gone, self.n_gone = self._segment(SEG_RETIRED_SIGS, self._conv(
-                SEG_SIGS,
-                restrict=self.affected_old.unionByName(self.removed),
-                keep_epoch=True, n_restrict=self.n_affected + self.n_removed,
-            ).select("conv_id", F.col("__e").alias("seg_e")))
-            self.sig_gone = gone.select("conv_id")
 
     def candidates(self) -> None:
         """Candidate pairs with at least one changed conv."""

@@ -15,8 +15,8 @@ each iteration is one shuffle join (labels ⋈ symmetric edges) + one
 groupBy min; ``localCheckpoint`` after every iteration truncates the
 lineage so plans don't grow unboundedly (the Iceberg-table-per-iteration
 variant swaps localCheckpoint for a catalog write). Convergence is
-O(diameter) iterations for hash-to-min; a max-iteration guard protects
-against pathological graphs.
+O(diameter) iterations for hash-to-min; a graph that does not converge
+within ``max_iters`` rounds raises instead of returning partial labels.
 
 Hybrid endgame: dedup edge sets are tiny relative to the corpus (the
 pairs that survived LSH + exact verify), so when the edge count fits a
@@ -144,4 +144,12 @@ def connected_components(
         if it % 2 == 1 or it == max_iters - 1:
             if new_labels.filter(F.col("_changed")).limit(1).count() == 0:
                 break
+    else:
+        # the last round's probe still saw a label move: the labels are
+        # partial, so refuse rather than return split components
+        raise RuntimeError(
+            f"connected_components did not converge within max_iters="
+            f"{max_iters} label-propagation rounds (cc_max_iters); a "
+            "component's diameter exceeds the round budget"
+        )
     return labels.select("conv_id", "cluster_id")

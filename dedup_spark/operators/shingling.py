@@ -247,9 +247,19 @@ def informative_shingle_sets(
     sorted arrays. Conversations with zero informative shingles vanish
     here (empty-set guard analog, reference dedup.py:350) and rejoin the
     result as singleton clusters downstream."""
-    informative = shingle_df.filter(F.col("df").between(F.lit(lo), F.lit(hi)))
+    return shingle_sets_over(
+        exploded,
+        shingle_df.filter(F.col("df").between(F.lit(lo), F.lit(hi)))
+        .select("shingle"),
+    )
+
+
+def shingle_sets_over(exploded: DataFrame, keys: DataFrame) -> DataFrame:
+    """(conv_id, shingle) rows kept where ``shingle`` is in the distinct
+    ``keys`` frame, regrouped to per-conv sorted arrays; conversations
+    with no kept shingle vanish."""
     return (
-        exploded.join(informative.select("shingle"), "shingle")
+        exploded.join(keys, "shingle")
         .groupBy("conv_id")
         .agg(F.array_sort(F.collect_list("shingle")).alias("shingles"))
         .withColumn("n_shingles", F.size("shingles"))

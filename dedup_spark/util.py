@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 
 def eager_ckpt(df: DataFrame) -> DataFrame:
@@ -27,16 +27,15 @@ def eager_ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
-def ckpt_count(df: DataFrame, where: Column | None = None) -> tuple[DataFrame, int]:
+def ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
     """:func:`eager_ckpt` and a row count from ONE action: a lazy
-    ``DISK_ONLY`` checkpoint that the ``count()`` (of the rows matching
-    ``where``, or of all rows) materializes — every partition is computed
-    and stored either way — instead of a checkpoint job and then a
-    second job that re-reads the blocks to count them."""
+    ``DISK_ONLY`` checkpoint that the ``count()`` materializes, instead
+    of a checkpoint job and then a second job that re-reads the blocks
+    to count them."""
     from pyspark import StorageLevel
 
     ck = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    return ck, (ck if where is None else ck.filter(where)).count()
+    return ck, ck.count()
 
 
 # logical-plan node names that imply a shuffle (or explicit repartition)

@@ -5,6 +5,8 @@ driver union-find endgame (default for small edge sets) and the
 distributed hash-to-min loop (forced via driver_edge_limit=0) — and
 must produce identical labels."""
 
+import pytest
+
 from dedup_spark.operators.connected_components import connected_components
 
 
@@ -57,3 +59,16 @@ def test_long_chain_converges(spark):
     edges = [(nodes[i], nodes[i + 1]) for i in range(11)]
     labels = _run(spark, nodes, edges)
     assert set(labels.values()) == {"n000"}
+
+
+def test_loop_raises_when_round_budget_runs_out(spark):
+    """A chain longer than the round budget cannot converge: the loop
+    raises instead of returning partial (split) labels."""
+    nodes = [f"n{i:03d}" for i in range(12)]
+    n = spark.createDataFrame([(x,) for x in nodes], "conv_id string")
+    e = spark.createDataFrame(
+        [(nodes[i], nodes[i + 1]) for i in range(11)],
+        "conv_a string, conv_b string",
+    )
+    with pytest.raises(RuntimeError, match="max_iters=4"):
+        connected_components(n, e, max_iters=4, driver_edge_limit=0)

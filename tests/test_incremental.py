@@ -466,6 +466,52 @@ class TestRemoveAndEdit:
         assert _clusters(res.clusters) == _clusters(fresh.clusters)
         assert _turn_keys(res.deduped_turns) == _turn_keys(fresh.deduped_turns)
 
+    def test_unchanged_df_keys_across_conv_ids(self, spark, tmp_path_factory):
+        """One apply removes x and adds y (different ids) holding the same
+        two shingle families, so every shared key's df is unchanged: sM
+        stays in the [2,4] band (3) and sH stays above it (5). y's
+        informative set is then all net-zero keys, decided by x's old
+        signature set. The removed "solo" has an empty informative set
+        and so no signature row."""
+        rng = np.random.Generator(np.random.PCG64(23))
+
+        def seg(n):
+            return "".join(chr(97 + c) for c in rng.integers(0, 26, size=n))
+
+        sM, sH = seg(300), seg(300)
+        corpus = {
+            "x": [sM, sH, seg(60)],
+            "a": [sM, seg(60)],
+            "b": [sM, seg(70)],                             # df(sM)=3 (in)
+            **{f"h{i}": [sH, seg(60)] for i in range(4)},   # df(sH)=5 (out)
+            "solo": [seg(80)],
+        }
+        added = {"y": [sM, sH, seg(65)]}
+        removed = ["x", "solo"]
+        post = {
+            k: v for k, v in {**corpus, **added}.items() if k not in removed
+        }
+        for cfg in (DedupConfig(), TestPrefixIncremental.CFG):
+            inc = IncrementalDedup(
+                spark, cfg, str(tmp_path_factory.mktemp("wh_nz"))
+            )
+            inc.bootstrap(_turns_df(spark, corpus))
+            res = inc.apply(
+                new_turns=_turns_df(spark, added), remove_conv_ids=removed
+            )
+            fresh = DedupPipeline(
+                spark, cfg, str(tmp_path_factory.mktemp("wh_nz_f"))
+            ).run(_turns_df(spark, post))
+
+            assert res.n_affected_old == 0
+            got = _pairs(res.verified_pairs)
+            assert got == _pairs(fresh.verified_pairs)
+            assert {("a", "y"), ("b", "y")} <= got
+            assert _clusters(res.clusters) == _clusters(fresh.clusters)
+            assert _turn_keys(res.deduped_turns) == _turn_keys(
+                fresh.deduped_turns
+            )
+
     def test_remove_unknown_conv_rejected(self, spark, tmp_path_factory):
         turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=20))
         inc = IncrementalDedup(
@@ -743,35 +789,3 @@ class TestDeltaProportionalReport:
         assert ("o3", "q0") in _pairs(res.verified_pairs)
         assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
         assert _clusters(res.clusters) == _clusters(full.clusters)
-
-
-class TestFullDfProbeRegime:
-    """The corpus-drift df-probe branch (df_probe_regime='full', the
-    auto choice when most of the corpus re-signs) must be exactly equal
-    to the restricted branch — same fixture as TestDfDriftResign."""
-
-    def test_full_probe_equality(self, spark, tmp_path_factory):
-        rng = np.random.Generator(np.random.PCG64(55))
-
-        def seg(n):
-            return "".join(chr(97 + c) for c in rng.integers(0, 26, size=n))
-
-        sA, sC = seg(300), seg(300)
-        old = {
-            **{f"q{i}": [sA, seg(60)] for i in range(4)},
-            "lone": [sC, seg(80)],
-        }
-        new = {"zq_new": [sA, seg(65)], "zc_new": [sC, seg(75)]}
-        cfg = DedupConfig()
-        full = DedupPipeline(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_fp_f"))
-        ).run(_turns_df(spark, {**old, **new}))
-        inc = IncrementalDedup(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_fp_i"))
-        )
-        inc.df_probe_regime = "full"
-        inc.bootstrap(_turns_df(spark, old))
-        res = inc.append(_turns_df(spark, new))
-        assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
-        assert _clusters(res.clusters) == _clusters(full.clusters)
-        assert ("lone", "zc_new") in _pairs(res.verified_pairs)

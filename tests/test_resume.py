@@ -82,6 +82,24 @@ def test_partition_lineage_and_run_report(spark, tmp_path):
     assert sum(p["rows"] for p in st["partition_lineage"]) == 100
 
 
+def test_run_report_survives_adopt(spark, tmp_path):
+    """The run report carries the lineage recorded when the stage was
+    written, so a stage table moved since (the incremental bootstrap
+    adopts its stages as state) is still reported."""
+    import json
+
+    cat = StageCatalog(spark, str(tmp_path), "fp1")
+    cat.stage("t", lambda: spark.range(30).repartition(3))
+    cat.adopt("t", "u")
+    report_path = str(tmp_path / "report.json")
+    cat.write_run_report(report_path)
+    with open(report_path) as f:
+        rep = json.load(f)
+    (st,) = [s for s in rep["stages"] if s["stage"] == "t"]
+    assert st["partition_lineage"]
+    assert sum(p["rows"] for p in st["partition_lineage"]) == 30
+
+
 def test_read_takes_schema_from_sidecar(spark, tmp_path):
     """The sidecar carries the table's schema, so a read (every write's
     re-read, every incremental state probe) submits no schema-inference

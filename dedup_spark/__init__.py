@@ -21,7 +21,7 @@ Pipeline (see SURVEY.md §1.3 for the contig → transcript mapping):
     (analog of MinHashLSHEnsemble, reference dedup.py:318-359)
 6.  exact Jaccard / containment verify + SimHash Hamming filter
     (analog of reference dedup.py:362-369)
-7.  iterative connected components (hash-to-min) → clusters
+7.  connected components (large-star/small-star) → clusters
 8.  representative selection + anti-join emit of surviving turns
     (analog of reference dedup.py:164-187, contig.py:134-191)
 

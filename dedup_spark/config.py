@@ -18,8 +18,9 @@ from dataclasses import asdict, dataclass
 @dataclass(frozen=True)
 class DedupConfig:
     # --- shingling (k-mer analog) ---
-    shingle_k: int = 17          # ref kmer_size, dedup.py:542
-    shingle_unit: str = "char"   # "char" | "token"
+    shingle_k: int = 17          # ref kmer_size, dedup.py:542 (UTF-8
+                                 # byte windows: the substring pass's
+                                 # position classes join this space)
 
     # --- signatures ---
     num_perm: int = 128          # ref MinHash num_perm, dedup.py:333
@@ -124,7 +125,6 @@ class DedupConfig:
                                  # bucket is degenerate boilerplate (≥5·10^7
                                  # pairs from one bucket) — dropped WITH a
                                  # logged skew report, never silently
-    cc_max_iters: int = 50       # hash-to-min fixpoint guard
 
     # --- misc ---
     seed: int = 42
@@ -133,8 +133,7 @@ class DedupConfig:
                                  # hashing kernels (functions/hashing.py);
                                  # bump on any kernel change so resumed
                                  # checkpoints can never silently mix
-                                 # hash spaces (v2 = in-repo token hash,
-                                 # replacing pandas hash_array)
+                                 # hash spaces
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
@@ -142,8 +141,12 @@ class DedupConfig:
                 f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) "
                 f"!= num_perm ({self.num_perm})"
             )
-        if self.shingle_unit not in ("char", "token"):
-            raise ValueError(f"bad shingle_unit {self.shingle_unit!r}")
+        if self.df_lo < 2:
+            raise ValueError(
+                f"df_lo must be >= 2, got {self.df_lo}: a duplication "
+                "signal needs two conversations, and the substring pass's "
+                "position classes only see repeated (df >= 2) shingles"
+            )
         if self.df_band_mode not in ("manual", "tail", "fit", "fit_or_tail"):
             raise ValueError(f"bad df_band_mode {self.df_band_mode!r}")
         if self.candidate_source not in ("banding", "prefix"):

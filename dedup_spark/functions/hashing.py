@@ -99,77 +99,6 @@ def char_window_hashes(text: str | bytes, k: int) -> np.ndarray:
         return splitmix64(h).view(np.int64)
 
 
-def _poly_powers_asc(n: int) -> np.ndarray:
-    """base^0 .. base^(n-1) (mod 2^64), ascending."""
-    p = np.empty(max(n, 1), dtype=U64)
-    p[0] = U64(1)
-    with np.errstate(over="ignore"):
-        for i in range(1, n):
-            p[i] = (p[i - 1] * _POLY_BASE) & _MASK
-    return p
-
-
-_ASC_POW = _poly_powers_asc(0)
-
-
-def hash_token_array(toks: list[str]) -> np.ndarray:
-    """One uint64 polynomial+splitmix hash per token, vectorized over the
-    concatenation of all tokens' surrogatepass-encoded bytes — an
-    IN-REPO kernel, so (a) lone surrogates can't crash the executor UDF
-    (``pd.util.hash_array`` raises UnicodeEncodeError on them) and
-    (b) signatures can't silently drift with pandas versions while the
-    config fingerprint stays the same (the fingerprint now carries
-    ``hash_family``, see DedupConfig).
-
-    Per-token hash = splitmix64(Σ byte[i] · base^(len−1−i) mod 2^64) —
-    the same family as :func:`hash_bytes` (bit-identical, property-tested).
-    The position→exponent map is computed for the whole concatenation at
-    once; per-token sums come from one ``np.add.reduceat``.
-    """
-    global _ASC_POW
-    n = len(toks)
-    if n == 0:
-        return np.empty(0, dtype=U64)
-    enc = [t.encode("utf-8", "surrogatepass") for t in toks]
-    lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    if total == 0:  # all-empty tokens (can't happen via str.split)
-        return splitmix64(np.zeros(n, dtype=U64))
-    maxlen = int(lens.max())
-    if _ASC_POW.shape[0] < maxlen:
-        _ASC_POW = _poly_powers_asc(maxlen)
-    buf = np.frombuffer(b"".join(enc), dtype=np.uint8).astype(U64)
-    ends = np.cumsum(lens)
-    # exponent of position p in token [start, end) is end-1-p
-    exp_idx = np.repeat(ends, lens) - 1 - np.arange(total, dtype=np.int64)
-    starts = ends - lens
-    with np.errstate(over="ignore"):
-        contrib = buf * _ASC_POW[exp_idx]
-        sums = np.add.reduceat(contrib, starts)
-    h = np.where(lens > 0, sums, U64(0)).astype(U64)
-    return splitmix64(h)
-
-
-def token_shingles(text: str, k: int) -> np.ndarray:
-    """Distinct hashed k-token shingles (whitespace tokens) → sorted int64[].
-
-    Token hashing is one vectorized :func:`hash_token_array` call — a
-    per-token Python hash_bytes loop here measured ~20ms for a 500-token
-    document, and the pandas ``hash_array`` alternative both crashes on
-    lone surrogates and version-pins the hash space."""
-    toks = text.split()
-    if len(toks) < k:
-        return np.empty(0, dtype=np.int64)
-    th = hash_token_array(toks)
-    win = np.lib.stride_tricks.sliding_window_view(th, k)
-    if k not in _POW_CACHE:
-        _POW_CACHE[k] = _poly_powers(k)
-    pows = _POW_CACHE[k]
-    with np.errstate(over="ignore"):
-        h = (win * pows[None, :]).sum(axis=1, dtype=U64)
-    return np.sort(np.unique(splitmix64(h)).view(np.int64))
-
-
 def hash_bytes(data: bytes) -> np.uint64:
     """Polynomial+splitmix hash of a byte string → uint64 scalar."""
     b = np.frombuffer(data, dtype=np.uint8).astype(U64)
@@ -368,10 +297,3 @@ def hamming64(a: int, b: int) -> int:
     """Hamming distance between two 64-bit signatures."""
     return int(bin((int(a) ^ int(b)) & 0xFFFFFFFFFFFFFFFF).count("1"))
 
-
-def shingle_fn(unit: str):
-    if unit == "char":
-        return char_shingles
-    if unit == "token":
-        return token_shingles
-    raise ValueError(f"bad shingle unit {unit!r}")

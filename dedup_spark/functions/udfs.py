@@ -22,11 +22,12 @@ def make_shingle_udf(cfg: DedupConfig):
     Analog of KMC k-mer enumeration (reference kmer_utilities.py:89-120).
     """
     k = cfg.shingle_k
-    fn = hashing.shingle_fn(cfg.shingle_unit)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def shingle_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: fn(t if t is not None else "", k))
+        return texts.map(
+            lambda t: hashing.char_shingles(t if t is not None else "", k)
+        )
 
     return shingle_udf
 

@@ -64,14 +64,14 @@ against post-fold state.
 Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
 a delta can legitimately move the fitted band, which invalidates every
-signature; that IS a full rerun), ``df_lo >= 2`` (batch parity), and
-``candidate_source`` in {"banding", "prefix"}. The prefix path replaces
-the batch pipeline's df-ascending token order with ascending shingle
-VALUE — the prefix-filter pigeonhole holds for ANY fixed total order,
-and a corpus-independent order is what makes the probe side computable
-from durable signature state without a global df pass (the df order
-only optimizes candidate volume; verified output is order-invariant
-because prefix recall is 1.0 under both).
+signature; that IS a full rerun) and ``candidate_source`` in
+{"banding", "prefix"} (``df_lo >= 2`` holds for every config). The
+prefix path replaces the batch pipeline's df-ascending token order with
+ascending shingle VALUE — the prefix-filter pigeonhole holds for ANY
+fixed total order, and a corpus-independent order is what makes the
+probe side computable from durable signature state without a global df
+pass (the df order only optimizes candidate volume; verified output is
+order-invariant because prefix recall is 1.0 under both).
 
 No reference analog — the reference is a one-shot CLI
 (/root/reference/dedup/dedup.py:648-677); this is part of the
@@ -158,13 +158,6 @@ def _require_supported_config(cfg: DedupConfig) -> None:
             "incremental dedup requires df_band_mode='manual': auto band "
             "selection re-fits on the whole corpus, so a delta can move "
             "the band and invalidate every signature — that is a full rerun"
-        )
-    if cfg.df_lo < 2:
-        raise ValueError(
-            "incremental dedup requires df_lo >= 2: the batch path "
-            "pre-filters df >= 2 before band membership, and with df_lo=1 "
-            "a 1→2 df move is invisible to band-flip detection (both sides "
-            "in band) while changing the fresh-run informative sets"
         )
     if cfg.candidate_source not in ("banding", "prefix"):
         raise ValueError(
@@ -387,11 +380,11 @@ class IncrementalDedup:
 
         shingle_sets / signatures / bucket_sizes / verified_pairs /
         clusters / skew_report move (driver-side rename, no copy) into
-        state tables; only the full (shingle, df) table (the slim in_band
-        pipeline checkpoint cannot answer "was this df 1 or out-of-band",
-        so state keeps real counts including 1) and the raw turns are
-        computed/written fresh. Band rows are not state: a fold explodes
-        them from the signature state, as the batch pipeline does."""
+        state tables; only the (shingle, df) table and the raw turns are
+        computed/written fresh — state keeps every df including 1, which
+        the pipeline's manual-mode annotated table drops. Band rows are
+        not state: a fold explodes them from the signature state, as the
+        batch pipeline does."""
         res = self.pipeline.run(turns)
         cat, cfg = self.cat, self.cfg
         banding = cfg.candidate_source == "banding"
@@ -840,8 +833,7 @@ class _Fold:
         self.components, _ = self._write_result(
             TBL_CLUSTERS,
             connected_components(
-                nodes, self.verified.select("conv_a", "conv_b"),
-                self.cfg.cc_max_iters,
+                nodes, self.verified.select("conv_a", "conv_b")
             ),
         )
         turns_post = self._conv(SEG_TURNS).join(

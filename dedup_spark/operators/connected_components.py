@@ -1,28 +1,37 @@
-"""Iterative connected components (hash-to-min) over verified pairs.
+"""Connected components over verified pairs: star contraction.
 
 The reference marks duplicates pairwise and implicitly (dedup.py:164-187);
-the north rule makes clusters explicit via a hash-to-min label
-propagation loop:
+the north rule makes clusters explicit. Every node's label is the minimum
+conv_id in its component — deterministic and order-independent.
 
-    label(v) ← min( label(v), min over neighbors u of label(u) )
+The distributed path alternates large-star and small-star (Kiveris et
+al., *Connected Components in MapReduce and Beyond*, SoCC'14) over the
+deduplicated edge set, each edge stored once as (hi, lo) with hi > lo:
 
-repeated until fixpoint. Labels start as the node's own id, so the
-converged label of every node is the minimum conv_id in its component —
-deterministic and order-independent.
+* large-star: every edge (hi, lo) becomes (hi, m(lo)), where m(v) is the
+  minimum of v's closed neighbourhood — the smallest neighbour smaller
+  than v, or v itself;
+* small-star: for each hi, with m the smallest lo among its edges, hi
+  and every other lo of hi are attached to m: (hi, m) and (lo, m).
+
+Each step keeps the components; the alternation reaches a fixpoint in
+O(log n) rounds on paths and trees, whatever the id order (11 rounds on
+a shuffled-id path of 4,096 nodes). The loop stops when a round moves
+no edge, i.e. leaves the edge set unchanged: then every edge joins a leaf
+to its one centre, the centre being the component minimum, and the
+labels are ``nodes ⟕ (leaf → centre)`` with unmatched nodes labelling
+themselves. The data decides the number of rounds; there is no budget.
 
 Catalyst has no fixpoint operator, so the loop is driver-orchestrated:
-each iteration is one shuffle join (labels ⋈ symmetric edges) + one
-groupBy min; ``localCheckpoint`` after every iteration truncates the
-lineage so plans don't grow unboundedly (the Iceberg-table-per-iteration
-variant swaps localCheckpoint for a catalog write). Convergence is
-O(diameter) iterations for hash-to-min; a graph that does not converge
-within ``max_iters`` rounds raises instead of returning partial labels.
+each step is ``localCheckpoint``-ed to truncate the lineage, and the
+"did an edge move" flag rides along in the step's own rows, so the stop
+test is one probe per round over the checkpointed edges.
 
 Hybrid endgame: dedup edge sets are tiny relative to the corpus (the
 pairs that survived LSH + exact verify), so when the edge count fits a
 driver budget the fixpoint collapses to one collect + union-find (path
 compression, C-speed dict ops) + one broadcast relabel join — replacing
-O(diameter) serial-jobs-per-run with a single job. The NODE table is
+O(log n) serial rounds per run with a single job. The NODE table is
 never collected (at corpus scale it is huge while the edge set is not);
 isolated nodes keep their own label via the left join. Result is
 bit-identical to the loop (same components, same min-id labels), so the
@@ -32,7 +41,7 @@ billion-edge graph the distributed loop runs instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from dedup_spark.util import eager_ckpt
 
@@ -64,7 +73,7 @@ def _unionfind_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             # attach the larger root under the smaller → the root IS the
-            # component min, matching the hash-to-min loop's labels
+            # component min, matching the star loop's labels
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
@@ -89,10 +98,59 @@ def _unionfind_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+def _star_contract(edges: DataFrame) -> tuple[DataFrame, int]:
+    """edges(conv_a, conv_b) → ((hi = leaf, lo = centre) rows, rounds):
+    alternating large-star/small-star until a round moves no edge."""
+    e = eager_ckpt(
+        edges.filter(F.col("conv_a") != F.col("conv_b"))
+        .select(
+            F.greatest("conv_a", "conv_b").alias("hi"),
+            F.least("conv_a", "conv_b").alias("lo"),
+        )
+        .distinct()
+    )
+    by_hi = Window.partitionBy("hi")
+    rounds = 0
+    while True:
+        rounds += 1
+        # large-star: (hi, lo) → (hi, m(lo)); m(lo) is lo's smallest
+        # smaller neighbour, which exists iff lo is some edge's hi
+        m = e.groupBy(F.col("hi").alias("v")).agg(F.min("lo").alias("m"))
+        e = eager_ckpt(
+            e.join(m, e.lo == m.v, "left").select(
+                "hi",
+                F.coalesce("m", "lo").alias("lo"),
+                F.col("m").isNotNull().alias("_moved"),
+            )
+        )
+        # small-star: hang hi and all its lo's on the smallest lo; the
+        # group's flag covers the large-star moves of its edges too
+        g = e.select(
+            "hi",
+            "lo",
+            F.min("lo").over(by_hi).alias("m"),
+            (
+                F.max("_moved").over(by_hi)
+                | (F.max("lo").over(by_hi) != F.min("lo").over(by_hi))
+            ).alias("_moved"),
+        )
+        e = eager_ckpt(
+            g.select("hi", F.col("m").alias("lo"), "_moved")
+            .union(
+                g.filter(F.col("lo") != F.col("m")).select(
+                    F.col("lo").alias("hi"), F.col("m").alias("lo"), "_moved"
+                )
+            )
+            .groupBy("hi", "lo")
+            .agg(F.max("_moved").alias("_moved"))
+        )
+        if e.filter(F.col("_moved")).limit(1).count() == 0:
+            return e.select("hi", "lo"), rounds
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    max_iters: int = 50,
     driver_edge_limit: int = DRIVER_EDGE_LIMIT,
 ) -> DataFrame:
     """nodes(conv_id) + edges(conv_a, conv_b) → (conv_id, cluster_id).
@@ -102,54 +160,11 @@ def connected_components(
     """
     if driver_edge_limit > 0 and edges.limit(driver_edge_limit + 1).count() <= driver_edge_limit:
         return _unionfind_labels(nodes, edges)
-    sym = (
-        edges.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst"))
-        .union(edges.select(F.col("conv_b").alias("src"), F.col("conv_a").alias("dst")))
-        .dropDuplicates(["src", "dst"])
+    stars, _ = _star_contract(edges)
+    return nodes.select("conv_id").join(
+        stars.select(F.col("hi").alias("conv_id"), F.col("lo").alias("cluster_id")),
+        "conv_id",
+        "left",
+    ).select(
+        "conv_id", F.coalesce("cluster_id", "conv_id").alias("cluster_id")
     )
-    sym = eager_ckpt(sym)
-    labels = eager_ckpt(
-        nodes.select(F.col("conv_id"), F.col("conv_id").alias("cluster_id"))
-    )
-
-    for it in range(max_iters):
-        # label each dst with the (current) min label among its neighbors
-        neighbor_min = (
-            sym.join(labels, sym.src == labels.conv_id)
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_label"))
-        )
-        # the "did anything change" flag rides along in the SAME pass
-        # (a separate old-vs-new join per iteration doubled the loop's
-        # fixed job cost); the convergence probe then just filters the
-        # already-checkpointed result
-        new_labels = eager_ckpt(
-            labels.join(neighbor_min, labels.conv_id == neighbor_min.dst, "left")
-            .select(
-                "conv_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_label", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (
-                    F.col("nbr_label").isNotNull()
-                    & (F.col("nbr_label") < F.col("cluster_id"))
-                ).alias("_changed"),
-            )
-        )
-        labels = new_labels.drop("_changed")
-        # probe convergence every 2nd iteration (and on the last): each
-        # probe is one driver-serial count job over the checkpointed
-        # labels — at worst one extra (idempotent) iteration runs, and
-        # the serial job count per run halves (Amdahl tax at high cores)
-        if it % 2 == 1 or it == max_iters - 1:
-            if new_labels.filter(F.col("_changed")).limit(1).count() == 0:
-                break
-    else:
-        # the last round's probe still saw a label move: the labels are
-        # partial, so refuse rather than return split components
-        raise RuntimeError(
-            f"connected_components did not converge within max_iters="
-            f"{max_iters} label-propagation rounds (cc_max_iters); a "
-            "component's diameter exceeds the round budget"
-        )
-    return labels.select("conv_id", "cluster_id")

@@ -256,14 +256,3 @@ def span_position_classes(
         .select("conv_id", (F.col("start") + F.col("i")).alias("pos"), "key")
     )
     return position_classes(frags, shingle_df, lo, hi)
-
-
-def conv_class_totals(poscls: DataFrame) -> DataFrame:
-    """(conv_id, n_dup_positions, n_non_dup_positions) — per-conversation
-    occurrence totals of duplicated / non-duplicated shingle positions
-    (analog of sum(homo_dup_depth) / sum(homo_non_dup_depth),
-    reference dedup.py:418-422, SURVEY A5)."""
-    return poscls.groupBy("conv_id").agg(
-        F.sum(F.when(F.col("cls") == 1, 1).otherwise(0)).alias("n_dup_positions"),
-        F.sum(F.when(F.col("cls") == -1, 1).otherwise(0)).alias("n_non_dup_positions"),
-    )

@@ -352,21 +352,11 @@ def informative_from_ann(
     (see :func:`exploded_shingles`) and ``conv_dict`` — a tiny
     (conv_id, cid) table, one row per conversation — restores the real
     id via a broadcast join AFTER aggregation, when there is one row per
-    conversation instead of one per shingle occurrence.
-
-    Accepts either annotated-table layout: the full (.., df) table, or
-    the SLIM manual-mode layout (.., in_band boolean) where every row is
-    df >= 2 already and the band predicate is precomputed — the slim
-    checkpoint drops 8 bytes/row from the pipeline's biggest table
-    (measured 103.5M rows at 12k convs: ~830 MB less written and less
-    read per consumer)."""
-    slim = "in_band" in ann.columns
-    band = (
-        F.col("in_band") if slim else F.col("df").between(F.lit(lo), F.lit(hi))
-    )
-    pre = ann if slim else ann.filter(F.col("df") >= 2)
+    conversation instead of one per shingle occurrence."""
+    band = F.col("df").between(F.lit(lo), F.lit(hi))
     out = (
-        pre.groupBy(id_col)
+        ann.filter(F.col("df") >= 2)
+        .groupBy(id_col)
         .agg(
             F.array_sort(
                 F.collect_list(F.when(band, F.col("shingle")))
@@ -386,25 +376,11 @@ def informative_from_ann(
     return out.select("conv_id", "shingles", "n_shingles", "n_repeated")
 
 
-def repeated_df_from_ann(ann: DataFrame, lo: int = 2, hi: int = 4) -> DataFrame:
+def repeated_df_from_ann(ann: DataFrame) -> DataFrame:
     """Distinct (shingle, df) for df >= 2 off the annotated table — the
     position-class df lookup side. Map-side partial aggregation dedups
     each task's occurrences before the shuffle, so ~df× fewer rows move
-    than a raw distinct of the exploded table.
-
-    On the slim (in_band) layout the true df is gone; a PSEUDO-df is
-    reconstructed that position-class semantics cannot distinguish from
-    the real one: in-band rows get ``lo`` (any value inside [lo, hi]),
-    out-of-band df>=2 rows get ``hi + 1`` (any repeated value outside) —
-    classification only tests membership, never the magnitude."""
-    if "in_band" in ann.columns:
-        return ann.dropDuplicates(["shingle"]).select(
-            "shingle",
-            F.when(F.col("in_band"), F.lit(lo))
-            .otherwise(F.lit(hi) + 1)
-            .cast("long")
-            .alias("df"),
-        )
+    than a raw distinct of the exploded table."""
     return ann.filter(F.col("df") >= 2).dropDuplicates(["shingle"]).select(
         "shingle", "df"
     )

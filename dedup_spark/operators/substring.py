@@ -163,36 +163,9 @@ def key_occurrence(keys: DataFrame) -> DataFrame:
     return keys.groupBy("key").agg(F.count(F.lit(1)).alias("occ"))
 
 
-def suffix_buckets(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """One groupBy(key) pass → (key, occs array<struct<conv_id,pos>>, occ),
-    keeping only keys seen more than once (singleton suffixes — the vast
-    majority — can never anchor a match). This is the single shared
-    upstream of both the skew report and anchor-pair expansion, so the
-    (huge) suffix-key explode is scanned exactly once; the result is
-    small (repeated keys only) and checkpoint-friendly.
-
-    Oversized buckets keep only their occurrence COUNT (occs truncated
-    to empty) so a boilerplate key can't blow up the checkpoint; they
-    are excluded from pairing and surface in the skew report."""
-    return (
-        keys.groupBy("key")
-        .agg(
-            F.collect_list(F.struct("conv_id", "pos")).alias("occs"),
-            F.count(F.lit(1)).alias("occ"),
-        )
-        .filter(F.col("occ") > 1)
-        .withColumn(
-            "occs",
-            F.when(F.col("occ") <= cfg.max_anchor_occ, F.col("occs")).otherwise(
-                F.slice("occs", 1, 0)  # type-preserving empty array
-            ),
-        )
-    )
-
-
 def anchor_skew_report(key_occ: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Keys excluded by the occurrence cap — logged, never silent.
-    Accepts any DF with (key, occ) — raw counts or suffix_buckets."""
+    Accepts any DF with (key, occ), e.g. :func:`key_occurrence`."""
     return key_occ.select("key", "occ").filter(F.col("occ") > cfg.max_anchor_occ)
 
 
@@ -307,35 +280,6 @@ def restrict_keys(keys: DataFrame, pairs: DataFrame) -> DataFrame:
         .distinct()
     )
     return keys.join(convs, "conv_id", "left_semi")
-
-
-def anchor_pairs_from_buckets(
-    buckets: DataFrame, cfg: DedupConfig, pairs: DataFrame | None = None
-) -> DataFrame:
-    """suffix_buckets → anchor pairs (see anchor_matches)."""
-    grouped = buckets.filter(
-        (F.col("occ") > 1) & (F.col("occ") <= cfg.max_anchor_occ)
-    )
-    pair_expr = F.expr(
-        "flatten(transform(occs, (x, i) -> "
-        "transform(slice(occs, i + 2, size(occs)), "
-        "y -> named_struct('p', x, 'q', y))))"
-    )
-    e = grouped.select(F.explode(pair_expr).alias("pq")).filter(
-        F.col("pq.p.conv_id") != F.col("pq.q.conv_id")
-    )
-    a_first = F.col("pq.p.conv_id") < F.col("pq.q.conv_id")
-    out = e.select(
-        F.when(a_first, F.col("pq.p.conv_id")).otherwise(F.col("pq.q.conv_id")).alias("conv_a"),
-        F.when(a_first, F.col("pq.q.conv_id")).otherwise(F.col("pq.p.conv_id")).alias("conv_b"),
-        F.when(a_first, F.col("pq.p.pos")).otherwise(F.col("pq.q.pos")).alias("a_pos"),
-        F.when(a_first, F.col("pq.q.pos")).otherwise(F.col("pq.p.pos")).alias("b_pos"),
-    )
-    if pairs is not None:
-        out = out.join(
-            pairs.select("conv_a", "conv_b").dropDuplicates(), ["conv_a", "conv_b"], "left_semi"
-        )
-    return out
 
 
 def chain_anchors(anchors: DataFrame, cfg: DedupConfig) -> DataFrame:

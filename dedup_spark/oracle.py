@@ -31,9 +31,8 @@ def assemble(turns: pd.DataFrame) -> dict[str, str]:
 
 def run_oracle(turns: pd.DataFrame, cfg: DedupConfig):
     """→ dict with candidate_pairs, verified_pairs, clusters, df_band."""
-    shingle = hashing.shingle_fn(cfg.shingle_unit)
     docs = assemble(turns)
-    sets = {c: shingle(d, cfg.shingle_k) for c, d in docs.items()}
+    sets = {c: hashing.char_shingles(d, cfg.shingle_k) for c, d in docs.items()}
 
     # corpus DF + informative band
     df_counter: Counter = Counter()

@@ -135,29 +135,15 @@ class DedupPipeline:
         # overwhelming majority of the explode (measured 122.5M → 26.6M
         # rows at a 12k-conv corpus), so checkpointing them serializes,
         # writes, and re-deserializes ~5× the bytes any downstream stage
-        # touches. Further (round 4): manual-mode consumers only ever use
-        # df as two booleans ("in the band", "repeated"), so the slim
-        # layout stores a 1-byte in_band flag instead of the 8-byte df —
-        # 103.5M rows at 12k convs, ~830 MB less checkpoint traffic per
-        # write/read (this is the pipeline's single biggest table; see
-        # repeated_df_from_ann for the lossless pseudo-df the
-        # position-class lookup reconstructs). Auto band modes keep the
-        # full table (the histogram needs every df). Resume safety:
-        # df_band_mode is part of the config fingerprint, so switching
-        # modes recomputes the stage; an old full-layout checkpoint
-        # remains readable (consumers detect the layout by column).
+        # touches. Auto band modes keep those rows (the histogram needs
+        # every df). Every mode stores the same (cid, shingle, df)
+        # layout; df_band_mode is part of the config fingerprint, so
+        # switching modes recomputes the stage.
         manual_band = cfg.df_band_mode == "manual"
         ann = cat.stage(
             "shingle_ann",
             lambda: (
-                shingling.annotate_shingle_df(exploded)
-                .filter(F.col("df") >= 2)
-                .select(
-                    *exploded.columns,
-                    F.col("df")
-                    .between(cfg.df_lo, cfg.df_hi)
-                    .alias("in_band"),
-                )
+                shingling.annotate_shingle_df(exploded).filter(F.col("df") >= 2)
                 if manual_band
                 else shingling.annotate_shingle_df(exploded)
             ),
@@ -273,7 +259,6 @@ class DedupPipeline:
                 lambda: connected_components(
                     transcripts.select("conv_id"),
                     verified.select("conv_a", "conv_b"),
-                    cfg.cc_max_iters,
                 ),
             )
             # deduped and stats are independent given clusters — both go
@@ -354,7 +339,7 @@ class DedupPipeline:
 
                 rep_f = pool.submit(
                     lambda: eager_ckpt(
-                        shingling.repeated_df_from_ann(ann, lo, hi)
+                        shingling.repeated_df_from_ann(ann)
                         .withColumnRenamed("shingle", "key")
                     )
                 )

@@ -1,27 +1,47 @@
-"""Hash-to-min connected components on hand-built graphs
-(FIXTURES.md §3 CC graphs: chain, star, two components, singleton,
-self-loop). Every graph runs through BOTH physical strategies — the
-driver union-find endgame (default for small edge sets) and the
-distributed hash-to-min loop (forced via driver_edge_limit=0) — and
-must produce identical labels."""
+"""Connected components on hand-built graphs (FIXTURES.md §3 CC
+graphs: chain, star, two components, singleton, self-loop, plus long
+paths and a binary tree). Every graph runs through BOTH physical
+strategies — the driver union-find endgame (default for small edge
+sets) and the distributed star-contraction loop (forced via
+driver_edge_limit=0) — and must produce identical labels. The long
+graphs also bound the loop's rounds by 2·⌈log₂ n⌉ + 2."""
+
+import math
+import random
 
 import pytest
 
+from dedup_spark.operators import connected_components as cc
 from dedup_spark.operators.connected_components import connected_components
 
 
-def _run(spark, nodes, edges, max_iters=50):
+@pytest.fixture
+def star_rounds(monkeypatch):
+    """Round counts of every star-contraction run in the test."""
+    rounds = []
+    contract = cc._star_contract
+
+    def counted(edges):
+        stars, n = contract(edges)
+        rounds.append(n)
+        return stars, n
+
+    monkeypatch.setattr(cc, "_star_contract", counted)
+    return rounds
+
+
+def _run(spark, nodes, edges):
     n = spark.createDataFrame([(x,) for x in nodes], "conv_id string")
     e = spark.createDataFrame(edges or [("zzz", "zzz")], "conv_a string, conv_b string")
     if not edges:
         e = e.limit(0)
     by_unionfind = {
         r.conv_id: r.cluster_id
-        for r in connected_components(n, e, max_iters).collect()
+        for r in connected_components(n, e).collect()
     }
     by_loop = {
         r.conv_id: r.cluster_id
-        for r in connected_components(n, e, max_iters, driver_edge_limit=0).collect()
+        for r in connected_components(n, e, driver_edge_limit=0).collect()
     }
     assert by_unionfind == by_loop
     return by_unionfind
@@ -61,14 +81,29 @@ def test_long_chain_converges(spark):
     assert set(labels.values()) == {"n000"}
 
 
-def test_loop_raises_when_round_budget_runs_out(spark):
-    """A chain longer than the round budget cannot converge: the loop
-    raises instead of returning partial (split) labels."""
-    nodes = [f"n{i:03d}" for i in range(12)]
-    n = spark.createDataFrame([(x,) for x in nodes], "conv_id string")
-    e = spark.createDataFrame(
-        [(nodes[i], nodes[i + 1]) for i in range(11)],
-        "conv_a string, conv_b string",
-    )
-    with pytest.raises(RuntimeError, match="max_iters=4"):
-        connected_components(n, e, max_iters=4, driver_edge_limit=0)
+def _ids(n, shuffled):
+    ids = [f"n{i:05d}" for i in range(n)]
+    if shuffled:
+        random.Random(7).shuffle(ids)
+    return ids
+
+
+def _assert_one_component_in_log_rounds(spark, star_rounds, ids, edges):
+    labels = _run(spark, ids, edges)
+    assert set(labels.values()) == {min(ids)}
+    assert len(labels) == len(ids)
+    assert star_rounds and star_rounds[0] <= 2 * math.ceil(math.log2(len(ids))) + 2
+
+
+@pytest.mark.parametrize("shuffled", [False, True], ids=["sorted", "shuffled"])
+def test_long_path_in_log_rounds(spark, star_rounds, shuffled):
+    """A 1,024-node path: label propagation needs 1,023 rounds on it."""
+    ids = _ids(1024, shuffled)
+    edges = [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)]
+    _assert_one_component_in_log_rounds(spark, star_rounds, ids, edges)
+
+
+def test_shuffled_binary_tree_in_log_rounds(spark, star_rounds):
+    ids = _ids(1023, shuffled=True)
+    edges = [(ids[i], ids[(i - 1) // 2]) for i in range(1, len(ids))]
+    _assert_one_component_in_log_rounds(spark, star_rounds, ids, edges)

@@ -28,12 +28,6 @@ def test_char_shingles_deterministic():
     assert (a == b).all()
 
 
-def test_token_shingles():
-    got = H.token_shingles("a b c d e", 3)
-    assert len(got) == 3  # abc bcd cde
-    assert H.token_shingles("a b", 3).shape == (0,)
-
-
 def test_minhash_identical_sets_identical_signatures():
     a, b = H.minhash_params(128, 42)
     s = np.array([5, 9, 100, -3], dtype=np.int64)

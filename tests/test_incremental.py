@@ -239,6 +239,12 @@ class TestReviewHardening:
                 str(tmp_path_factory.mktemp("wh_lo")),
             )
 
+    def test_df_lo_1_rejected_by_batch_config(self):
+        """The batch side refuses df_lo=1 up front, before any stage
+        runs: position_classes needs lo >= 2."""
+        with pytest.raises(ValueError, match="df_lo must be >= 2"):
+            DedupConfig(df_lo=1)
+
     def test_stale_fingerprint_state_rejected(self, spark, tmp_path_factory):
         """State written under one config must not silently feed an
         append under another (different shingle_k = different hash

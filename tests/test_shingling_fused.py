@@ -114,46 +114,3 @@ def test_ann_path_matches_join_path(spark):
     )
     want_rep = sorted((s, d) for s, d in want_df.items() if d >= 2)
     assert got_rep == want_rep
-
-
-def test_slim_in_band_layout_matches_full(spark):
-    """Manual-mode slim annotated layout (in_band boolean instead of df):
-    informative sets are identical, and the reconstructed pseudo-df
-    classifies positions identically to the real df (membership in
-    [lo, hi] / == 1 is all position_classes ever tests)."""
-    from pyspark.sql import functions as F
-
-    data = {
-        "a": [1, 2, 3, 4, 7],
-        "b": [1, 2, 4],
-        "c": [1, 4, 8],
-        "d": [4],
-        "e": [5, 6],
-    }
-    exploded = _exploded(spark, data)
-    lo, hi = 2, 3
-    full = shingling.annotate_shingle_df(exploded)
-    slim = (
-        full.filter(F.col("df") >= 2)
-        .select(*exploded.columns, F.col("df").between(lo, hi).alias("in_band"))
-    )
-
-    want = {
-        r["conv_id"]: (r["shingles"], r["n_shingles"], r["n_repeated"])
-        for r in shingling.informative_from_ann(full, lo, hi).collect()
-    }
-    got = {
-        r["conv_id"]: (r["shingles"], r["n_shingles"], r["n_repeated"])
-        for r in shingling.informative_from_ann(slim, lo, hi).collect()
-    }
-    assert got == want
-
-    # pseudo-df: same shingle set, and band/repeated membership identical
-    real = {r["shingle"]: r["df"]
-            for r in shingling.repeated_df_from_ann(full).collect()}
-    pseudo = {r["shingle"]: r["df"]
-              for r in shingling.repeated_df_from_ann(slim, lo, hi).collect()}
-    assert set(real) == set(pseudo)
-    for s, d in real.items():
-        assert (lo <= d <= hi) == (lo <= pseudo[s] <= hi)
-        assert pseudo[s] >= 2

@@ -131,7 +131,6 @@ def main(argv: list[str] | None = None) -> int:
             "n_resigned": res.n_resigned,
             "n_verified_pairs": res.verified_pairs.count(),
             "n_clusters": res.clusters.filter("conv_id = cluster_id").count(),
-            "skewed_buckets": res.skew_report.count(),
             "wall_sec": round(wall, 3),
             "new_turns_per_sec": round(n_new_turns / wall, 1) if wall else 0.0,
             "master": spark.sparkContext.master,

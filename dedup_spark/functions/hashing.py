@@ -99,18 +99,6 @@ def char_window_hashes(text: str | bytes, k: int) -> np.ndarray:
         return splitmix64(h).view(np.int64)
 
 
-def hash_bytes(data: bytes) -> np.uint64:
-    """Polynomial+splitmix hash of a byte string → uint64 scalar."""
-    b = np.frombuffer(data, dtype=np.uint8).astype(U64)
-    if b.shape[0] == 0:
-        return splitmix64(np.array([U64(0)], dtype=U64))[0]
-    acc = U64(0)
-    # Horner, vectorized as powers dot product
-    pows = _poly_powers(b.shape[0]) if b.shape[0] not in _POW_CACHE else _POW_CACHE[b.shape[0]]
-    acc = (b * pows).sum(dtype=U64)
-    return splitmix64(np.array([acc], dtype=U64))[0]
-
-
 def minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic (a, b) multiply-shift parameters; a forced odd."""
     rng = np.random.Generator(np.random.PCG64(seed))

@@ -11,16 +11,18 @@ added and/or removed conversations in, such that the updated
 :class:`~dedup_spark.pipeline.DedupPipeline` run over the post-change
 corpus would produce (asserted end-to-end in tests/test_incremental.py).
 
-Why exactness is non-trivial — two global dependencies drift:
+Why exactness is non-trivial — corpus document frequencies drift: an
+added (removed) conversation can push an old shingle's df into (out of)
+the informative band, changing the informative sets — and therefore the
+signatures — of UNCHANGED old conversations, which must re-sign.
 
-* corpus document frequencies: an added (removed) conversation can push
-  an old shingle's df into (out of) the informative band, changing the
-  informative sets — and therefore the signatures — of UNCHANGED old
-  conversations, which must re-sign;
-* (banding mode) candidacy is a function of GLOBAL bucket size: a
-  bucket the delta pushes across the drop threshold changes the
-  candidate set of unchanged conv pairs inside it, so every member of a
-  drop-tier-crossing bucket is promoted into the changed set.
+Band-bucket sizes are NOT a second global dependency. A MinHash value
+fixes its shingle (splitmix64 and ``a·x + b mod 2^64`` with odd ``a``
+are bijections), so every member of a band bucket holds the same
+informative shingle, and no bucket has more than ``df_hi`` members.
+With ``df_hi <= max_band_bucket`` (required for banding) the batch
+pipeline salts and drops no bucket, so whether a pair is a candidate
+depends on its two signatures alone.
 
 Cost model (the round-5 redesign — the round-4 implementation re-built
 every global aggregate per append, measured at 0.43× of a full
@@ -31,13 +33,12 @@ each small result table per fold, so per-apply work is
 * shuffle cost ∝ (delta ∪ affected): df counts merge only for TOUCHED
   shingles against a shingle-restricted state read — the one read of
   the df state per fold (re-signing takes band membership from the
-  stored informative sets plus the fold's df delta), bucket sizes update
-  only for TOUCHED buckets against a bucket-restricted state read
-  (sizes are READ from durable state, never re-aggregated from the full
-  signature table), the one-sided candidate join touches only changed
-  convs' buckets, and the verify join only the candidate convs;
+  stored informative sets plus the fold's df delta), the one-sided
+  candidate join probes the post-fold signature state with the
+  re-signed convs' rows (broadcast when small), and the verify join
+  reads only the candidate convs;
 * full-corpus work is limited to columnar SCANS of immutable segments
-  (flipped-shingle membership probe, prefix-emit probe side) — no
+  (flipped-shingle membership probe, candidate probe side) — no
   full-corpus shuffle, no full-corpus UDF, no wholesale rewrite of any
   corpus-sized table. Segment reads are bounded by periodic
   :meth:`IncrementalDedup.compact` (auto after ``auto_compact_segments``
@@ -65,7 +66,8 @@ Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
 a delta can legitimately move the fitted band, which invalidates every
 signature; that IS a full rerun) and ``candidate_source`` in
-{"banding", "prefix"} (``df_lo >= 2`` holds for every config). The
+{"banding", "prefix"} (``df_lo >= 2`` holds for every config; banding
+also needs ``df_hi <= max_band_bucket``, see above). The
 prefix path replaces the batch pipeline's df-ascending token order with
 ascending shingle VALUE — the prefix-filter pigeonhole holds for ANY
 fixed total order, and a corpus-independent order is what makes the
@@ -108,14 +110,12 @@ SEG_TURNS = "inc_turns"      # raw turns of convs (re)added at epoch e
 SEG_SETS = "inc_sets"        # (conv_id, shingles, n_shingles) raw sets
 SEG_SIGS = "inc_sigs"        # signature rows of convs (re)signed at e
 SEG_DF = "inc_df"            # (shingle, df) CURRENT totals, touched at e
-SEG_SIZES = "inc_sizes"      # (band_id, band_hash, bucket_size), touched at e
 SEG_RETIRED_SETS = "inc_retired_sets"   # (conv_id, seg_e) dead sets/turns rows
 SEG_RETIRED_SIGS = "inc_retired_sigs"   # (conv_id, seg_e) dead sig rows
 #: result tables: one full version per fold that changes them; the
 #: manifest lists only the latest
 TBL_VERIFIED = "inc_verified"
 TBL_CLUSTERS = "inc_clusters"
-TBL_SKEW = "inc_skew"
 _MANIFEST = "_inc_manifest.json"
 
 #: batch-pipeline stage names that become stale the moment the corpus
@@ -142,7 +142,6 @@ class IncrementalResult:
     verified_pairs: DataFrame
     clusters: DataFrame
     deduped_turns: DataFrame
-    skew_report: DataFrame
     n_new_convs: int
     n_affected_old: int
     n_resigned: int
@@ -163,6 +162,13 @@ def _require_supported_config(cfg: DedupConfig) -> None:
         raise ValueError(
             f"incremental dedup supports candidate_source 'banding' or "
             f"'prefix', got {cfg.candidate_source!r}"
+        )
+    if cfg.candidate_source == "banding" and cfg.df_hi > cfg.max_band_bucket:
+        raise ValueError(
+            f"incremental banding requires df_hi <= max_band_bucket, got "
+            f"df_hi={cfg.df_hi}, max_band_bucket={cfg.max_band_bucket}: a "
+            "band bucket holds at most df_hi convs, and the fold's "
+            "candidate join needs every bucket under the salting cap"
         )
 
 
@@ -205,8 +211,10 @@ class IncrementalDedup:
             )
         with open(p) as f:
             man = json.load(f)
+        # an older layout listed other result tables (the dropped-bucket
+        # report, beside bucket-size segments)
         if (man.get("fingerprint") != self.cat.fingerprint
-                or "results" not in man):
+                or set(man.get("results", ())) != {TBL_VERIFIED, TBL_CLUSTERS}):
             raise RuntimeError(
                 "incremental state was written under a different config "
                 "fingerprint or state layout — bootstrap this warehouse "
@@ -357,9 +365,8 @@ class IncrementalDedup:
         restrict: DataFrame | None = None,
         n_restrict: int | None = None,
     ) -> DataFrame:
-        """Latest-wins resolution of a key→value segmented table
-        (df state, bucket sizes): the row from the highest epoch wins
-        per key."""
+        """Latest-wins resolution of a key→value segmented table (the
+        df state): the row from the highest epoch wins per key."""
         u = self._seg_union(man, base)
         if u is None:
             raise RuntimeError(f"incremental state table {base} has no segments")
@@ -378,16 +385,15 @@ class IncrementalDedup:
     def bootstrap(self, turns: DataFrame):
         """Full batch run, then ADOPT its outputs as epoch-0 state.
 
-        shingle_sets / signatures / bucket_sizes / verified_pairs /
-        clusters / skew_report move (driver-side rename, no copy) into
-        state tables; only the (shingle, df) table and the raw turns are
-        computed/written fresh — state keeps every df including 1, which
-        the pipeline's manual-mode annotated table drops. Band rows are
+        shingle_sets / signatures / verified_pairs / clusters move
+        (driver-side rename, no copy) into state tables; only the
+        (shingle, df) table and the raw turns are computed/written
+        fresh — state keeps every df including 1, which the pipeline's
+        manual-mode annotated table drops. Band rows are
         not state: a fold explodes them from the signature state, as the
         batch pipeline does."""
         res = self.pipeline.run(turns)
         cat, cfg = self.cat, self.cfg
-        banding = cfg.candidate_source == "banding"
 
         segs: dict[str, list[int]] = {}
 
@@ -404,41 +410,31 @@ class IncrementalDedup:
             shingling.exploded_shingles(sets_df)
         ))
         seg(SEG_TURNS, turns)
-        if banding:
-            adopt("bucket_sizes", SEG_SIZES)
         adopt("shingle_sets", SEG_SETS)
         adopt("signatures", SEG_SIGS)
 
         cat.adopt("verified_pairs", f"{TBL_VERIFIED}__s0")
         cat.adopt("clusters", f"{TBL_CLUSTERS}__s0")
-        if banding:
-            cat.adopt("skew_report", f"{TBL_SKEW}__s0")
-        else:
-            cat.write(f"{TBL_SKEW}__s0", self._empty(
-                "band_id int, band_hash long, bucket_size long"
-            ))
 
         # smallest signed stratum for the prefix probe range (tracked in
         # the manifest; monotone-decreasing — deletes never raise it, a
         # superset probe range is merely extra candidates). Only the
         # prefix path reads it, and candidate_source is fingerprinted.
         min_stratum = 0
-        if not banding:
+        if cfg.candidate_source == "prefix":
             min_n = (
                 cat.read(f"{SEG_SIGS}__s0")
                 .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
             )
             min_stratum = int(math.floor(math.log2(min_n))) if min_n else 0
         self._commit_manifest(
-            0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW), 0),
-            min_stratum,
+            0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS), 0), min_stratum
         )
         # the adopted stages moved: hand back frames over their new dirs
         return replace(
             res, signatures=cat.read(f"{SEG_SIGS}__s0"),
             verified_pairs=cat.read(f"{TBL_VERIFIED}__s0"),
             clusters=cat.read(f"{TBL_CLUSTERS}__s0"),
-            skew_report=cat.read(f"{TBL_SKEW}__s0"),
         )
 
     # ----------------------------------------------------------- public API
@@ -479,7 +475,6 @@ class IncrementalDedup:
             verified_pairs=fold.verified,
             clusters=fold.components,
             deduped_turns=fold.deduped,
-            skew_report=fold.skew_report,
             n_new_convs=fold.rpt["n_new_convs"],
             n_affected_old=fold.n_affected,
             n_resigned=fold.n_resigned,
@@ -502,20 +497,15 @@ class IncrementalDedup:
         retired_sets = self._retired(man, SEG_RETIRED_SETS)
         retired_sigs = self._retired(man, SEG_RETIRED_SIGS)
         segs: dict[str, list[int]] = {}
-        conv_tables = [
+        for base, retired in (
             (SEG_TURNS, retired_sets), (SEG_SETS, retired_sets),
             (SEG_SIGS, retired_sigs),
-        ]
-        kv_tables = [(SEG_DF, ["shingle"], "df")]
-        if self.cfg.candidate_source == "banding":
-            kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
-                              "bucket_size"))
-        for base, retired in conv_tables:
+        ):
             cat.write(f"{base}__s{e}", self._resolve_conv(man, base, retired))
             segs[base] = [e]
-        for base, keys, val in kv_tables:
-            cat.write(f"{base}__s{e}", self._resolve_kv(man, base, keys, val))
-            segs[base] = [e]
+        cat.write(f"{SEG_DF}__s{e}",
+                  self._resolve_kv(man, SEG_DF, ["shingle"], "df"))
+        segs[SEG_DF] = [e]
         self._commit_manifest(
             e, segs, man["results"], int(man.get("min_stratum", 0))
         )
@@ -546,9 +536,6 @@ class _Fold:
         # the committed manifest does not list
         self.retired_sets = inc._retired(man, SEG_RETIRED_SETS)
         self.retired_sigs = inc._retired(man, SEG_RETIRED_SIGS)
-        # no bucket size moved (and prefix mode has no buckets): the
-        # dropped-bucket report is unchanged
-        self.skew_report = inc._result(man, TBL_SKEW)
 
     # ----------------------------------------------------------- helpers
 
@@ -780,16 +767,19 @@ class _Fold:
                 )
 
     def candidates(self) -> None:
-        """Candidate pairs with at least one changed conv."""
-        if self.banding:
-            self._banding_candidates()
-        else:
-            self.changed, self.rpt["n_changed_convs"] = ckpt_count(
-                self.affected_old.unionByName(self.added_convs)
-                .dropDuplicates()
-            )
-            self.cand = self._prefix_candidates()
-        self.cand, self.rpt["n_candidate_pairs"] = ckpt_count(self.cand)
+        """Candidate pairs with at least one changed conv. A changed conv
+        has band rows or prefix tokens only if it was re-signed, so the
+        re-signed convs probe the post-fold signature state."""
+        self.changed, self.rpt["n_changed_convs"] = ckpt_count(
+            self.affected_old.unionByName(self.added_convs).dropDuplicates()
+        )
+        sigs_post = self._conv(SEG_SIGS).join(
+            self.inc._restrict_hint(self.sig_gone, self.n_gone),
+            "conv_id", "left_anti",
+        ).unionByName(self.resigned)
+        find = (self._banding_candidates if self.banding
+                else self._prefix_candidates)
+        self.cand, self.rpt["n_candidate_pairs"] = ckpt_count(find(sigs_post))
 
     def verify(self) -> None:
         """Verify only changed-touching candidates, then splice them into
@@ -862,126 +852,29 @@ class _Fold:
 
     # --------------------------------------------------- candidate paths
 
-    def _banding_candidates(self) -> None:
-        """One-sided three-tier band join over bucket-restricted state.
+    #: changed-side rows up to this count are broadcast into the
+    #: candidate join, so the corpus-wide probe side never shuffles.
+    #: Lower than ``BROADCAST_RESTRICT_ROWS``: these rows carry a conv id
+    #: and the join keys, not a bare key.
+    BROADCAST_PROBE_ROWS = 2_000_000
 
-        Bucket sizes are READ from durable state and updated with delta
-        counts (the round-4 path re-exploded ALL old signatures and
-        re-aggregated global sizes per append — ∝ corpus). Candidacy is
-        a GLOBAL property: a bucket the delta pushes across the drop
-        threshold changes outcomes for unchanged convs inside it, so
-        every member of a drop-tier-crossing bucket is promoted into the
-        changed set (both crossing directions: an append can push a
-        bucket over, a removal can pull one back under). Band rows are a
-        lazy projection of the signature state, never stored. Writes the
-        touched bucket sizes and, when a size moved, the dropped-bucket
-        report."""
-        inc, cfg, man, rpt = self.inc, self.cfg, self.man, self.rpt
-        bkey = ["band_id", "band_hash"]
+    def _small_side(self, df: DataFrame, n: int) -> DataFrame:
+        return F.broadcast(df) if n <= self.BROADCAST_PROBE_ROWS else df
 
-        bands_added = lsh.explode_bands(self.resigned)
-        bands_gone = lsh.explode_bands(self._conv(
-            SEG_SIGS, restrict=self.sig_gone, n_restrict=self.n_gone,
-        ))
-        sz_delta, rpt["n_touched_buckets"] = ckpt_count(
-            lsh.band_bucket_sizes(bands_added)
-            .withColumnRenamed("bucket_size", "n_add")
-            .join(
-                lsh.band_bucket_sizes(bands_gone)
-                .withColumnRenamed("bucket_size", "n_sub"),
-                bkey, "full_outer",
-            )
-            .select(
-                *bkey,
-                (F.coalesce("n_add", F.lit(0)) - F.coalesce("n_sub", F.lit(0))
-                 ).alias("d"),
-            )
-            .filter(F.col("d") != 0)
-        )
-        sz_old = inc._resolve_kv(
-            man, SEG_SIZES, bkey, "bucket_size", restrict=sz_delta,
-            n_restrict=rpt["n_touched_buckets"],
-        ).withColumnRenamed("bucket_size", "sz_old")
-        sz_touched, _ = self._segment(SEG_SIZES, sz_delta.join(
-            sz_old, bkey, "left"
-        ).select(
-            *bkey,
-            (F.coalesce("sz_old", F.lit(0)) + F.col("d")).alias("bucket_size"),
-        ))
-
-        # a touched bucket's old size is its written size minus the delta
-        drop = cfg.max_salted_bucket
-        crossing, rpt["n_tier_crossing_buckets"] = ckpt_count(
-            sz_touched.join(sz_delta, bkey).filter(
-                (F.col("bucket_size") - F.col("d") > drop)
-                != (F.col("bucket_size") > drop)
-            ).select(*bkey)
-        )
-        # members (old index ∪ new rows) of crossing buckets, survivors only
-        sigs_old = self._conv(SEG_SIGS)
-        old_members = (
-            lsh.explode_bands(sigs_old)
-            .join(
-                inc._restrict_hint(crossing, rpt["n_tier_crossing_buckets"]),
-                bkey, "left_semi",
-            )
-            .select("conv_id")
-        )
-        tier_changed = (
-            old_members.unionByName(
-                bands_added.join(crossing, bkey, "left_semi").select("conv_id")
-            )
-            .dropDuplicates()
-            .join(self.removed, "conv_id", "left_anti")
-        )
-        self.changed, n_changed = ckpt_count(
-            self.affected_old.unionByName(self.added_convs)
-            .unionByName(tier_changed)
-            .dropDuplicates()
+    def _banding_candidates(self, sigs_post: DataFrame) -> DataFrame:
+        """One-sided band join: the re-signed convs' band rows probe the
+        band rows of the post-fold signature state (a lazy projection,
+        never stored). Every bucket holds at most ``df_hi <=
+        max_band_bucket`` convs, so the batch self-join salts and drops
+        none of them: every pair sharing a bucket is a candidate."""
+        a = lsh.explode_bands(self.resigned).withColumnRenamed("conv_id", "conv_a")
+        b = lsh.explode_bands(sigs_post).withColumnRenamed("conv_id", "conv_b")
+        return _canonical_pairs(
+            self._small_side(a, self.n_resigned * self.cfg.bands)
+            .join(b, ["band_id", "band_hash"])
         )
 
-        # post-apply band index restricted to the buckets changed convs
-        # occupy: tier decisions come from GLOBAL (state-maintained)
-        # sizes, pair volume from changed convs' bucket membership
-        rpt["n_changed_convs"] = n_changed
-        bands_post_all = lsh.explode_bands(sigs_old.join(
-            inc._restrict_hint(self.sig_gone, self.n_gone),
-            "conv_id", "left_anti",
-        )).unionByName(bands_added)
-        changed_buckets, rpt["n_changed_buckets"] = ckpt_count(
-            bands_post_all.join(
-                inc._restrict_hint(self.changed, n_changed),
-                "conv_id", "left_semi",
-            )
-            .select(*bkey)
-            .dropDuplicates()
-        )
-        bands_restricted = bands_post_all.join(
-            inc._restrict_hint(changed_buckets, rpt["n_changed_buckets"]),
-            bkey, "left_semi",
-        )
-        # sizes after this fold: its segment list holds the touched
-        # sizes written above
-        sizes_restricted = inc._resolve_kv(
-            {"segments": self.segs}, SEG_SIZES, bkey, "bucket_size",
-            restrict=changed_buckets, n_restrict=rpt["n_changed_buckets"],
-        )
-        self.cand = lsh.candidate_pairs(
-            bands_restricted, sizes_restricted, cfg, left_convs=self.changed
-        )
-
-        # dropped-bucket report maintained incrementally ("dropped,
-        # never silently"): untouched buckets keep their report status
-        if rpt["n_touched_buckets"]:
-            self.skew_report, _ = self._write_result(
-                TBL_SKEW,
-                self.skew_report.join(sz_delta, bkey, "left_anti").unionByName(
-                    sz_touched.filter(F.col("bucket_size") > drop)
-                    .select(*bkey, "bucket_size")
-                ),
-            )
-
-    def _prefix_candidates(self) -> DataFrame:
+    def _prefix_candidates(self, sigs_post: DataFrame) -> DataFrame:
         """One-sided exact prefix-filter candidates (AllPairs/PPJoin
         family) over the informative shingle sets, under ascending
         shingle-VALUE order.
@@ -997,9 +890,8 @@ class _Fold:
         so the VERIFIED output (the exactness contract) is unchanged.
 
         Changed side: the re-signed convs (delta-sized, eager). Probe
-        side: every current signature — a columnar scan of immutable
-        segments; the join shuffles ∝ emit rows, and when the changed
-        side is small AQE turns it into a broadcast probe."""
+        side: every post-fold signature — a columnar scan of immutable
+        segments."""
         from fractions import Fraction
 
         cfg, s_min = self.cfg, self.min_strat
@@ -1040,12 +932,7 @@ class _Fold:
                 )
             )
 
-        sigs_post = self._conv(SEG_SIGS).join(
-            self.sig_gone, "conv_id", "left_anti"
-        ).unionByName(self.resigned)
-        a, n_a = ckpt_count(
-            emit(self.resigned.join(self.changed, "conv_id", "left_semi"))
-        )
+        a, n_a = ckpt_count(emit(self.resigned))
         a = a.select(
             F.col("conv_id").alias("conv_a"), F.col("s_own").alias("sa"),
             F.col("rem").alias("rem_a"), "s", "c_s", "tok",
@@ -1054,25 +941,22 @@ class _Fold:
             F.col("conv_id").alias("conv_b"), F.col("s_own").alias("sb"),
             F.col("rem").alias("rem_b"), "s", "tok",
         )
-        # the changed-side emit is delta-sized: broadcasting it keeps the
-        # corpus-wide probe explode a map-side hash lookup (no shuffle of
-        # the probe rows). Lower threshold than _restrict_hint — these
-        # rows are 6 columns wide, not a bare key.
-        a_side = F.broadcast(a) if n_a <= 2_000_000 else a
-        pairs = (
-            a_side.join(b, ["s", "tok"])
-            .filter(
-                (F.col("conv_a") != F.col("conv_b"))
+        return _canonical_pairs(
+            self._small_side(a, n_a).join(b, ["s", "tok"]).filter(
                 # a pair meets ONLY in the smaller side's own stratum
-                & (F.least("sa", "sb") == F.col("s"))
+                (F.least("sa", "sb") == F.col("s"))
                 # PPJoin positional filter (recall-preserving: the first
                 # shared prefix token always survives it)
                 & (F.least("rem_a", "rem_b") >= F.col("c_s"))
             )
-            .select(
-                F.least("conv_a", "conv_b").alias("conv_a"),
-                F.greatest("conv_a", "conv_b").alias("conv_b"),
-            )
-            .dropDuplicates(["conv_a", "conv_b"])
         )
-        return pairs
+
+
+def _canonical_pairs(pairs: DataFrame) -> DataFrame:
+    """(conv_a, conv_b) join output → distinct canonical (a < b) pairs. A
+    one-sided join meets a pair in either orientation, or in both when
+    both convs changed."""
+    return pairs.filter(F.col("conv_a") != F.col("conv_b")).select(
+        F.least("conv_a", "conv_b").alias("conv_a"),
+        F.greatest("conv_a", "conv_b").alias("conv_b"),
+    ).dropDuplicates(["conv_a", "conv_b"])

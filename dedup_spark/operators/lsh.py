@@ -84,7 +84,6 @@ def candidate_pairs(
     bands: DataFrame,
     bucket_sizes: DataFrame,
     cfg: DedupConfig,
-    left_convs: DataFrame | None = None,
 ) -> DataFrame:
     """Band self-join → canonical (conv_a < conv_b) distinct pairs
     (ordering analog of reference dedup.py:373-378, contig.py:201-202),
@@ -99,27 +98,19 @@ def candidate_pairs(
       task handles ~size·cap pairs instead of size²;
     * larger — dropped + reported (see skew_report).
 
-    ``left_convs`` (a DF of conv_id) restricts the LEFT join side to
-    those conversations' band rows — the incremental-append shape: pair
-    volume becomes proportional to the restricted convs' bucket
-    membership instead of Σ bucket², while tier decisions still use the
-    GLOBAL ``bucket_sizes``. Returned pairs are every qualifying pair
-    touching a restricted conv (both orientations meet; canonicalized
-    via least/greatest + dedupe). With ``left_convs=None`` the classic
-    full self-join (a < b filter) runs unchanged.
+    A band bucket's members all hold the same informative shingle (a
+    MinHash value fixes its shingle), so no bucket exceeds the df band's
+    upper edge: the salted and dropped tiers only ever fill when that
+    edge is above ``max_band_bucket`` (e.g. a wide ``tail``-mode band).
+    The incremental fold needs no tiers for that reason and runs its own
+    one-sided join.
     """
     cap = cfg.max_band_bucket
-    restricted = left_convs is not None
     ok_buckets = bucket_sizes.filter(
         (F.col("bucket_size") > 1) & (F.col("bucket_size") <= cap)
     ).select("band_id", "band_hash")
     b = bands.join(ok_buckets, ["band_id", "band_hash"])
-    b_left = (
-        b.join(left_convs.select("conv_id"), "conv_id", "left_semi")
-        if restricted
-        else b
-    )
-    left = b_left.select("band_id", "band_hash", F.col("conv_id").alias("conv_a"))
+    left = b.select("band_id", "band_hash", F.col("conv_id").alias("conv_a"))
     right = b.select("band_id", "band_hash", F.col("conv_id").alias("conv_b"))
     normal = left.join(right, ["band_id", "band_hash"])
 
@@ -131,13 +122,8 @@ def candidate_pairs(
         F.ceil(F.col("bucket_size") / cap).cast("int").alias("g"),
     )
     hb = bands.join(hot, ["band_id", "band_hash"])
-    hb_left = (
-        hb.join(left_convs.select("conv_id"), "conv_id", "left_semi")
-        if restricted
-        else hb
-    )
     salt_l = F.pmod(F.xxhash64(F.col("conv_id").cast("string")), F.col("g")).cast("int")
-    sleft = hb_left.select(
+    sleft = hb.select(
         "band_id", "band_hash", salt_l.alias("salt"), F.col("conv_id").alias("conv_a")
     )
     sright = hb.select(
@@ -147,17 +133,6 @@ def candidate_pairs(
         F.col("conv_id").alias("conv_b"),
     )
     salted = sleft.join(sright, ["band_id", "band_hash", "salt"])
-
-    if restricted:
-        # one-sided: each pair can meet in either orientation (or both,
-        # when both convs are restricted) — canonicalize then dedupe
-        out = normal.select("conv_a", "conv_b").union(
-            salted.select("conv_a", "conv_b")
-        ).filter(F.col("conv_a") != F.col("conv_b"))
-        return out.select(
-            F.least("conv_a", "conv_b").alias("conv_a"),
-            F.greatest("conv_a", "conv_b").alias("conv_b"),
-        ).dropDuplicates(["conv_a", "conv_b"])
     normal = normal.filter(F.col("conv_a") < F.col("conv_b")).select(
         "conv_a", "conv_b"
     )

@@ -63,8 +63,8 @@ def run_oracle(turns: pd.DataFrame, cfg: DedupConfig):
 
     cands = set()
     for (band_id, bh), members in buckets.items():
-        if len(members) > cfg.max_band_bucket:
-            continue  # mirrors the pipeline's capped-bucket policy
+        if len(members) > max(cfg.max_band_bucket, cfg.max_salted_bucket):
+            continue  # the pipeline drops only these; the rest keep all pairs
         members = sorted(members)
         for i in range(len(members)):
             for j in range(i + 1, len(members)):

@@ -136,12 +136,6 @@ def test_batch_kernels_all_empty():
     assert (H.simhash_batch(empty, starts, ends) == 0).all()
 
 
-def test_hash_bytes_deterministic():
-    assert H.hash_bytes(b"hello") == H.hash_bytes(b"hello")
-    assert H.hash_bytes(b"hello") != H.hash_bytes(b"hellp")
-    H.hash_bytes(b"")  # no crash
-
-
 def test_window_hashes_bytes_str_bit_identity():
     """char_window_hashes accepts str or raw bytes (byte-space substring
     family): hashing a string and hashing its UTF-8 encoding are

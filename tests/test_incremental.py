@@ -6,15 +6,16 @@ corpus slice + apply(delta) must produce IDENTICAL verified_pairs,
 cluster assignments, and surviving turns to a fresh DedupPipeline run
 over the post-change corpus — including the df-drift cases (a delta
 pushing an old shingle into or out of the informative band forces old
-conversations to re-sign), drop-tier bucket crossings in both
-directions, segmented-state chaining/compaction, and recovery from a
-crash at any state write.
+conversations to re-sign), band buckets at the df band's upper edge,
+segmented-state chaining/compaction, and recovery from a crash at any
+state write.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from itertools import combinations
 
 import numpy as np
 import pytest
@@ -226,10 +227,8 @@ class TestPostAppendBatchRun:
 
 
 class TestReviewHardening:
-    """Guards + the bucket-tier-crossing exactness case surfaced by code
-    review: candidacy is a function of GLOBAL bucket size, so a bucket
-    the append pushes across the drop threshold must re-evaluate the
-    unchanged convs inside it."""
+    """Config and state guards, and exactness at the largest band bucket
+    the df band allows."""
 
     def test_df_lo_1_rejected(self, spark, tmp_path_factory):
         with pytest.raises(ValueError, match="df_lo"):
@@ -262,49 +261,57 @@ class TestReviewHardening:
         )
         with pytest.raises(RuntimeError, match="fingerprint"):
             other.append(new)
+        # a manifest of the older layout that kept bucket sizes and a
+        # dropped-bucket report as state
+        same = IncrementalDedup(spark, DedupConfig(shingle_k=17), wh)
+        man = same._read_manifest()
+        man["segments"]["inc_sizes"] = [0]
+        man["results"]["inc_skew"] = 0
+        same._commit_manifest(
+            man["epoch"], man["segments"], man["results"], man["min_stratum"]
+        )
+        with pytest.raises(RuntimeError, match="state layout"):
+            same.append(new)
 
-    def test_drop_tier_crossing_reevaluates_unchanged_pairs(
-        self, spark, tmp_path_factory
-    ):
-        """3 identical old convs share every band bucket (size 3 = the
-        salted tier → all 3 pairs verified at bootstrap). Appending a
-        4th identical conv pushes every bucket over max_salted_bucket=3
-        WITHOUT any df flip (3→4 stays inside the [2,4] band) — a fresh
-        run drops the buckets and verifies nothing, and the incremental
-        path must agree (the old pairs may NOT survive via kept_old)."""
-
-        def turns_df(convs):
-            rows = [
-                (cid, i, "user", txt, None)
-                for cid, ts in convs.items()
-                for i, txt in enumerate(ts)
-            ]
-            return spark.createDataFrame(
-                rows,
-                "conv_id string, turn_idx int, role string, text string, tool string",
+    def test_df_hi_above_band_bucket_cap_rejected(self, spark, tmp_path_factory):
+        with pytest.raises(ValueError, match=r"df_hi.*max_band_bucket"):
+            IncrementalDedup(
+                spark,
+                DedupConfig(max_band_bucket=2),
+                str(tmp_path_factory.mktemp("wh_cap")),
             )
 
+    @pytest.mark.parametrize("source", ["banding", "prefix"])
+    def test_buckets_at_df_hi_equal_fresh_run(
+        self, spark, tmp_path_factory, source
+    ):
+        """3 identical old convs, then a 4th: every informative shingle
+        and so every band bucket reaches df_hi = 4 members, the most the
+        df band allows. The unchanged old pairs are kept, the new conv's
+        pairs come from the fold's tier-free candidate join."""
         doc = "the quick brown fox jumps over the lazy dog " * 4
         old = {f"c{i}": [doc] for i in range(3)}
         new = {"c3": [doc]}
-        cfg = DedupConfig(max_band_bucket=2, max_salted_bucket=3)
+        cfg = DedupConfig(candidate_source=source)
 
-        full = DedupPipeline(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_tc_f"))
-        ).run(turns_df({**old, **new}))
-        inc = IncrementalDedup(
-            spark, cfg, str(tmp_path_factory.mktemp("wh_tc_i"))
+        full_pipe = DedupPipeline(
+            spark, cfg, str(tmp_path_factory.mktemp("wh_bd_f"))
         )
-        boot = inc.bootstrap(turns_df(old))
-        assert _pairs(boot.verified_pairs) == {
-            ("c0", "c1"), ("c0", "c2"), ("c1", "c2")
-        }
-        res = inc.append(turns_df(new))
+        full = full_pipe.run(_turns_df(spark, {**old, **new}))
+        inc = IncrementalDedup(
+            spark, cfg, str(tmp_path_factory.mktemp("wh_bd_i"))
+        )
+        inc.bootstrap(_turns_df(spark, old))
+        res = inc.append(_turns_df(spark, new))
 
-        assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs) == set()
+        assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
+        assert _pairs(res.verified_pairs) == set(
+            combinations(["c0", "c1", "c2", "c3"], 2)
+        )
         assert _clusters(res.clusters) == _clusters(full.clusters)
-        # the drop is REPORTED, never silent
-        assert res.skew_report.count() > 0
+        if source == "banding":
+            sizes = full_pipe.catalog.read("bucket_sizes")
+            assert sizes.agg(F.max("bucket_size")).first()[0] == cfg.df_hi
 
 
 def _turns_df(spark, convs: dict):
@@ -609,8 +616,8 @@ class TestFoldAtomicity:
         assert committed() == before
         assert {w.rsplit("__s", 1)[0] for w in writes} == {
             "inc_turns", "inc_sets", "inc_sigs", "inc_df",
-            "inc_sizes", "inc_retired_sets", "inc_retired_sigs",
-            "inc_verified", "inc_clusters", "inc_skew",
+            "inc_retired_sets", "inc_retired_sigs",
+            "inc_verified", "inc_clusters",
         }
         # crash at every write: each retry gets past the previous point
         for k in range(n_writes):
@@ -752,7 +759,6 @@ class TestDeltaProportionalReport:
         rpt = res.report
         for k in ("n_touched_shingles", "n_flipped_shingles",
                   "n_affected_old", "n_resigned", "n_changed_convs",
-                  "n_touched_buckets", "n_changed_buckets",
                   "n_candidate_pairs"):
             assert k in rpt, k
         # perfbench's incremental.<phase>_s metrics read these names

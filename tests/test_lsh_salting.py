@@ -5,8 +5,12 @@ reported."""
 
 from itertools import combinations
 
+import pandas as pd
+
 from dedup_spark.config import DedupConfig
 from dedup_spark.operators import lsh
+from dedup_spark.oracle import run_oracle
+from dedup_spark.pipeline import DedupPipeline
 
 
 def _bands(spark, convs, band_id=0, band_hash=777):
@@ -68,3 +72,26 @@ class TestSaltedTier:
         assert (pdf["conv_a"] < pdf["conv_b"]).all()
         assert not pdf.duplicated(["conv_a", "conv_b"]).any()
         assert len(pdf) == len(_all_pairs(convs))
+
+    def test_salted_buckets_pipeline_matches_oracle(self, spark, tmp_path):
+        """12 identical conversations put 12 members in every band
+        bucket, past the salting cap of 5: the pipeline salts those
+        buckets and emits all 66 pairs, and the oracle, which drops only
+        buckets above max_salted_bucket, agrees."""
+        cfg = DedupConfig(df_hi=20, max_band_bucket=5, max_salted_bucket=1000)
+        convs = [f"c{i:02d}" for i in range(12)]
+        turns = pd.DataFrame({
+            "conv_id": convs, "turn_idx": 0, "role": "user",
+            "text": "the quick brown fox jumps over the lazy dog " * 4,
+            "tool": None,
+        })
+        res = DedupPipeline(spark, cfg, str(tmp_path)).run(spark.createDataFrame(
+            turns,
+            "conv_id string, turn_idx int, role string, text string, tool string",
+        ))
+        orc = run_oracle(turns, cfg)
+        cand = {(r.conv_a, r.conv_b) for r in res.candidate_pairs.collect()}
+        assert cand == orc["candidate_pairs"] == _all_pairs(convs)
+        assert {(r.conv_a, r.conv_b) for r in res.verified_pairs.collect()} == {
+            (a, b) for a, b, *_ in orc["verified_pairs"]
+        }

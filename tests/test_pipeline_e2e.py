@@ -3,8 +3,11 @@ planted corpus (FIXTURES.md §2; BASELINE.md measurement protocol)."""
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from dedup_spark.config import DedupConfig
 from dedup_spark.corpus import CorpusSpec, generate_corpus
+from dedup_spark.incremental import _BATCH_STAGES
 from dedup_spark.oracle import run_oracle
 from dedup_spark.pipeline import DedupPipeline
 
@@ -15,12 +18,15 @@ def corpus():
 
 
 @pytest.fixture(scope="module")
-def result(spark, corpus, tmp_path_factory):
+def pipeline(spark, tmp_path_factory):
+    return DedupPipeline(spark, DedupConfig(), str(tmp_path_factory.mktemp("wh")))
+
+
+@pytest.fixture(scope="module")
+def result(spark, corpus, pipeline):
     turns_pdf, _, _ = corpus
-    cfg = DedupConfig()
-    wh = str(tmp_path_factory.mktemp("wh"))
-    res = DedupPipeline(spark, cfg, wh).run(spark.createDataFrame(turns_pdf))
-    orc = run_oracle(turns_pdf, cfg)
+    res = pipeline.run(spark.createDataFrame(turns_pdf))
+    orc = run_oracle(turns_pdf, pipeline.cfg)
     return res, orc
 
 
@@ -80,11 +86,18 @@ def test_one_representative_per_cluster(result):
     assert survivors == reps
 
 
-def test_boilerplate_does_not_explode_buckets(result):
+def test_boilerplate_does_not_explode_buckets(result, pipeline):
     """The informative-DF upper cutoff must keep the shared boilerplate
-    turn out of the signatures → no oversized buckets at this scale."""
+    turn out of the signatures → no oversized buckets. A bucket's members
+    share an informative shingle, so no bucket exceeds df_hi: the bound
+    the incremental fold's tier-free candidate join relies on."""
     res, _ = result
     assert res.skew_report.count() == 0
+    sizes = pipeline.catalog.read("bucket_sizes")
+    assert sizes.agg(F.max("bucket_size")).first()[0] <= pipeline.cfg.df_hi
+    # a fold invalidates every batch stage a run records: a stage missing
+    # from _BATCH_STAGES would stay readable against post-fold state
+    assert {m.stage for m in pipeline.catalog.metrics} == set(_BATCH_STAGES)
 
 
 def test_candidate_pairs_canonical(result):

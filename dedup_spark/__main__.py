@@ -129,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
             "n_removed_convs": res.n_removed_convs,
             "n_affected_old": res.n_affected_old,
             "n_resigned": res.n_resigned,
-            "n_verified_pairs": res.verified_pairs.count(),
+            "n_verified_pairs": res.report["n_verified_pairs"],
             "n_clusters": res.clusters.filter("conv_id = cluster_id").count(),
             "wall_sec": round(wall, 3),
             "new_turns_per_sec": round(n_new_turns / wall, 1) if wall else 0.0,
@@ -189,10 +189,6 @@ def main(argv: list[str] | None = None) -> int:
         "n_turns_out": sm["deduped_turns"].rows_out,
         "n_clusters": n_clusters,
         "n_verified_pairs": sm["verified_pairs"].rows_out,
-        # prefix mode has no bucket machinery → no skew_report stage
-        "skewed_buckets": (
-            sm["skew_report"].rows_out if "skew_report" in sm else 0
-        ),
         "df_band": list(res.df_band),
         "wall_sec": round(wall, 3),
         "turns_per_sec": round(n_turns / wall, 1),

@@ -117,15 +117,6 @@ class DedupConfig:
                                       # transcripts fit one chunk, so the
                                       # default adds no overhead there
 
-    # --- scale / skew handling ---
-    max_band_bucket: int = 200   # LSH bucket size above which the self-join
-                                 # is grid-SALTED (all pairs still produced,
-                                 # spread over ceil(size/cap) salt slots)
-    max_salted_bucket: int = 10_000  # hard drop threshold: beyond this a
-                                 # bucket is degenerate boilerplate (≥5·10^7
-                                 # pairs from one bucket) — dropped WITH a
-                                 # logged skew report, never silently
-
     # --- misc ---
     seed: int = 42
     stats_epsilon: float = 1e-6  # ref stats epsilon, dedup.py:183

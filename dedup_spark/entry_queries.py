@@ -1386,7 +1386,7 @@ def _q_minhash_candidates(spark, sf_dir):
     # every expensive link in this chain is checkpoint-memoized: the
     # shingle UDF (sets), the DF groupBy (sdf), and the signature UDF
     # (bands) each run ONCE even though the histogram collect, the
-    # informative join, and the three-tier band self-join all scan their
+    # informative join, and the band self-join all scan their
     # upstream multiple times (the round-2 bench showed this query
     # re-running the UDF chain ≥3× — 40s for a 20s plan).
     sets_df = _shared(
@@ -1408,10 +1408,7 @@ def _q_minhash_candidates(spark, sf_dir):
             )
         ),
     )
-    sizes = _shared(
-        spark, sf_dir, "mh_sizes", lambda: lsh.band_bucket_sizes(bands)
-    )
-    return lsh.candidate_pairs(bands, sizes, cfg)
+    return lsh.candidate_pairs(bands)
 
 
 # --- oracle-checkable algorithmic twins of the hash kernels ---
@@ -1469,8 +1466,7 @@ def _q_minhash_band_pairs(spark, sf_dir):
     Exercises the full candidate-generation shape — signature → band
     explode → bucket equi-self-join → self-match removal → canonical
     dedupe — with a DuckDB mirror computing the identical answer; the
-    production path (operators/lsh.py) differs only in the hash kernel
-    and the skew tiers."""
+    production path (operators/lsh.py) differs only in the hash kernel."""
     sigs = _q_minhash_perm_sigs(spark, sf_dir)
     stack = ", ".join(
         f"{i}, concat_ws('_', "

@@ -20,9 +20,8 @@ Band-bucket sizes are NOT a second global dependency. A MinHash value
 fixes its shingle (splitmix64 and ``a·x + b mod 2^64`` with odd ``a``
 are bijections), so every member of a band bucket holds the same
 informative shingle, and no bucket has more than ``df_hi`` members.
-With ``df_hi <= max_band_bucket`` (required for banding) the batch
-pipeline salts and drops no bucket, so whether a pair is a candidate
-depends on its two signatures alone.
+The batch pipeline's band self-join emits every pair in every bucket,
+so whether a pair is a candidate depends on its two signatures alone.
 
 Cost model (the round-5 redesign — the round-4 implementation re-built
 every global aggregate per append, measured at 0.43× of a full
@@ -66,8 +65,7 @@ Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
 a delta can legitimately move the fitted band, which invalidates every
 signature; that IS a full rerun) and ``candidate_source`` in
-{"banding", "prefix"} (``df_lo >= 2`` holds for every config; banding
-also needs ``df_hi <= max_band_bucket``, see above). The
+{"banding", "prefix"} (``df_lo >= 2`` holds for every config). The
 prefix path replaces the batch pipeline's df-ascending token order with
 ascending shingle VALUE — the prefix-filter pigeonhole holds for ANY
 fixed total order, and a corpus-independent order is what makes the
@@ -123,11 +121,10 @@ _MANIFEST = "_inc_manifest.json"
 #: see data drift) — invalidated BEFORE each state fold
 _BATCH_STAGES = (
     "transcripts", "shingle_sets", "shingle_ann", "informative_sets",
-    "signatures", "bucket_sizes", "skew_report", "candidate_pairs",
-    "verified_pairs", "clusters", "deduped_turns", "stats",
-    "key_occ_repeated", "anchor_skew", "substring_chains",
-    "position_classes", "substring_spans", "interval_marks",
-    "trimmed_turns",
+    "signatures", "candidate_pairs", "verified_pairs", "clusters",
+    "deduped_turns", "stats", "key_occ_repeated", "anchor_skew",
+    "substring_chains", "position_classes", "substring_spans",
+    "interval_marks", "trimmed_turns",
 )
 
 #: an apply's phases, in run order: the ``_Fold`` methods ``apply`` runs
@@ -162,13 +159,6 @@ def _require_supported_config(cfg: DedupConfig) -> None:
         raise ValueError(
             f"incremental dedup supports candidate_source 'banding' or "
             f"'prefix', got {cfg.candidate_source!r}"
-        )
-    if cfg.candidate_source == "banding" and cfg.df_hi > cfg.max_band_bucket:
-        raise ValueError(
-            f"incremental banding requires df_hi <= max_band_bucket, got "
-            f"df_hi={cfg.df_hi}, max_band_bucket={cfg.max_band_bucket}: a "
-            "band bucket holds at most df_hi convs, and the fold's "
-            "candidate join needs every bucket under the salting cap"
         )
 
 
@@ -489,7 +479,8 @@ class IncrementalDedup:
         list no retired segment: bounds the per-apply segment scan (the
         parquet stand-in for Iceberg snapshot compaction). Result tables
         carry forward unchanged. Exactness-neutral — resolution before
-        and after reads identical rows."""
+        and after reads identical rows, except that shingles whose df
+        fell to 0 are gone (a missing df reads as 0)."""
         cat = self.cat
         man = self._check_state()
         self._sweep(man)
@@ -503,8 +494,11 @@ class IncrementalDedup:
         ):
             cat.write(f"{base}__s{e}", self._resolve_conv(man, base, retired))
             segs[base] = [e]
+        # a fold writes df = 0 rows so they override older totals; with
+        # every older segment gone they carry nothing
         cat.write(f"{SEG_DF}__s{e}",
-                  self._resolve_kv(man, SEG_DF, ["shingle"], "df"))
+                  self._resolve_kv(man, SEG_DF, ["shingle"], "df")
+                  .filter(F.col("df") > 0))
         segs[SEG_DF] = [e]
         self._commit_manifest(
             e, segs, man["results"], int(man.get("min_stratum", 0))
@@ -864,9 +858,8 @@ class _Fold:
     def _banding_candidates(self, sigs_post: DataFrame) -> DataFrame:
         """One-sided band join: the re-signed convs' band rows probe the
         band rows of the post-fold signature state (a lazy projection,
-        never stored). Every bucket holds at most ``df_hi <=
-        max_band_bucket`` convs, so the batch self-join salts and drops
-        none of them: every pair sharing a bucket is a candidate."""
+        never stored). Every pair sharing a bucket is a candidate, as in
+        the batch self-join."""
         a = lsh.explode_bands(self.resigned).withColumnRenamed("conv_id", "conv_a")
         b = lsh.explode_bands(sigs_post).withColumnRenamed("conv_id", "conv_b")
         return _canonical_pairs(

@@ -62,9 +62,7 @@ def run_oracle(turns: pd.DataFrame, cfg: DedupConfig):
             buckets[(band_id, int(bh))].append(c)
 
     cands = set()
-    for (band_id, bh), members in buckets.items():
-        if len(members) > max(cfg.max_band_bucket, cfg.max_salted_bucket):
-            continue  # the pipeline drops only these; the rest keep all pairs
+    for members in buckets.values():
         members = sorted(members)
         for i in range(len(members)):
             for j in range(i + 1, len(members)):

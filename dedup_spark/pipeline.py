@@ -8,17 +8,15 @@ caching, dedup.py:439-443):
                     │                        │              │
                     └────────► informative ◄─┴── df band (manual/tail/fit)
                                    │
-                               signatures ─► bands ─► bucket_sizes     [banding]
-                                   │                     │     │
-                                   │              skew_report  │
-                                   │                           ▼
+                               signatures ─► bands ───────────────┐  [banding]
+                                   │                              ▼
                                    ├──────────────► candidate_pairs
                                    │   (candidate_source="prefix" routes this
                                    │    through the exact AllPairs/PPJoin
                                    │    prefix filter over informative sets
                                    │    instead — no band machinery)
-                                   ▼                           │
-                              verified_pairs ◄─────────────────┘
+                                   ▼                              │
+                              verified_pairs ◄────────────────────┘
                                    │
                                 clusters ─► deduped_turns + stats
                                                   │
@@ -55,7 +53,6 @@ class PipelineResult:
     clusters: DataFrame
     deduped_turns: DataFrame
     stats: DataFrame
-    skew_report: DataFrame
     metrics: DataFrame
     df_band: tuple[int, int]
     substring_spans: DataFrame | None = None
@@ -77,7 +74,7 @@ class DedupPipeline:
         from concurrent.futures import ThreadPoolExecutor
 
         # one pool for the whole DAG: the two main branches plus the
-        # off-critical-path stages (skew/anchor reports, deduped, stats)
+        # off-critical-path stages (anchor report, deduped, stats)
         # — sized so no submitted task can wait behind a blocked waiter
         pool = ThreadPoolExecutor(max_workers=6)
 
@@ -173,19 +170,17 @@ class DedupPipeline:
         )
         # Candidate source is config-switched (cfg.candidate_source):
         #
-        # * "banding" (default) — MinHash band self-join with the
-        #   three-tier skew handling; probabilistic recall tuned by
-        #   (bands, rows_per_band).
+        # * "banding" (default) — MinHash band self-join; the df band
+        #   bounds every bucket at ``hi`` members. Probabilistic recall
+        #   tuned by (bands, rows_per_band).
         # * "prefix" — exact AllPairs/PPJoin prefix filter over the
         #   informative shingle sets (operators/prefix_filter): recall
         #   1.0 BY CONSTRUCTION for the containment verify predicate —
         #   including small⊂large pairs (tiny Jaccard) that banding at
         #   b=64/r=2 misses with high probability. Volume tracks true
-        #   positives, not corpus². The band/bucket machinery is
-        #   skipped entirely in this mode (skew_report is empty: hot
-        #   tokens expel themselves from prefixes by df-ascending
-        #   order, so there is no bucket to drop).
-        skew_f = None
+        #   positives, not corpus². No band rows are built in this
+        #   mode (hot tokens expel themselves from prefixes by
+        #   df-ascending order).
         if cfg.candidate_source == "prefix":
             from dedup_spark.operators import prefix_filter
 
@@ -207,23 +202,12 @@ class DedupPipeline:
             candidates = cat.stage("candidate_pairs", build_prefix_candidates)
         else:
             # bands stay a lazy projection of the signatures checkpoint
-            # (a posexplode re-run per consumer is cheaper than a
-            # dedicated write+rename+read checkpoint cycle on the serial
-            # driver path)
-            bands = lsh.explode_bands(signatures)
-            bucket_sizes = cat.stage(
-                "bucket_sizes", lambda: lsh.band_bucket_sizes(bands)
-            )
-            # observability stage off the critical path: overlap its
-            # write with candidate generation
-            skew_f = pool.submit(
-                lambda: cat.stage(
-                    "skew_report", lambda: lsh.skew_report(bucket_sizes, cfg)
-                )
-            )
+            # (a posexplode is cheaper than a dedicated
+            # write+rename+read checkpoint cycle on the serial driver
+            # path)
             candidates = cat.stage(
                 "candidate_pairs",
-                lambda: lsh.candidate_pairs(bands, bucket_sizes, cfg),
+                lambda: lsh.candidate_pairs(lsh.explode_bands(signatures)),
             )
         # From here the DAG forks into two INDEPENDENT branches that run
         # concurrently from driver threads (Spark schedules their jobs
@@ -401,13 +385,6 @@ class DedupPipeline:
                 "trimmed_turns", lambda: intervals.trim_turns(deduped, merged, cfg)
             )
             stats = stats_f.result()
-            skew = (
-                skew_f.result()
-                if skew_f is not None
-                else self.spark.createDataFrame(
-                    [], "band_id int, band_hash long, bucket_size long"
-                )
-            )
         finally:
             # every stage is durable once its cat.stage call returns
             pool.shutdown(wait=True)
@@ -420,7 +397,6 @@ class DedupPipeline:
             clusters=clusters,
             deduped_turns=deduped,
             stats=stats,
-            skew_report=skew,
             metrics=cat.metrics_df(),
             df_band=(lo, hi),
             substring_spans=spans,

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from dedup_spark.config import DedupConfig
 from dedup_spark.corpus import CorpusSpec, generate_corpus
 from dedup_spark.incremental import IncrementalDedup
+from dedup_spark.operators import lsh, shingling
 from dedup_spark.pipeline import DedupPipeline
 
 
@@ -273,14 +274,6 @@ class TestReviewHardening:
         with pytest.raises(RuntimeError, match="state layout"):
             same.append(new)
 
-    def test_df_hi_above_band_bucket_cap_rejected(self, spark, tmp_path_factory):
-        with pytest.raises(ValueError, match=r"df_hi.*max_band_bucket"):
-            IncrementalDedup(
-                spark,
-                DedupConfig(max_band_bucket=2),
-                str(tmp_path_factory.mktemp("wh_cap")),
-            )
-
     @pytest.mark.parametrize("source", ["banding", "prefix"])
     def test_buckets_at_df_hi_equal_fresh_run(
         self, spark, tmp_path_factory, source
@@ -288,16 +281,15 @@ class TestReviewHardening:
         """3 identical old convs, then a 4th: every informative shingle
         and so every band bucket reaches df_hi = 4 members, the most the
         df band allows. The unchanged old pairs are kept, the new conv's
-        pairs come from the fold's tier-free candidate join."""
+        pairs come from the fold's one-sided candidate join."""
         doc = "the quick brown fox jumps over the lazy dog " * 4
         old = {f"c{i}": [doc] for i in range(3)}
         new = {"c3": [doc]}
         cfg = DedupConfig(candidate_source=source)
 
-        full_pipe = DedupPipeline(
+        full = DedupPipeline(
             spark, cfg, str(tmp_path_factory.mktemp("wh_bd_f"))
-        )
-        full = full_pipe.run(_turns_df(spark, {**old, **new}))
+        ).run(_turns_df(spark, {**old, **new}))
         inc = IncrementalDedup(
             spark, cfg, str(tmp_path_factory.mktemp("wh_bd_i"))
         )
@@ -310,8 +302,10 @@ class TestReviewHardening:
         )
         assert _clusters(res.clusters) == _clusters(full.clusters)
         if source == "banding":
-            sizes = full_pipe.catalog.read("bucket_sizes")
-            assert sizes.agg(F.max("bucket_size")).first()[0] == cfg.df_hi
+            sizes = lsh.explode_bands(full.signatures).groupBy(
+                "band_id", "band_hash"
+            ).count()
+            assert sizes.agg(F.max("count")).first()[0] == cfg.df_hi
 
 
 def _turns_df(spark, convs: dict):
@@ -688,6 +682,45 @@ class TestCompaction:
         assert _clusters(res.clusters) == _clusters(full.clusters)
         assert _turn_keys(res.deduped_turns) == _turn_keys(full.deduped_turns)
 
+    def test_compaction_keeps_only_live_df_keys(self, spark, tmp_path_factory):
+        """A removal leaves df = 0 rows in the df state (latest-wins needs
+        them to override older totals). Compaction keeps only df > 0: its
+        df table equals the df of the live sets, and a re-append of the
+        removed convs, whose dropped keys then read as df 0, equals a
+        fresh run."""
+        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=40, seed=7))
+        all_turns = spark.createDataFrame(turns_pdf).cache()
+        convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})
+        gone = convs[::5]
+        inc = IncrementalDedup(
+            spark, DedupConfig(), str(tmp_path_factory.mktemp("wh_cdf"))
+        )
+        inc.bootstrap(all_turns)
+        inc.remove(gone)
+        man = inc._read_manifest()
+        assert inc._resolve_kv(man, "inc_df", ["shingle"], "df").filter(
+            "df = 0"
+        ).count() > 0
+
+        inc.compact()
+        man = inc._read_manifest()
+        df_state = inc._resolve_kv(man, "inc_df", ["shingle"], "df")
+        live = inc._resolve_conv(
+            man, "inc_sets", inc._retired(man, "inc_retired_sets")
+        )
+        want = shingling.shingle_document_frequency(
+            shingling.exploded_shingles(live)
+        )
+        assert sorted(df_state.collect()) == sorted(want.collect())
+
+        res = inc.append(all_turns.filter(F.col("conv_id").isin(gone)))
+        fresh = DedupPipeline(
+            spark, DedupConfig(), str(tmp_path_factory.mktemp("wh_cdff"))
+        ).run(all_turns)
+        assert _pairs(res.verified_pairs) == _pairs(fresh.verified_pairs)
+        assert _clusters(res.clusters) == _clusters(fresh.clusters)
+        assert _turn_keys(res.deduped_turns) == _turn_keys(fresh.deduped_turns)
+
     def test_band_segments_of_older_manifest_are_dropped(
         self, spark, tmp_path_factory
     ):
@@ -695,8 +728,6 @@ class TestCompaction:
         that still lists an ``inc_bands`` table folds without reading
         it; compaction drops it from the manifest and the next fold's
         sweep deletes its dirs."""
-        from dedup_spark.operators import lsh
-
         turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=60))
         all_turns = spark.createDataFrame(turns_pdf).cache()
         convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})

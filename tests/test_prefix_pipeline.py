@@ -89,12 +89,10 @@ def test_prefix_pipeline_recovers_contained_pair_banding_misses(
 
 def test_prefix_pipeline_end_to_end_shape(spark, turns, tmp_path_factory):
     res = _run(spark, turns, tmp_path_factory, "prefix")
-    # canonical, deduplicated candidates; empty skew report (no bucket
-    # machinery in prefix mode); the big↔background containment pairs
-    # all survive verification (containment 1.0)
+    # canonical, deduplicated candidates; the big↔background containment
+    # pairs all survive verification (containment 1.0)
     pdf = res.candidate_pairs.toPandas()
     assert (pdf["conv_a"] < pdf["conv_b"]).all()
     assert not pdf.duplicated(["conv_a", "conv_b"]).any()
-    assert res.skew_report.count() == 0
     verified = {(r.conv_a, r.conv_b) for r in res.verified_pairs.collect()}
     assert {("bg00", "big"), ("tiny", "tp")} <= verified

@@ -44,8 +44,16 @@ def test_pipeline_resume_equivalence(spark, tmp_path):
     clusters1 = sorted((r.conv_id, r.cluster_id) for r in r1.clusters.collect())
 
     # simulate a crash after 'signatures': drop everything downstream
-    for st in ("bands", "bucket_sizes", "skew_report", "candidate_pairs",
-               "verified_pairs", "clusters", "deduped_turns", "stats"):
+    # (branch B restricts to candidate convs, so all of it is downstream)
+    downstream = (
+        "candidate_pairs", "verified_pairs", "clusters", "deduped_turns",
+        "stats", "key_occ_repeated", "anchor_skew", "substring_chains",
+        "position_classes", "substring_spans", "interval_marks",
+        "trimmed_turns",
+    )
+    recorded = {m.stage for m in p1.catalog.metrics}
+    for st in downstream:
+        assert st in recorded, st  # a renamed stage must fail, not pass
         p1.catalog.invalidate(st)
 
     p2 = DedupPipeline(spark, cfg, wh)
@@ -54,6 +62,7 @@ def test_pipeline_resume_equivalence(spark, tmp_path):
     assert clusters1 == clusters2
     reused = {m.stage for m in p2.catalog.metrics if m.reused}
     assert {"transcripts", "shingle_sets", "shingle_ann", "signatures"} <= reused
+    assert not reused & set(downstream)
 
 
 def test_partition_lineage_and_run_report(spark, tmp_path):

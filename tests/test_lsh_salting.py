@@ -25,14 +25,24 @@ def _all_pairs(convs):
 
 class TestSaltedTier:
     def test_hot_bucket_recovers_all_pairs(self, spark):
-        # a 30-conv bucket next to a 3-conv one: every pair of each
-        hot = [f"c{i:02d}" for i in range(30)]
+        # one 30-conv bucket: every one of its pairs
+        convs = [f"c{i:02d}" for i in range(30)]
+        got = {
+            (r.conv_a, r.conv_b)
+            for r in lsh.candidate_pairs(_bands(spark, convs)).collect()
+        }
+        assert got == _all_pairs(convs)  # all 435, none lost
+
+    def test_mixed_tiers_union(self, spark):
+        # a 25-conv bucket next to a 3-conv one: the pairs of each, and
+        # no pair across the two buckets
+        hot = [f"h{i:02d}" for i in range(25)]
         small = ["s0", "s1", "s2"]
         bands = _bands(spark, hot, band_hash=1).union(
             _bands(spark, small, band_hash=2)
         )
         got = {(r.conv_a, r.conv_b) for r in lsh.candidate_pairs(bands).collect()}
-        assert got == _all_pairs(hot) | _all_pairs(small)  # 435 + 3, none lost
+        assert got == _all_pairs(hot) | _all_pairs(small)  # 300 + 3
 
     def test_pairs_distinct_and_canonical(self, spark):
         # same conv pair in two bands → still one canonical row

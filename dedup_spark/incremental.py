@@ -64,14 +64,15 @@ against post-fold state.
 Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
 a delta can legitimately move the fitted band, which invalidates every
-signature; that IS a full rerun) and ``candidate_source`` in
-{"banding", "prefix"} (``df_lo >= 2`` holds for every config). The
-prefix path replaces the batch pipeline's df-ascending token order with
-ascending shingle VALUE — the prefix-filter pigeonhole holds for ANY
-fixed total order, and a corpus-independent order is what makes the
-probe side computable from durable signature state without a global df
-pass (the df order only optimizes candidate volume; verified output is
-order-invariant because prefix recall is 1.0 under both).
+signature; that IS a full rerun) and either ``candidate_source``
+(``df_lo >= 2`` holds for every config). The prefix path calls the
+batch pipeline's prefix-filter kernel (``operators.prefix_filter``
+``prefix_rows`` / ``meet``) under ascending shingle VALUE instead of
+the batch df-ascending token order — the prefix-filter pigeonhole holds
+for ANY fixed total order, and a corpus-independent order is what makes
+the probe side computable from durable signature state without a global
+df pass (the df order only optimizes candidate volume; verified output
+is order-invariant because prefix recall is 1.0 under both).
 
 No reference analog — the reference is a one-shot CLI
 (/root/reference/dedup/dedup.py:648-677); this is part of the
@@ -95,7 +96,7 @@ from pyspark.sql.types import StructType
 
 from dedup_spark.catalog import StageCatalog
 from dedup_spark.config import DedupConfig
-from dedup_spark.operators import lsh, shingling, verify
+from dedup_spark.operators import lsh, prefix_filter, shingling, verify
 from dedup_spark.operators.connected_components import connected_components
 from dedup_spark.operators.transcripts import assemble_transcripts
 from dedup_spark.pipeline import DedupPipeline
@@ -154,11 +155,6 @@ def _require_supported_config(cfg: DedupConfig) -> None:
             "incremental dedup requires df_band_mode='manual': auto band "
             "selection re-fits on the whole corpus, so a delta can move "
             "the band and invalidate every signature — that is a full rerun"
-        )
-    if cfg.candidate_source not in ("banding", "prefix"):
-        raise ValueError(
-            f"incremental dedup supports candidate_source 'banding' or "
-            f"'prefix', got {cfg.candidate_source!r}"
         )
 
 
@@ -432,8 +428,7 @@ class IncrementalDedup:
     def append(self, new_turns: DataFrame) -> IncrementalResult:
         """Append-only fold: every conv_id must be NEW (use
         :meth:`apply` with ``remove_conv_ids`` for edits/deletes)."""
-        return self.apply(new_turns=new_turns, remove_conv_ids=None,
-                          _append_only=True)
+        return self.apply(new_turns=new_turns)
 
     def remove(self, conv_ids) -> IncrementalResult:
         """Delete conversations (takedown/PII-removal reprocessing)."""
@@ -445,7 +440,6 @@ class IncrementalDedup:
         self,
         new_turns: DataFrame | None = None,
         remove_conv_ids=None,
-        _append_only: bool = False,
     ) -> IncrementalResult:
         """Fold added and/or removed conversations into state; exact
         equality with a fresh full run over the post-change corpus. An
@@ -453,7 +447,7 @@ class IncrementalDedup:
         ``new_turns``."""
         man = self._check_state()
         self._sweep(man)
-        fold = _Fold(self, man, new_turns, remove_conv_ids, _append_only)
+        fold = _Fold(self, man, new_turns, remove_conv_ids)
         # per-phase wall observability (delta-cost accounting lives and
         # dies by knowing WHERE an apply spends its time)
         t_phases = fold.rpt["t_phases"]
@@ -516,11 +510,10 @@ class _Fold:
     visible, so the order of the writes before it does not matter."""
 
     def __init__(self, inc: IncrementalDedup, man: dict, new_turns,
-                 remove_conv_ids, append_only: bool):
+                 remove_conv_ids):
         self.inc, self.man = inc, man
         self.cfg, self.cat = inc.cfg, inc.cat
         self.new_turns, self.remove_conv_ids = new_turns, remove_conv_ids
-        self.append_only = append_only
         self.banding = self.cfg.candidate_source == "banding"
         self.e_new = int(man["epoch"]) + 1
         self.rpt: dict = {"epoch": self.e_new, "t_phases": {}}
@@ -599,10 +592,11 @@ class _Fold:
                 )
         self.rpt["n_removed_convs"] = self.n_removed
         if self.t_new is not None:
-            overlap = self.added_convs.join(self.live_ids, "conv_id", "left_semi")
-            if not self.append_only:
-                overlap = overlap.join(self.removed, "conv_id", "left_anti")
-            n = overlap.count()
+            n = (
+                self.added_convs.join(self.live_ids, "conv_id", "left_semi")
+                .join(self.removed, "conv_id", "left_anti")
+                .count()
+            )
             if n:
                 raise ValueError(
                     f"{n} conv_ids in the new batch already exist in state — "
@@ -885,63 +879,23 @@ class _Fold:
         Changed side: the re-signed convs (delta-sized, eager). Probe
         side: every post-fold signature — a columnar scan of immutable
         segments."""
-        from fractions import Fraction
+        cfg = self.cfg
 
-        cfg, s_min = self.cfg, self.min_strat
-        frac = Fraction(cfg.verify_containment).limit_denominator(1_000_000)
-        t_num, t_den = frac.numerator, frac.denominator
-        p1 = 1 if cfg.containment_plus1 else 0
-
-        def emit(sigs: DataFrame) -> DataFrame:
-            return (
-                sigs.filter(F.col("n_shingles") > 0)
-                .select(
-                    "conv_id",
+        def rows(sigs: DataFrame) -> DataFrame:
+            return prefix_filter.prefix_rows(
+                sigs.select(
+                    F.col("conv_id").alias("id"),
                     F.col("n_shingles").alias("n"),
-                    F.floor(F.log2("n_shingles")).cast("int").alias("s_own"),
                     F.posexplode("shingles").alias("pos", "tok"),
-                )
-                .withColumn(
-                    "s",
-                    F.explode(
-                        F.sequence(
-                            F.least(F.lit(s_min), F.col("s_own")),
-                            F.col("s_own"),
-                        )
-                    ),
-                )
-                .withColumn(
-                    "c_s",
-                    F.expr(
-                        f"({t_num} * (shiftleft(CAST(1 AS BIGINT), s) + {p1}))"
-                        f" DIV {t_den} + 1"
-                    ),
-                )
-                # prefix positions only: rank = pos + 1 <= n - c_s + 1
-                .filter(F.col("pos") <= F.col("n") - F.col("c_s"))
-                .select(
-                    "conv_id", "s_own", "s", "c_s", "tok",
-                    (F.col("n") - F.col("pos")).alias("rem"),
-                )
+                ).withColumn("rnk", F.col("pos") + 1),
+                F.lit(self.min_strat), cfg.verify_containment,
+                cfg.containment_plus1,
             )
 
-        a, n_a = ckpt_count(emit(self.resigned))
-        a = a.select(
-            F.col("conv_id").alias("conv_a"), F.col("s_own").alias("sa"),
-            F.col("rem").alias("rem_a"), "s", "c_s", "tok",
-        )
-        b = emit(sigs_post).select(
-            F.col("conv_id").alias("conv_b"), F.col("s_own").alias("sb"),
-            F.col("rem").alias("rem_b"), "s", "tok",
-        )
+        a, n_a = ckpt_count(rows(self.resigned))
         return _canonical_pairs(
-            self._small_side(a, n_a).join(b, ["s", "tok"]).filter(
-                # a pair meets ONLY in the smaller side's own stratum
-                (F.least("sa", "sb") == F.col("s"))
-                # PPJoin positional filter (recall-preserving: the first
-                # shared prefix token always survives it)
-                & (F.least("rem_a", "rem_b") >= F.col("c_s"))
-            )
+            prefix_filter.meet(self._small_side(a, n_a), rows(sigs_post))
+            .toDF("conv_a", "conv_b")
         )
 
 

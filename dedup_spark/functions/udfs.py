@@ -57,17 +57,6 @@ def make_window_hash_udf(cfg: DedupConfig):
     return window_hash_udf
 
 
-def positional_shingles(transcripts, cfg: DedupConfig):
-    """transcripts → (conv_id, pos, shingle): exploded per-position
-    shingle hashes, 1-based positions, JVM-side explode."""
-    udf = make_window_hash_udf(cfg)
-    return (
-        transcripts.select("conv_id", udf(F.col("doc")).alias("h"))
-        .select("conv_id", F.posexplode("h").alias("p0", "shingle"))
-        .select("conv_id", (F.col("p0") + 1).alias("pos"), "shingle")
-    )
-
-
 _SIG_SCHEMA = T.StructType(
     [
         T.StructField("minhash", T.ArrayType(T.LongType())),

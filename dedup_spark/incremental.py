@@ -34,8 +34,9 @@ each small result table per fold, so per-apply work is
   the df state per fold (re-signing takes band membership from the
   stored informative sets plus the fold's df delta), the one-sided
   candidate join probes the post-fold signature state with the
-  re-signed convs' rows (broadcast when small), and the verify join
-  reads only the candidate convs;
+  re-signed convs' band or shingle rows (broadcast when small; each
+  meets at most ``df_hi`` rows), and the verify join reads only the
+  candidate convs;
 * full-corpus work is limited to columnar SCANS of immutable segments
   (flipped-shingle membership probe, candidate probe side) — no
   full-corpus shuffle, no full-corpus UDF, no wholesale rewrite of any
@@ -65,14 +66,13 @@ Scope: branch A (whole-conversation dedup) + emit, ``df_band_mode=
 "manual"`` (auto band selection re-fits on the whole corpus by design —
 a delta can legitimately move the fitted band, which invalidates every
 signature; that IS a full rerun) and either ``candidate_source``
-(``df_lo >= 2`` holds for every config). The prefix path calls the
-batch pipeline's prefix-filter kernel (``operators.prefix_filter``
-``prefix_rows`` / ``meet``) under ascending shingle VALUE instead of
-the batch df-ascending token order — the prefix-filter pigeonhole holds
-for ANY fixed total order, and a corpus-independent order is what makes
-the probe side computable from durable signature state without a global
-df pass (the df order only optimizes candidate volume; verified output
-is order-invariant because prefix recall is 1.0 under both).
+(``df_lo >= 2`` holds for every config). Both candidate sources are one
+one-sided join of the re-signed convs against the post-fold signature
+state, keyed by band (banding) or by informative shingle (prefix). The
+df band bounds both: a band bucket or an informative shingle has at
+most ``df_hi`` members. Prefix mode needs no prefix filter: a pair that
+passes containment shares an informative shingle, so the shingle join
+finds every pair the batch prefix filter verifies.
 
 No reference analog — the reference is a one-shot CLI
 (/root/reference/dedup/dedup.py:648-677); this is part of the
@@ -85,7 +85,6 @@ to the catalog commit.
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import time
@@ -96,7 +95,7 @@ from pyspark.sql.types import StructType
 
 from dedup_spark.catalog import StageCatalog
 from dedup_spark.config import DedupConfig
-from dedup_spark.operators import lsh, prefix_filter, shingling, verify
+from dedup_spark.operators import lsh, shingling, verify
 from dedup_spark.operators.connected_components import connected_components
 from dedup_spark.operators.transcripts import assemble_transcripts
 from dedup_spark.pipeline import DedupPipeline
@@ -208,9 +207,7 @@ class IncrementalDedup:
             )
         return man
 
-    def _commit_manifest(
-        self, epoch: int, segments: dict, results: dict, min_stratum: int
-    ) -> None:
+    def _commit_manifest(self, epoch: int, segments: dict, results: dict) -> None:
         """Atomic replace: the manifest commit IS the single commit point
         of every fold, compaction and bootstrap — everything written
         before it is invisible until this rename lands."""
@@ -222,7 +219,6 @@ class IncrementalDedup:
                 "epoch": epoch,
                 "segments": segments,
                 "results": results,
-                "min_stratum": min_stratum,
             }, f)
         os.replace(tmp, p)
 
@@ -379,7 +375,7 @@ class IncrementalDedup:
         not state: a fold explodes them from the signature state, as the
         batch pipeline does."""
         res = self.pipeline.run(turns)
-        cat, cfg = self.cat, self.cfg
+        cat = self.cat
 
         segs: dict[str, list[int]] = {}
 
@@ -401,20 +397,8 @@ class IncrementalDedup:
 
         cat.adopt("verified_pairs", f"{TBL_VERIFIED}__s0")
         cat.adopt("clusters", f"{TBL_CLUSTERS}__s0")
-
-        # smallest signed stratum for the prefix probe range (tracked in
-        # the manifest; monotone-decreasing — deletes never raise it, a
-        # superset probe range is merely extra candidates). Only the
-        # prefix path reads it, and candidate_source is fingerprinted.
-        min_stratum = 0
-        if cfg.candidate_source == "prefix":
-            min_n = (
-                cat.read(f"{SEG_SIGS}__s0")
-                .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-            )
-            min_stratum = int(math.floor(math.log2(min_n))) if min_n else 0
         self._commit_manifest(
-            0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS), 0), min_stratum
+            0, segs, dict.fromkeys((TBL_VERIFIED, TBL_CLUSTERS), 0)
         )
         # the adopted stages moved: hand back frames over their new dirs
         return replace(
@@ -494,9 +478,7 @@ class IncrementalDedup:
                   self._resolve_kv(man, SEG_DF, ["shingle"], "df")
                   .filter(F.col("df") > 0))
         segs[SEG_DF] = [e]
-        self._commit_manifest(
-            e, segs, man["results"], int(man.get("min_stratum", 0))
-        )
+        self._commit_manifest(e, segs, man["results"])
 
 
 class _Fold:
@@ -514,7 +496,6 @@ class _Fold:
         self.inc, self.man = inc, man
         self.cfg, self.cat = inc.cfg, inc.cat
         self.new_turns, self.remove_conv_ids = new_turns, remove_conv_ids
-        self.banding = self.cfg.candidate_source == "banding"
         self.e_new = int(man["epoch"]) + 1
         self.rpt: dict = {"epoch": self.e_new, "t_phases": {}}
         self.segs = {k: list(v) for k, v in man["segments"].items()}
@@ -700,7 +681,7 @@ class _Fold:
         (added and removed in equal numbers) is in band exactly when a
         removed conv's old signature set holds it. A conv with no
         signature row had an empty informative set."""
-        cfg, man = self.cfg, self.man
+        cfg = self.cfg
         keys_in = self.df_touched.filter(
             F.col("df").between(F.lit(cfg.df_lo), F.lit(cfg.df_hi))
         ).select("shingle")
@@ -739,25 +720,22 @@ class _Fold:
             SEG_SIGS, lsh.compute_signatures(resign_informative, cfg)
         )
         self.rpt["n_resigned"] = self.n_resigned
-        # smallest signed stratum after this fold: the manifest's next
-        # min_stratum and the prefix probe floor of THIS apply — a new
-        # doc smaller than every historical one lowers the meet stratum
-        # of its pairs, and the probe side must emit down to it. Banding
-        # never reads it: the committed value is carried forward.
-        self.min_strat = int(man.get("min_stratum", 0))
-        if not self.banding:
-            new_min = self.resigned.agg(
-                F.min("n_shingles").alias("m")
-            ).collect()[0]["m"]
-            if new_min:
-                self.min_strat = min(
-                    self.min_strat, int(math.floor(math.log2(new_min)))
-                )
 
     def candidates(self) -> None:
-        """Candidate pairs with at least one changed conv. A changed conv
-        has band rows or prefix tokens only if it was re-signed, so the
-        re-signed convs probe the post-fold signature state."""
+        """Candidate pairs with at least one changed conv: a one-sided
+        join in which the re-signed convs' rows probe the same rows of
+        the post-fold signature state (a lazy projection, never stored).
+        A changed conv has rows only if it was re-signed.
+
+        The two sources differ only in how a signature row explodes.
+        Banding: into ``(band_id, band_hash)`` rows, so every pair that
+        shares a bucket is a candidate, as in the batch self-join.
+        Prefix: into its informative shingles. A pair passes
+        containment only if it shares one (``common > t·(n + 1)`` needs
+        ``common >= 1``), so the candidates hold every pair the batch
+        prefix filter verifies. In both, a changed-side row meets at
+        most ``df_hi`` rows: the df band bounds a bucket and a shingle
+        alike."""
         self.changed, self.rpt["n_changed_convs"] = ckpt_count(
             self.affected_old.unionByName(self.added_convs).dropDuplicates()
         )
@@ -765,9 +743,18 @@ class _Fold:
             self.inc._restrict_hint(self.sig_gone, self.n_gone),
             "conv_id", "left_anti",
         ).unionByName(self.resigned)
-        find = (self._banding_candidates if self.banding
-                else self._prefix_candidates)
-        self.cand, self.rpt["n_candidate_pairs"] = ckpt_count(find(sigs_post))
+        if self.cfg.candidate_source == "banding":
+            explode = lsh.explode_bands
+            n_a = self.n_resigned * self.cfg.bands
+        else:
+            explode = shingling.exploded_shingles
+            n_a = self.resigned.agg(F.sum("n_shingles")).first()[0] or 0
+        a = explode(self.resigned).withColumnRenamed("conv_id", "conv_a")
+        b = explode(sigs_post).withColumnRenamed("conv_id", "conv_b")
+        key = [c for c in b.columns if c != "conv_b"]
+        self.cand, self.rpt["n_candidate_pairs"] = ckpt_count(_canonical_pairs(
+            self._small_side(a, n_a).join(b, key)
+        ))
 
     def verify(self) -> None:
         """Verify only changed-touching candidates, then splice them into
@@ -830,7 +817,7 @@ class _Fold:
         for stale in _BATCH_STAGES:
             self.cat.invalidate(stale)
         inc = self.inc
-        inc._commit_manifest(self.e_new, self.segs, self.results, self.min_strat)
+        inc._commit_manifest(self.e_new, self.segs, self.results)
         if (
             inc.auto_compact_segments
             and max(len(v) for v in self.segs.values())
@@ -838,7 +825,7 @@ class _Fold:
         ):
             inc.compact()
 
-    # --------------------------------------------------- candidate paths
+    # ---------------------------------------------------- candidate join
 
     #: changed-side rows up to this count are broadcast into the
     #: candidate join, so the corpus-wide probe side never shuffles.
@@ -848,55 +835,6 @@ class _Fold:
 
     def _small_side(self, df: DataFrame, n: int) -> DataFrame:
         return F.broadcast(df) if n <= self.BROADCAST_PROBE_ROWS else df
-
-    def _banding_candidates(self, sigs_post: DataFrame) -> DataFrame:
-        """One-sided band join: the re-signed convs' band rows probe the
-        band rows of the post-fold signature state (a lazy projection,
-        never stored). Every pair sharing a bucket is a candidate, as in
-        the batch self-join."""
-        a = lsh.explode_bands(self.resigned).withColumnRenamed("conv_id", "conv_a")
-        b = lsh.explode_bands(sigs_post).withColumnRenamed("conv_id", "conv_b")
-        return _canonical_pairs(
-            self._small_side(a, self.n_resigned * self.cfg.bands)
-            .join(b, ["band_id", "band_hash"])
-        )
-
-    def _prefix_candidates(self, sigs_post: DataFrame) -> DataFrame:
-        """One-sided exact prefix-filter candidates (AllPairs/PPJoin
-        family) over the informative shingle sets, under ascending
-        shingle-VALUE order.
-
-        The pigeonhole guarantee (|x∩y| >= c ⇒ the (|x|-c+1)-prefixes
-        share a token) holds for ANY fixed total order; the batch path's
-        df-ascending order is a volume optimization that would cost a
-        global df pass per apply — a corpus-independent order makes both
-        probe sides computable straight from signature state, whose
-        ``shingles`` arrays are ALREADY value-sorted (informative sets
-        are array_sort-ed), so rank = array position and the emit is one
-        codegen posexplode, no window. Recall is 1.0 under either order,
-        so the VERIFIED output (the exactness contract) is unchanged.
-
-        Changed side: the re-signed convs (delta-sized, eager). Probe
-        side: every post-fold signature — a columnar scan of immutable
-        segments."""
-        cfg = self.cfg
-
-        def rows(sigs: DataFrame) -> DataFrame:
-            return prefix_filter.prefix_rows(
-                sigs.select(
-                    F.col("conv_id").alias("id"),
-                    F.col("n_shingles").alias("n"),
-                    F.posexplode("shingles").alias("pos", "tok"),
-                ).withColumn("rnk", F.col("pos") + 1),
-                F.lit(self.min_strat), cfg.verify_containment,
-                cfg.containment_plus1,
-            )
-
-        a, n_a = ckpt_count(rows(self.resigned))
-        return _canonical_pairs(
-            prefix_filter.meet(self._small_side(a, n_a), rows(sigs_post))
-            .toDF("conv_a", "conv_b")
-        )
 
 
 def _canonical_pairs(pairs: DataFrame) -> DataFrame:

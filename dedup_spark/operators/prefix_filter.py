@@ -39,11 +39,12 @@ Kernel and callers
 One kernel: :func:`prefix_rows` emits the stratified prefix rows of
 ranked tokens (the exact-rational ``c_s`` lives only here) and
 :func:`meet` joins two such frames on ``(s, tok)`` under the stratum and
-PPJoin positional filters. Its callers differ only in token ORDER and
-join SIDES: :func:`candidate_pairs` (batch ``candidate_source="prefix"``
-and the ``verified_token_pairs`` / ``cc_clusters`` entry queries) ranks
-by block-local df and self-meets; the incremental fold ranks by shingle
-VALUE and meets its re-signed convs against the post-fold signatures.
+PPJoin positional filters. Its one caller, :func:`candidate_pairs`,
+ranks by block-local df and self-meets; it serves batch
+``candidate_source="prefix"`` and the ``verified_token_pairs`` /
+``cc_clusters`` entry queries. The incremental fold needs no prefix
+filter: every shingle of its df-bounded informative sets has at most
+``df_hi`` members, so it joins on the shingle itself.
 
 Scale shape
 -----------
@@ -195,13 +196,13 @@ def candidate_pairs(
     # smallest stratum PRESENT per block bounds the probe range: probing
     # below it would emit near-whole-document prefixes for partners that
     # cannot exist (tiny broadcast side: one row per block)
-    min_strat = (
+    strat_floor = (
         docs.select(blk.alias("blk"), F.floor(F.log2("n_toks")).cast("int").alias("st"))
         .groupBy("blk")
         .agg(F.min("st").alias("s_min"))
     )
     rows = prefix_rows(
-        ranked.join(F.broadcast(min_strat), "blk").select(
+        ranked.join(F.broadcast(strat_floor), "blk").select(
             # the block folds into the token key: pairs meet only
             # within their block
             "id", F.xxhash64("blk", "tok").alias("tok"), "rnk", "n", "s_min",

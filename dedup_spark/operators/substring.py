@@ -389,11 +389,3 @@ def best_substring_match(spans: DataFrame) -> DataFrame:
         .drop("rn")
     )
 
-
-def substring_matches(
-    transcripts: DataFrame, cfg: DedupConfig, pairs: DataFrame | None = None
-) -> DataFrame:
-    """End-to-end substring pass: transcripts → best span per pair."""
-    keys = suffix_keys(transcripts, cfg)
-    anchors = anchor_matches(keys, cfg, pairs, convs=transcripts)
-    return best_substring_match(simplify_spans(chain_anchors(anchors, cfg)))

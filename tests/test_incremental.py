@@ -268,9 +268,7 @@ class TestReviewHardening:
         man = same._read_manifest()
         man["segments"]["inc_sizes"] = [0]
         man["results"]["inc_skew"] = 0
-        same._commit_manifest(
-            man["epoch"], man["segments"], man["results"], man["min_stratum"]
-        )
+        same._commit_manifest(man["epoch"], man["segments"], man["results"])
         with pytest.raises(RuntimeError, match="state layout"):
             same.append(new)
 
@@ -355,9 +353,9 @@ class TestPrefixIncremental:
         self, spark, tmp_path_factory
     ):
         """The appended SMALL doc is contained in an OLD large doc: the
-        asymmetric-containment case the prefix family exists for — and
-        the new doc is smaller than every bootstrap doc, exercising the
-        effective-min-stratum probe extension."""
+        asymmetric-containment case (tiny Jaccard) that banding tends to
+        miss. The new doc is smaller than every bootstrap doc, and its
+        pairs still come from the shingles it shares with the old ones."""
         rng = np.random.Generator(np.random.PCG64(77))
 
         def seg(n):
@@ -382,6 +380,58 @@ class TestPrefixIncremental:
         assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
         assert any("tiny" in p for p in _pairs(res.verified_pairs))
         assert _clusters(res.clusters) == _clusters(full.clusters)
+
+    def test_large_changed_side_equals_brute_force(
+        self, spark, tmp_path_factory
+    ):
+        """998 conversations appended onto 2: nearly every conversation
+        is on the changed side of the candidate join, the shape whose
+        size-stratified prefix rows (~43M) once ran the fold out of
+        memory. The verified pairs and their overlaps equal a brute-force
+        containment over the post-fold signature rows."""
+        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=1000, seed=7))
+        all_turns = spark.createDataFrame(turns_pdf)
+        convs = sorted(turns_pdf["conv_id"].unique())
+        inc = IncrementalDedup(
+            spark, self.CFG, str(tmp_path_factory.mktemp("wh_pl"))
+        )
+        inc.bootstrap(all_turns.filter(F.col("conv_id").isin(convs[:2])))
+        res = inc.append(all_turns.filter(~F.col("conv_id").isin(convs[:2])))
+
+        man = inc._read_manifest()
+        sigs = inc._resolve_conv(
+            man, "inc_sigs", inc._retired(man, "inc_retired_sigs")
+        ).select("conv_id", "shingles").toPandas()
+        ids = sigs["conv_id"].to_numpy()
+        n = sigs["shingles"].map(len).to_numpy()
+        # inverted index: sort the (shingle, conv) rows by shingle. A
+        # shingle has at most df_hi convs, so its pairs are the rows at
+        # most df_hi - 1 apart in that order.
+        conv = np.repeat(np.arange(len(ids)), n)
+        sh = np.concatenate(sigs["shingles"].map(np.asarray).to_list())
+        order = np.lexsort((conv, sh))
+        sh, conv = sh[order], conv[order]
+        assert np.unique(sh, return_counts=True)[1].max() <= self.CFG.df_hi
+        steps = range(1, self.CFG.df_hi)
+        keys = np.concatenate([conv[:-d] * len(ids) + conv[d:] for d in steps])
+        same = np.concatenate([sh[:-d] == sh[d:] for d in steps])
+        pair, common = np.unique(keys[same], return_counts=True)
+        a, b = pair // len(ids), pair % len(ids)
+        t = self.CFG.verify_containment
+        keep = (common / (n[a] + 1) > t) | (common / (n[b] + 1) > t)
+        want = {
+            tuple(sorted((ids[i], ids[j]))): int(c)
+            for i, j, c in zip(a[keep], b[keep], common[keep])
+        }
+
+        got = {
+            (r.conv_a, r.conv_b): r.common
+            for r in res.verified_pairs.select(
+                "conv_a", "conv_b", "common"
+            ).collect()
+        }
+        assert want
+        assert got == want
 
 
 class TestRemoveAndEdit:
@@ -746,9 +796,7 @@ class TestCompaction:
         )
         man = inc._read_manifest()
         man["segments"]["inc_bands"] = [0]
-        inc._commit_manifest(
-            man["epoch"], man["segments"], man["results"], man["min_stratum"]
-        )
+        inc._commit_manifest(man["epoch"], man["segments"], man["results"])
         inc.append(new)
         inc.compact()
         assert "inc_bands" not in inc._read_manifest()["segments"]

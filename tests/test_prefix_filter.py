@@ -3,7 +3,6 @@ including the size-asymmetric containment pairs MinHash banding misses."""
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from dedup_spark.operators import prefix_filter
@@ -21,32 +20,11 @@ def _doc_tokens(spark, rows):
     ).withColumn("n_toks", F.size("toks"))
 
 
-def _candidates(spark, rows, order, plus1=True):
-    """Candidate pairs under one of the kernel's two token orders.
-
-    ``"df"``: the batch caller, :func:`prefix_filter.candidate_pairs`
-    (block-local df order, blocked self-join). ``"value"``: ranks built
-    the way the incremental fold builds them — rank = position in the
-    ``array_sort``-ed token set, probed from the corpus's minimum stratum
-    — and the rows meet themselves (no blocking: a superset)."""
-    d = _doc_tokens(spark, rows)
-    if order == "df":
-        cand = prefix_filter.candidate_pairs(d, plus1=plus1)
-        return {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
-    s_min = d.agg(F.min(F.floor(F.log2("n_toks")))).first()[0]
-    ranked = d.select(
-        F.col("doc_id").alias("id"), F.col("n_toks").alias("n"),
-        F.posexplode(F.array_sort("toks")).alias("pos", "tok"),
-    ).withColumn("rnk", F.col("pos") + 1)
-    pr = prefix_filter.prefix_rows(ranked, F.lit(s_min), 0.2, plus1)
-    return {
-        (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"]))
-        for r in prefix_filter.meet(pr, pr).collect()
-        if r["id_a"] != r["id_b"]
-    }
-
-
-ORDERS = pytest.mark.parametrize("order", ["df", "value"])
+def _candidates(spark, rows, plus1=True):
+    """Candidate pairs of :func:`prefix_filter.candidate_pairs`
+    (block-local df order, blocked self-join)."""
+    cand = prefix_filter.candidate_pairs(_doc_tokens(spark, rows), plus1=plus1)
+    return {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
 
 
 def _qualifying_pairs(rows):
@@ -95,8 +73,7 @@ def test_asymmetric_containment_pair_recalled(spark):
     assert (3, 4) not in cand  # zero-overlap decoys pruned
 
 
-@ORDERS
-def test_exact_recall_random_corpus(spark, order):
+def test_exact_recall_random_corpus(spark):
     """Property: candidates ⊇ every qualifying pair on a random corpus
     with shared boilerplate vocabulary, mixed sizes, and two blocks."""
     rng = random.Random(42)
@@ -111,15 +88,14 @@ def test_exact_recall_random_corpus(spark, order):
         rows.append((d, block[0], block[1], " ".join(words)))
     ref = _qualifying_pairs(rows)
     assert ref  # non-degenerate fixture
-    cand = _candidates(spark, rows, order)
+    cand = _candidates(spark, rows)
     missed = ref - cand
     assert not missed, f"prefix filter missed {sorted(missed)[:5]}"
-    if order == "df":
-        # and it actually prunes: strictly fewer candidates than all pairs
-        n_block_pairs = sum(
-            1 for a, _, _, _ in rows for b, _, _, _ in rows if a < b
-        )
-        assert len(cand) < n_block_pairs
+    # and it actually prunes: strictly fewer candidates than all pairs
+    n_block_pairs = sum(
+        1 for a, _, _, _ in rows for b, _, _, _ in rows if a < b
+    )
+    assert len(cand) < n_block_pairs
 
 
 def _qualifying_pairs_noplus1(rows):
@@ -149,11 +125,10 @@ class TestPlus1Derivation:
         # small doc: 4 tokens (stratum 2), exactly ONE shared with the
         # large doc. The shared token has df=2, every other small-doc
         # token df=1, so under (df asc, tok) order the shared token sorts
-        # LAST in the small doc's prefix order; its xxhash64 is also the
-        # largest of the four, so it sorts last under value order too —
-        # with the plus1 c_s = (4+1)//5 + 1 = 2 the emitted prefix is 3
-        # tokens and the collision never happens; the no-plus1
-        # c_s = 4//5 + 1 = 1 emits the whole doc.
+        # LAST in the small doc's prefix order — with the plus1
+        # c_s = (4+1)//5 + 1 = 2 the emitted prefix is 3 tokens and the
+        # collision never happens; the no-plus1 c_s = 4//5 + 1 = 1 emits
+        # the whole doc.
         small = ["aaa1", "aaa7", "aaa9", "zshared"]
         big = ["zshared"] + [f"big{i}" for i in range(29)]
         return [
@@ -161,16 +136,14 @@ class TestPlus1Derivation:
             (2, "en", "web", " ".join(big)),
         ]
 
-    @ORDERS
-    def test_boundary_pair_recalled_with_plus1_false(self, spark, order):
+    def test_boundary_pair_recalled_with_plus1_false(self, spark):
         rows = self._boundary_rows()
         # qualifies under the no-plus1 predicate only: common=1 > 0.8
         assert _qualifying_pairs_noplus1(rows) == {(1, 2)}
         assert _qualifying_pairs(rows) == set()
-        assert (1, 2) in _candidates(spark, rows, order, plus1=False)
+        assert (1, 2) in _candidates(spark, rows, plus1=False)
 
-    @ORDERS
-    def test_exact_recall_random_corpus_plus1_false(self, spark, order):
+    def test_exact_recall_random_corpus_plus1_false(self, spark):
         rng = random.Random(99)
         rows = []
         for d in range(100):
@@ -179,6 +152,6 @@ class TestPlus1Derivation:
             rows.append((d, "en", "web", " ".join(words)))
         ref = _qualifying_pairs_noplus1(rows)
         assert ref
-        cand = _candidates(spark, rows, order, plus1=False)
+        cand = _candidates(spark, rows, plus1=False)
         missed = ref - cand
         assert not missed, f"plus1=False prefix filter missed {sorted(missed)[:5]}"

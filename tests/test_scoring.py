@@ -8,12 +8,23 @@ from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
 from dedup_spark.functions import hashing as H
-from dedup_spark.functions.udfs import positional_shingles
+from dedup_spark.functions.udfs import make_window_hash_udf
 from dedup_spark.operators import scoring, substring
 
 CFG = DedupConfig(
     anchor_w=10, max_gap=20, min_span_len=5, min_coverage=0.2, match_weight=0.2
 )
+
+
+def _positional_shingles(transcripts, cfg):
+    """transcripts → (conv_id, pos, shingle): exploded per-position
+    shingle hashes, 1-based positions, JVM-side explode."""
+    udf = make_window_hash_udf(cfg)
+    return (
+        transcripts.select("conv_id", udf(F.col("doc")).alias("h"))
+        .select("conv_id", F.posexplode("h").alias("p0", "shingle"))
+        .select("conv_id", (F.col("p0") + 1).alias("pos"), "shingle")
+    )
 
 
 def _spans(spark, rows):
@@ -112,8 +123,6 @@ class TestSpanPositionClasses:
     def test_matches_full_classification_on_ranges(self, spark):
         """Fragment-sliced classification agrees with whole-doc
         classification on every position inside the span ranges."""
-        from dedup_spark.functions.udfs import positional_shingles
-
         cfg = DedupConfig(shingle_k=5)
         shared = "abcdefghijklmnopqrst"
         docs = spark.createDataFrame(
@@ -123,7 +132,7 @@ class TestSpanPositionClasses:
             ],
             "conv_id string, doc string, n_turns long, doc_len long",
         )
-        sets_exploded = positional_shingles(docs, cfg).withColumnRenamed(
+        sets_exploded = _positional_shingles(docs, cfg).withColumnRenamed(
             "shingle", "key"
         )
         sdf = (
@@ -186,7 +195,7 @@ class TestPositionClasses:
         docs = spark.createDataFrame(
             [("x", "hello world hello world")], "conv_id string, doc string"
         )
-        rows = positional_shingles(docs, cfg).collect()
+        rows = _positional_shingles(docs, cfg).collect()
         text = "hello world hello world"
         import numpy as np
 

@@ -27,6 +27,15 @@ def _docs_df(spark, docs: dict[str, str]):
     )
 
 
+def _substring_matches(transcripts, cfg, pairs=None):
+    """The substring pass end to end: transcripts → best span per pair."""
+    keys = substring.suffix_keys(transcripts, cfg)
+    anchors = substring.anchor_matches(keys, cfg, pairs, convs=transcripts)
+    return substring.best_substring_match(
+        substring.simplify_spans(substring.chain_anchors(anchors, cfg))
+    )
+
+
 def _rand_text(rng, n):
     return "".join(chr(97 + c) for c in rng.integers(0, 26, size=n))
 
@@ -68,7 +77,7 @@ class TestAnchorsAndChaining:
         shared = _rand_text(rng, 120)
         a = _rand_text(rng, 200) + shared + _rand_text(rng, 150)
         b = _rand_text(rng, 60) + shared + _rand_text(rng, 300)
-        best = substring.substring_matches(
+        best = _substring_matches(
             _docs_df(spark, {"a": a, "b": b}), CFG
         ).collect()
         assert len(best) == 1
@@ -102,7 +111,7 @@ class TestAnchorsAndChaining:
     def test_no_shared_substring_no_spans(self, spark):
         rng = np.random.Generator(np.random.PCG64(9))
         docs = _docs_df(spark, {"a": _rand_text(rng, 300), "b": _rand_text(rng, 300)})
-        assert substring.substring_matches(docs, CFG).count() == 0
+        assert _substring_matches(docs, CFG).count() == 0
 
     def test_occurrence_cap_reported_not_silent(self, spark):
         """Boilerplate repeated everywhere exceeds the cap → excluded
@@ -127,7 +136,7 @@ class TestAnchorsAndChaining:
             },
         )
         pairs = spark.createDataFrame([("a", "b")], "conv_a string, conv_b string")
-        best = substring.substring_matches(docs, CFG, pairs=pairs).collect()
+        best = _substring_matches(docs, CFG, pairs=pairs).collect()
         assert {(r["conv_a"], r["conv_b"]) for r in best} == {("a", "b")}
 
     def test_brute_force_parity(self, spark):
@@ -151,7 +160,7 @@ class TestAnchorsAndChaining:
             return best
 
         truth = lcs_len(a, b)
-        got = substring.substring_matches(_docs_df(spark, {"a": a, "b": b}), CFG)
+        got = _substring_matches(_docs_df(spark, {"a": a, "b": b}), CFG)
         r = got.collect()[0]
         assert abs(r["matched"] - truth) <= CFG.anchor_w
 
@@ -204,7 +213,7 @@ class TestAnchorSampling:
         shared = _rand_text(rng, 300)
         a = _rand_text(rng, 150) + shared + _rand_text(rng, 100)
         b = _rand_text(rng, 40) + shared + _rand_text(rng, 200)
-        best = substring.substring_matches(
+        best = _substring_matches(
             _docs_df(spark, {"a": a, "b": b}), self.MOD_CFG
         ).collect()
         assert len(best) == 1
@@ -475,7 +484,7 @@ class TestByteSpaceNonAscii:
         shared = uni_text(120)
         a = uni_text(150) + shared + uni_text(100)
         b = uni_text(40) + shared + uni_text(180)
-        best = substring.substring_matches(
+        best = _substring_matches(
             _docs_df(spark, {"a": a, "b": b}), CFG
         ).collect()
         assert len(best) == 1
